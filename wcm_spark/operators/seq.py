@@ -33,7 +33,7 @@ def arith_n_parts(spark, span: int, num_partitions: int | None = None) -> int:
 
 def offsets_to_col(offsets: dict[int, int], default: int):
     """bucket→offset dict as a literal map lookup over ``__pid`` — shared
-    by assign_seq and the scheduler's fused drain wave so the two paths
+    by assign_seq and the scheduler's fused wave checkpoint so the two paths
     (which tests assert emit EXACT-matching seqs) cannot drift. Values
     are LONG literals: an int32 map value would overflow the rank+offset
     sum past 2^31 assigned seqs. Empty dict (zero rows) falls back to a
@@ -71,7 +71,6 @@ def assign_seq(
     start: int = 0,
     num_partitions: int | None = None,
     return_count: bool = False,
-    input_materialized: bool = False,
     key_bounds: tuple[int, int] | None = None,
 ):
     """Add ``out_col`` = start + dense rank of the row under ``order_cols``.
@@ -82,9 +81,8 @@ def assign_seq(
     the per-partition counts, so callers skip a separate count() job.
 
     ``key_bounds=(lo, hi)``: when the FIRST ordering column is an integer
-    with a known value range (the crawl loop knows its wave's parent seqs
-    are exactly ``[next_seq - pending, next_seq)``), the sampled range
-    exchange is replaced by an ARITHMETIC bucket split: bucket =
+    with a known value range (seed positions are exactly ``[0, n)``), the
+    sampled range exchange is replaced by an ARITHMETIC bucket split: bucket =
     clamp(floor((key - lo) · P / (hi - lo))). Monotonic in the key and
     total on a per-key basis (equal keys share a bucket, so the
     bucket-offset + local-rank math below is unchanged), it needs no
@@ -138,20 +136,8 @@ def assign_seq(
     # and the final window/join): repartitionByRange re-samples boundaries
     # per evaluation, so without this barrier a task retry or shuffle-order
     # change could shift rows between __pids between the two passes and
-    # silently duplicate/skip seq values. When the caller has already
-    # materialized the input (input_materialized=True), the sampling is
-    # deterministic over pinned blocks and the barrier (one extra copy of
-    # the whole frame) can be skipped — but the exchange is PERSISTED so
-    # the second action (window + offset join) reads the shuffled blocks
-    # from cache instead of re-running the scan + range exchange (one
-    # exchange per call, not two). The caller unpersists via the
-    # ``_wcm_cached_exchange`` attribute on the returned DataFrame once it
-    # has materialized its result.
-    cached = None
-    if not input_materialized:
-        ranged = ranged.localCheckpoint(eager=True)
-    else:
-        cached = ranged = ranged.persist()
+    # silently duplicate/skip seq values.
+    ranged = ranged.localCheckpoint(eager=True)
 
     counts = {
         r["__pid"]: r["cnt"]
@@ -173,6 +159,4 @@ def assign_seq(
         .withColumn(out_col, (F.row_number().over(local) - 1 + F.col("__off")).cast("long"))
         .drop("__pid", "__off")
     )
-    if cached is not None:
-        out._wcm_cached_exchange = cached  # caller unpersists after its action
     return (out, acc - start) if return_count else out

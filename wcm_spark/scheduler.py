@@ -15,13 +15,17 @@ against the pure-Python simulator in tests/test_parity.py).
 
 Scale notes (the 1000-executor view):
 - no global sort anywhere: wave cut = per-host window + TakeOrdered top-K;
-  seq assignment = range-exchange + per-partition ranks (operators/seq.py)
+  seq and visit pos = arithmetic bucket of the wave's parent-seq range +
+  per-bucket ranks + Observation bucket counts, all riding the wave's one
+  heavy checkpoint, so both numbers are projections, not extra jobs
 - the ``body`` column is pruned out of every stage except scrape/sink
-- seen-set growth: bloom absorbs the common case; the anti-join backstop
-  shuffles only bloom-positive candidates
+- seen set: an exact driver mirror probed in-UDF while it fits
+  ``broadcast_seen_max``; beyond that a bloom (built once at the hand-off)
+  prefilters an exact anti-join that shuffles only bloom-positive rows
 - per-wave lineage is cut with eager localCheckpoint (plan growth is the
   silent killer of iterative DataFrame jobs); durable state commits go to
-  the TableStore (Iceberg-shaped) for resume
+  the TableStore (Iceberg-shaped) for resume, the frontier last as the
+  commit point and the seen set as a per-wave delta
 """
 
 from __future__ import annotations
@@ -29,14 +33,19 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .functions.core import digest_col, host_key_udf, host_salt_col
 from .operators.dedup import NumpyBloom, build_bloom, seen_anti_join
 from .operators.scrape import scrape_resolve_children
-from .operators.seq import assign_seq
+from .operators.seq import (
+    arith_bucket_col,
+    arith_n_parts,
+    assign_seq,
+    offsets_to_col,
+)
 from .store import TableStore  # noqa: F401 (re-exported)
 from .store import for_session as store_for_session
 
@@ -149,6 +158,63 @@ class CrawlResult:
     images: DataFrame | None = None
     waves: int = 0
     fetched: int = 0
+
+
+VISIT_COLS = [
+    "wave", "seq", "url", "request_url", "original_url", "redirect_history",
+    "status", "depth", "host_key",
+]
+
+# durable metrics rows: the column order and types schema inference gave
+# earlier commits, so appends to an existing metrics table line up
+METRICS_SCHEMA = (
+    "enqueued long, fetched long, pending long, sec double, skipped long, "
+    "wave long"
+)
+
+
+def _pin_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
+    """Eager localCheckpoint of ``df`` plus the aggregates ``aggs`` over its
+    rows, computed by the SAME job through an Observation.
+
+    Under AQE the observed-metrics row of a checkpointed plan can come
+    back malformed (PythonSQLUtils.toPyRow assertion, Spark 4.1.2); the
+    rows are pinned by then, so the aggregates are recomputed with one
+    narrow job over the cached blocks — identical values, one extra cheap
+    job only on sessions where the free Observation ride is unavailable."""
+    from py4j.protocol import Py4JJavaError
+
+    obs = Observation()
+    pinned = df.observe(obs, *aggs).localCheckpoint(eager=True)
+    try:
+        return pinned, obs.get
+    except Py4JJavaError:
+        return pinned, pinned.agg(*aggs).first().asDict()
+
+
+def _dense(
+    ranked: DataFrame, counts: dict, src: int, n_parts: int, start: int
+) -> tuple[DataFrame, int]:
+    """The ``src`` side of a wave's ranked checkpoint with ``__dense`` =
+    start + its rank under its key, and that side's row count: per-bucket
+    counts ``c{src}_{i}`` turn into a literal bucket→offset map."""
+    offsets, acc = {}, start
+    for i in range(n_parts):
+        if counts[f"c{src}_{i}"]:
+            offsets[i] = acc
+            acc += counts[f"c{src}_{i}"]
+    rows = ranked.filter(F.col("__src") == src).withColumn(
+        "__dense",
+        (F.col("__rk") - 1 + offsets_to_col(offsets, start)).cast("long"),
+    )
+    return rows, acc - start
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def _dedup_min(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
@@ -819,27 +885,30 @@ class Crawler:
                 for r in pending.select("host_key").distinct().collect()
                 if r["host_key"]
             }
-        bloom = None
-        if cfg.use_bloom:
-            bloom = NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp)
-            build_bloom(pending, bloom)
-        return self._loop(pending, seen, next_seq, start_wave=0, bloom=bloom)
+        return self._loop(pending, seen, next_seq, start_wave=0, seen_durable=False)
 
     @classmethod
     def resume(cls, spark: SparkSession, corpus: DataFrame, config: CrawlConfig) -> "CrawlResult":
         """Continue a crawl from the last committed wave in checkpoint_dir.
 
         Restores frontier/seen/next_seq from the TableStore snapshots the
-        loop commits every ``commit_every`` waves; the bloom prefilter is
-        rebuilt from the restored seen table (one narrow pass)."""
+        loop commits every ``commit_every`` waves. The frontier commit is
+        the commit point, so the seen snapshot read is the one whose wave
+        matches the frontier's: a seen delta a crash left committed past
+        it is ignored, and the resumed loop's first commit rewrites it."""
         assert config.checkpoint_dir, "resume needs checkpoint_dir"
         crawler = cls(spark, corpus, config)
         store = crawler.store
         pending = store.read(spark, "frontier")
         if pending is None:
             raise ValueError("nothing to resume: no committed frontier")
-        seen = store.read(spark, "seen")
         meta = store.latest_meta("frontier") or {}
+        seen_snaps = store.snapshots("seen")
+        at_frontier = [
+            s for s in seen_snaps if s["meta"].get("wave") == meta.get("wave")
+        ]
+        seen_snap = at_frontier[-1] if at_frontier else seen_snaps[-1]
+        seen = store.read(spark, "seen", version=seen_snap["version"])
         crawler._pending_ui = pending.filter(F.col("url").rlike(UI_PAT)).count()
         if config.fetch_mode == "http":
             crawler._pending_nonhttp = pending.filter(
@@ -851,19 +920,18 @@ class Crawler:
                 for r in pending.select("host_key").distinct().collect()
                 if r["host_key"]
             }
-        bloom = None
-        if config.use_bloom:
-            bloom = NumpyBloom.sized(config.expected_urls, config.bloom_fpp)
-            build_bloom(seen, bloom)
         return crawler._loop(
             pending.localCheckpoint(eager=True),
             seen.localCheckpoint(eager=True),
             next_seq=int(meta.get("next_seq", 0)),
             start_wave=int(meta.get("wave", 0)),
-            bloom=bloom,
+            seen_durable=seen_snap is seen_snaps[-1],
         )
 
-    def _loop(self, pending, seen, next_seq, start_wave, bloom) -> CrawlResult:
+    def _loop(self, pending, seen, next_seq, start_wave, seen_durable) -> CrawlResult:
+        """The wave loop. ``seen_durable``: ``seen`` is already the seen
+        table's current snapshot, so commits append per-wave deltas to it;
+        otherwise the first commit overwrites it with ``seen`` + delta."""
         cfg = self.config
         spark = self.spark
         import os as _os
@@ -900,6 +968,9 @@ class Crawler:
         metrics: list[dict] = []
         uncommitted_visits: list[DataFrame] = []
         uncommitted_metrics: list[dict] = []
+        uncommitted_seen: list[DataFrame] = [] if seen_durable else [seen]
+        seen_mode = "append" if seen_durable else "overwrite"
+        pos_base = 0  # dense visit position of this call's next visit
         wave_id = start_wave
         waves_run = 0
         total_fetched = 0
@@ -919,13 +990,15 @@ class Crawler:
         # Drain-level corpus crawls with no durable store can defer the
         # per-wave visits materialization: every wave's visits frame is a
         # narrow 2-join plan over already-checkpointed inputs, so the
-        # final pos-assignment evaluates ALL of them in one job instead of
-        # paying one checkpoint job per wave. http mode keeps the eager
-        # narrow checkpoint (lazy frames would pin body blocks all crawl),
-        # and the politeness path must stay eager because it unpersists
-        # old frontiers that lazy visits would still reference.
+        # reader of the visits evaluates ALL of them in one job instead of
+        # paying a ranked copy per wave, and pos is plain seq. http mode
+        # keeps the eager narrow checkpoint (lazy frames would pin body
+        # blocks all crawl), the politeness path must stay eager because
+        # it unpersists old frontiers that lazy visits would still
+        # reference, and shuffle_every re-sequencing breaks pos = seq.
         lazy_visits = (
             cfg.fetch_mode != "http" and drain_level and self.store is None
+            and cfg.shuffle_every is None
         )
         # Exact driver-side seen set for the in-UDF D2 probe — maintained
         # only while it fits cfg.broadcast_seen_max. Driver cost at the 4M
@@ -936,10 +1009,13 @@ class Crawler:
         # The broadcast is INCREMENTAL: the base set ships once, then each
         # wave ships only its fresh-digest delta (seen_bcs pieces, largest
         # first); pieces re-consolidate into one broadcast every 8 waves so
-        # the per-candidate probe stays O(1)-ish.
+        # the per-candidate probe stays O(1)-ish. The bloom prefilters only
+        # the anti-join path, so it is built when the mirror is off: here,
+        # or once at the hand-off when the mirror is outgrown.
         seen_set: set | None = None
         seen_bcs: list = []
         seen_delta: set = set()
+        bloom = None
         if cfg.broadcast_seen_max and next_seq <= cfg.broadcast_seen_max:
             seen_set = {r["digest"] for r in seen.select("digest").collect()}
         else:
@@ -947,6 +1023,10 @@ class Crawler:
             self._pending_ui = None
             self._pending_nonhttp = None
             self._frontier_hosts = None
+            if cfg.use_bloom:
+                bloom = build_bloom(
+                    seen, NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp)
+                )
         while True:
             if pending_count == 0:
                 if cfg.on_empty is not None:
@@ -959,15 +1039,25 @@ class Crawler:
             wave_id += 1
             waves_run += 1
 
+            # bounds: the [lo, hi) seq range of the wave's rows — the
+            # parent-seq range its children's seq buckets split
             wave = self._wave_cut(pending, host_state, wave_id)
             if wave is not pending:
-                wave = wave.localCheckpoint(eager=True)
-                wave_count = wave.count()
+                wave, cut = _pin_observed(
+                    wave, F.count(F.lit(1)).alias("n"),
+                    F.min("seq").alias("lo"), F.max("seq").alias("hi"),
+                )
+                wave_count = cut["n"]
+                bounds = (
+                    (cut["lo"], cut["hi"] + 1) if wave_count
+                    else (next_seq, next_seq + 1)
+                )
                 _tr("wave_cut")
             else:
-                # no politeness gate — pending is already materialized and
-                # its cardinality is already known (one job saved per wave)
+                # no politeness gate — pending is already materialized, its
+                # cardinality is known and its seqs are the last issued
                 wave_count = pending_count
+                bounds = (next_seq - pending_count, next_seq)
             if host_state is not None and wave_count:
                 host_state = (
                     host_state.unionByName(
@@ -1013,18 +1103,19 @@ class Crawler:
                 # live fetch speaks only http(s): ftp/ws/wss frontier rows
                 # are skipped (not retried), gated here only while the
                 # tracked pending-non-http count says any could be in play
-                gated = wave.filter(F.col("url").rlike(HTTP_PAT)).localCheckpoint(
-                    eager=True
+                gated, obs = _pin_observed(
+                    wave.filter(F.col("url").rlike(HTTP_PAT)),
+                    F.count(F.lit(1)).alias("n"),
                 )
-                gated_count = gated.count()
+                gated_count = obs["n"]
                 if self._pending_nonhttp is not None:
                     self._pending_nonhttp -= wave_count - gated_count
                 wave, wave_count = gated, gated_count
             pre_robots = wave
             wave = self._refresh_robots_and_gate(wave)
             if wave is not pre_robots:
-                wave = wave.localCheckpoint(eager=True)
-                wave_count = wave.count()
+                wave, obs = _pin_observed(wave, F.count(F.lit(1)).alias("n"))
+                wave_count = obs["n"]
             fetched = self._fetch_wave(wave)
             if cfg.fetch_mode == "http":
                 fetched = fetched.localCheckpoint(eager=True)
@@ -1178,153 +1269,64 @@ class Crawler:
                 enqueue = enqueue.orderBy("parent_seq", "emit_idx").limit(room)
 
             # THE one heavy materialization per wave: everything upstream
-            # (fetch join -> fused parse UDF -> broadcast anti-join ->
-            # dedup window) executes exactly once here. Without this,
-            # repartitionByRange's sampling job inside assign_seq re-runs
-            # the whole chain a second time just to pick range boundaries.
-            bounds = (
-                (next_seq - pending_count, next_seq) if drain_level else None
+            # (fetch join -> fused parse UDF -> anti-join -> dedup window)
+            # executes exactly once here, and the same job ranks the rows
+            # the wave's seqs and visit positions come from. Both sides
+            # are keyed by a seq in the wave's [lo, hi) range — children
+            # by (parent_seq, emit_idx), visits by their own seq; retries
+            # carry parent_seq = -1, clamp into bucket 0 and still sort
+            # first — so the arithmetic bucket of that key, a per-bucket
+            # row_number and Observation bucket counts ride the one
+            # checkpoint. The dense seq/pos are then a projection: local
+            # rank + a literal bucket→offset map. Visits fold into the
+            # same checkpoint (discriminator column __src) unless
+            # deferred, so the wave pays ONE checkpoint job for both.
+            n_parts = arith_n_parts(spark, bounds[1] - bounds[0])
+            ranked = enqueue.select(
+                "*", F.col("parent_seq").alias("__k1"),
+                F.col("emit_idx").alias("__k2"), F.lit(1).alias("__src"),
             )
-            seq_done = False
+            srcs = [1]
+            if not lazy_visits:
+                srcs = [0, 1]
+                ranked = visits.select(
+                    "*", F.col("seq").alias("__k1"), F.lit(0).alias("__k2"),
+                    F.lit(0).alias("__src"),
+                ).unionByName(ranked, allowMissingColumns=True)
+            ranked = ranked.withColumn(
+                "__pid", arith_bucket_col(F.col("__k1"), *bounds, n_parts)
+            ).withColumn(
+                "__rk",
+                F.row_number().over(
+                    Window.partitionBy("__src", "__pid").orderBy("__k1", "__k2")
+                ),
+            )
+            pinned, counts = _pin_observed(ranked, *[
+                F.sum(((F.col("__src") == src) & (F.col("__pid") == i))
+                      .cast("long")).alias(f"c{src}_{i}")
+                for src in srcs for i in range(n_parts)
+            ])
+
+            enqueue, enq_count = _dense(pinned, counts, 1, n_parts, next_seq)
+            enqueue = (
+                enqueue.withColumn("seq", F.col("__dense"))
+                .withColumn("wave", F.lit(wave_id))
+                .withColumn("host_salt", host_salt_col(F.col("host_key"), cfg.salts))
+                .select(*PENDING_COLS)
+            )
             if lazy_visits:
-                # FUSED drain-wave materialization — the whole per-wave
-                # Spark side is ONE checkpoint job. Drain mode knows the
-                # wave's parent-seq range ([next_seq - pending, next_seq);
-                # retries carry parent_seq = -1, clamping into bucket 0
-                # and still sorting first), so the arithmetic bucket
-                # column + the PER-BUCKET local rank ride inside the heavy
-                # checkpoint (the rank's __pid exchange replaces the
-                # former second materialization), and an Observation
-                # counts the buckets during the same job. The global seq
-                # is then pure arithmetic over the pinned rows: local rank
-                # + a literal bucket→offset map — a projection, not a
-                # job. Downstream consumers (digest collect, next-wave
-                # fetch, visits pos) read narrow projections of the
-                # pinned blocks.
-                from pyspark.sql import Observation
-
-                from .operators.seq import (
-                    arith_bucket_col,
-                    arith_n_parts,
-                    offsets_to_col,
-                )
-
-                n_parts = arith_n_parts(spark, bounds[1] - bounds[0])
-                enqueue = enqueue.withColumn(
-                    "__pid",
-                    arith_bucket_col(
-                        F.col("parent_seq"), bounds[0], bounds[1], n_parts
-                    ),
-                )
-                obs = Observation(f"wave{wave_id}_buckets")
-                enqueue = enqueue.observe(
-                    obs,
-                    *[
-                        F.sum((F.col("__pid") == i).cast("long")).alias(f"c{i}")
-                        for i in range(n_parts)
-                    ],
-                )
-                local_w = Window.partitionBy("__pid").orderBy(
-                    "parent_seq", "emit_idx"
-                )
-                enqueue = enqueue.withColumn(
-                    "__rk", F.row_number().over(local_w)
-                ).localCheckpoint(eager=True)
-                from py4j.protocol import Py4JJavaError
-
-                try:
-                    m = obs.get
-                    counts = {
-                        i: m[f"c{i}"] for i in range(n_parts) if m[f"c{i}"]
-                    }
-                except Py4JJavaError:
-                    # Under AQE (the stock-session default) the observed-
-                    # metrics row of this checkpointed plan can come back
-                    # malformed (PythonSQLUtils.toPyRow assertion, Spark
-                    # 4.1.2). The rows are already pinned by the eager
-                    # checkpoint, so recount the buckets with one narrow
-                    # job over the cached blocks — identical counts, one
-                    # extra cheap job only on sessions where the free
-                    # Observation ride is unavailable.
-                    counts = {
-                        r["__pid"]: r["n"]
-                        for r in enqueue.groupBy("__pid")
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .collect()
-                    }
-                offsets, acc = {}, next_seq
-                for pid in sorted(counts):
-                    offsets[pid] = acc
-                    acc += counts[pid]
-                enq_count = acc - next_seq
-                off_col = offsets_to_col(offsets, next_seq)
-                enqueue = (
-                    enqueue.withColumn(
-                        "seq", (F.col("__rk") - 1 + off_col).cast("long")
-                    )
-                    .withColumn("wave", F.lit(wave_id))
-                    .withColumn(
-                        "host_salt", host_salt_col(F.col("host_key"), cfg.salts)
-                    )
-                    .select(*PENDING_COLS)
-                )
-                seq_done = True
+                # Drain-mode invariant: every frontier seq is fetched exactly
+                # once (no politeness slicing or fetch-time gate in corpus
+                # mode) and each wave fetches a strictly higher seq range
+                # than the last — so the dense (wave, seq) position IS seq
+                visits = visits.withColumn("pos", F.col("seq").cast("long"))
             else:
-                # Fold the visits materialization INTO the heavy pass: the
-                # two frames union into one checkpoint (discriminator
-                # column), so the wave pays ONE job — the visits branch's
-                # wave-side exchange is shared with the fetch via Spark's
-                # ReuseExchange, and both result frames are narrow filters
-                # over the pinned blocks afterwards. (Previously the
-                # politeness/http/store paths paid a second fetch-join job
-                # per wave just to pin the visit rows.)
-                _vcols = [
-                    "wave", "seq", "url", "request_url", "original_url",
-                    "redirect_history", "status", "depth", "host_key",
-                ]
-                _ecols = [
-                    "url", "host_key", "method", "params", "digest", "depth",
-                    "referrer_url", "literal_uri", "context", "context_kind",
-                    "retries", "parent_seq", "emit_idx",
-                ]
-                combined = (
-                    visits.withColumn("__src", F.lit(0))
-                    .unionByName(
-                        enqueue.withColumn("__src", F.lit(1)),
-                        allowMissingColumns=True,
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                visits = combined.filter("__src = 0").select(*_vcols)
-                enqueue = combined.filter("__src = 1").select(*_ecols)
+                visits, n_visits = _dense(pinned, counts, 0, n_parts, pos_base)
+                pos_base += n_visits
+                visits = visits.select(*VISIT_COLS, F.col("__dense").alias("pos"))
             visit_frames.append(visits)
             _tr("heavy_pass_ckpt")
-            if not seq_done:
-                # Non-drain paths: politeness waves cut a seq-clustered
-                # subset of the frontier (arithmetic bounds would be
-                # loose → skewed buckets), so they keep assign_seq's
-                # sampled range exchange; http/store drain waves know
-                # bounds and use the arithmetic split inside assign_seq.
-                enqueue, enq_count = assign_seq(
-                    enqueue, ["parent_seq", "emit_idx"], out_col="seq",
-                    start=next_seq, return_count=True, input_materialized=True,
-                    key_bounds=bounds,
-                )
-                cached_exchange = getattr(enqueue, "_wcm_cached_exchange", None)
-                enqueue = (
-                    enqueue.withColumn("wave", F.lit(wave_id))
-                    .withColumn("host_salt", host_salt_col(F.col("host_key"), cfg.salts))
-                    .select(*PENDING_COLS)
-                    .localCheckpoint(eager=True)
-                )
-                if cached_exchange is not None:
-                    # assign_seq persisted its range exchange so its two
-                    # actions shared one shuffle; the final checkpoint
-                    # above was the last reader — release the blocks now
-                    cached_exchange.unpersist()
-            _tr("assign_seq+final_ckpt")
             next_seq += enq_count
-            digests_collected = False
             if seen_set is not None and enq_count:
                 if len(seen_set) + enq_count > cfg.broadcast_seen_max:
                     # outgrown: bloom+anti-join from here on; the trackers
@@ -1336,14 +1338,17 @@ class Crawler:
                     self._pending_ui = None
                     self._pending_nonhttp = None
                     self._frontier_hosts = None
+                    if cfg.use_bloom:
+                        bloom = build_bloom(
+                            seen.unionByName(enqueue.select("digest")),
+                            NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp),
+                        )
                 else:
                     # ONE driver collect per wave carries everything the
                     # loop needs from the fresh rows: digests (exact seen
-                    # mirror + next delta broadcast), the bloom base hashes
-                    # (JVM xxhash64 — the driver updates the filter with no
-                    # separate build job), the userinfo-carrier flag
-                    # (credential-harvest gate) and, in live-robots mode,
-                    # host keys (robots-refresh gate).
+                    # mirror + next delta broadcast), the userinfo-carrier
+                    # flag (credential-harvest gate) and, in live-robots
+                    # mode, host keys (robots-refresh gate).
                     sel = [
                         F.col("digest"),
                         F.col("url").rlike(UI_PAT).alias("__ui"),
@@ -1354,13 +1359,6 @@ class Crawler:
                     )
                     if track_nonhttp:
                         sel.append((~F.col("url").rlike(HTTP_PAT)).alias("__nh"))
-                    if bloom is not None:
-                        sel += [
-                            F.xxhash64(F.col("digest")).alias("__h1"),
-                            F.xxhash64(
-                                F.col("digest"), F.lit("wcm-bloom-salt")
-                            ).alias("__h2"),
-                        ]
                     track_hosts = self._frontier_hosts is not None
                     if track_hosts:
                         sel.append(F.col("host_key"))
@@ -1369,7 +1367,6 @@ class Crawler:
                     # the row-Row collect at 100k+ fresh digests/wave) and
                     # the tracker folds become vector ops
                     pdf = enqueue.select(*sel).toPandas()
-                    digests_collected = True
                     fresh_digests = pdf["digest"].tolist()
                     seen_set.update(fresh_digests)
                     seen_delta.update(fresh_digests)
@@ -1378,28 +1375,20 @@ class Crawler:
                         self._pending_ui += n_ui
                     if track_nonhttp:
                         self._pending_nonhttp += int(pdf["__nh"].sum())
-                    if bloom is not None and len(pdf):
-                        import numpy as np
-
-                        bloom.add(
-                            pdf["__h1"].to_numpy(dtype=np.int64),
-                            pdf["__h2"].to_numpy(dtype=np.int64),
-                        )
                     if track_hosts:
                         self._frontier_hosts.update(
                             h for h in pdf["host_key"] if h
                         )
+            elif bloom is not None and enq_count:
+                build_bloom(enqueue.select("digest"), bloom)
             _tr("digest_collect")
 
-            no_caps = drain_level
-            if no_caps:
+            if drain_level:
                 # BFS fast path: the wave was the whole pending set, so the
                 # next frontier is exactly the fresh enqueue (already
-                # materialized) — skip re-materializing remaining ∪ fresh
-                # and the seen re-checkpoint: O(frontier) per wave instead
-                # of O(total crawled) per wave
+                # materialized) — skip re-materializing remaining ∪ fresh:
+                # O(frontier) per wave instead of O(total crawled) per wave
                 new_pending = enqueue
-                new_seen = seen.unionByName(enqueue.select("digest"))
             else:
                 new_pending = remaining.unionByName(enqueue)
             if cfg.shuffle_every and wave_id % cfg.shuffle_every == 0:
@@ -1417,22 +1406,18 @@ class Crawler:
                 ).drop("__shuffle_key").select(*PENDING_COLS)
                 next_seq += pending_count - wave_taken_count + enq_count
                 new_pending = new_pending.localCheckpoint(eager=True)
-                new_seen = seen.unionByName(enqueue.select("digest"))
-            elif not no_caps:
+            elif not drain_level:
                 new_pending = new_pending.localCheckpoint(eager=True)
-                new_seen = seen.unionByName(enqueue.select("digest"))
-            # In EVERY path seen is now a lazy union of materialized pieces
-            # (seed checkpoint + per-wave enqueue checkpoints): unioning is
-            # plan-only, so the old per-wave O(total-seen) re-checkpoint is
-            # gone; the broadcast anti-join just scans the pieces.
-            if bloom is not None and enq_count and not digests_collected:
-                # only when the exact-mirror collect didn't already fold
-                # the fresh hashes in driver-side
-                build_bloom(enqueue.select("digest"), bloom)
+            # seen is a lazy union of materialized pieces (seed checkpoint
+            # + per-wave enqueue checkpoints): unioning is plan-only, so
+            # there is no per-wave O(total-seen) re-checkpoint; the
+            # anti-join just scans the pieces
+            fresh_seen = enqueue.select("digest")
+            uncommitted_seen.append(fresh_seen)
             _tr("pending_seen_update")
-            if not no_caps:
+            if not drain_level:
                 pending.unpersist()
-            pending, seen = new_pending, new_seen
+            pending, seen = new_pending, seen.unionByName(fresh_seen)
             # exact carry in both paths: remaining = pending - wave_taken
             # (pre-robots-gate — disallowed rows also left the frontier),
             # plus the fresh enqueue — no per-wave recount job needed
@@ -1452,43 +1437,23 @@ class Crawler:
                 )
             )
 
-            uncommitted_visits.append(visits)
+            uncommitted_visits.append(visits.select(*VISIT_COLS))
             uncommitted_metrics.append(metrics[-1])
-            if self.store and wave_id % cfg.commit_every == 0:
+            last_wave = cfg.max_waves is not None and waves_run >= cfg.max_waves
+            if self.store and (
+                wave_id % cfg.commit_every == 0 or last_wave or not pending_count
+            ):
+                # every commit_every waves, and on exit so the durable
+                # tables cover every wave
                 self._commit_batch(
-                    uncommitted_visits, uncommitted_metrics, pending, seen,
-                    wave_id, next_seq,
+                    uncommitted_visits, uncommitted_metrics, uncommitted_seen,
+                    seen_mode, pending, wave_id, next_seq,
                 )
                 uncommitted_visits, uncommitted_metrics = [], []
+                uncommitted_seen, seen_mode = [], "append"
 
-        if self.store and uncommitted_visits:
-            # flush waves since the last commit_every boundary so the
-            # durable visits table covers every wave on clean exit
-            self._commit_batch(
-                uncommitted_visits, uncommitted_metrics, pending, seen,
-                wave_id, next_seq,
-            )
-
-        visits_all = visit_frames[0] if visit_frames else self._empty_visits()
-        for vf in visit_frames[1:]:
-            visits_all = visits_all.unionByName(vf)
-        if lazy_visits and cfg.shuffle_every is None and visit_frames:
-            # Drain-mode invariant: every frontier seq is fetched exactly
-            # once (no politeness slicing, and the fetch-time gates are
-            # http-only so nothing is skipped in this mode) and each wave
-            # fetches a strictly higher seq range than the last — so the
-            # dense (wave, seq) position IS the frontier seq. O(1) column,
-            # no end-of-crawl range-exchange/rank pass over the history.
-            visits_all = visits_all.withColumn("pos", F.col("seq").cast("long"))
-        else:
-            # Distributed dense position — a global Window.orderBy would
-            # funnel the whole crawl history through one partition.
-            visits_all = assign_seq(visits_all, ["wave", "seq"], out_col="pos")
-        images = None
-        if image_frames:
-            images = image_frames[0]
-            for f in image_frames[1:]:
-                images = images.unionByName(f)
+        visits_all = _union_all(visit_frames) if visit_frames else self._empty_visits()
+        images = _union_all(image_frames) if image_frames else None
 
         return CrawlResult(
             visits=visits_all, seen=seen, metrics=metrics, images=images,
@@ -1496,30 +1461,35 @@ class Crawler:
         )
 
     def _commit_batch(
-        self, visit_frames, metric_rows, pending, seen, wave_id, next_seq
+        self, visit_frames, metric_rows, seen_frames, seen_mode, pending,
+        wave_id, next_seq,
     ) -> None:
         """Commit every wave since the last boundary in one batch.
 
-        Visits are appended BEFORE the frontier overwrite: a crash between
-        the two leaves duplicate visit rows (harmless — ``read_visits``
-        dedups by (wave, seq), and the re-run is deterministic) rather than
-        permanently losing waves. With commit_every > 1 the batch carries
-        the union of all uncommitted per-wave frames, not just the last.
+        The frontier overwrite is the commit point, so it goes LAST. A
+        crash before it leaves only staged rows: duplicate visit rows
+        (``read_visits`` dedups by (wave, seq), and the re-run is
+        deterministic), a duplicate metrics row for the re-run wave, and a
+        seen delta ``resume`` skips because its ``wave`` meta is past the
+        frontier's. With commit_every > 1 the batch carries the union of
+        all uncommitted per-wave frames, not just the last. ``seen_frames``
+        is the seen delta since the last commit (plus the base the table
+        does not hold yet when ``seen_mode`` is "overwrite").
         """
-        visits = visit_frames[0]
-        for vf in visit_frames[1:]:
-            visits = visits.unionByName(vf)
-        self.store.commit("visits", visits, mode="append", meta={"wave": wave_id})
+        meta = {"wave": wave_id}
+        self.store.commit(
+            "visits", _union_all(visit_frames), mode="append", meta=meta
+        )
+        self.store.commit("seen", _union_all(seen_frames), mode=seen_mode, meta=meta)
+        self.store.commit(
+            "metrics",
+            self.spark.createDataFrame(metric_rows, METRICS_SCHEMA),
+            mode="append",
+            meta=meta,
+        )
         self.store.commit(
             "frontier", pending, mode="overwrite",
             meta={"wave": wave_id, "next_seq": next_seq},
-        )
-        self.store.commit("seen", seen, mode="overwrite", meta={"wave": wave_id})
-        self.store.commit(
-            "metrics",
-            self.spark.createDataFrame(metric_rows),
-            mode="append",
-            meta={"wave": wave_id},
         )
         cfg = self.config
         if cfg.compact_every_commits:
@@ -1533,9 +1503,11 @@ class Crawler:
                 # carried forward, so resume still reads wave/next_seq);
                 # expiry then reclaims directories no retained snapshot
                 # references. Crash-safety: manifest swaps atomically
-                # before any delete, and resume only ever reads the
-                # CURRENT snapshot.
-                for t in ("visits", "metrics"):
+                # before any delete; resume reads the current snapshot
+                # (for seen, the newest at the frontier's wave, which
+                # compaction carries forward and a one-batch crash window
+                # never expires).
+                for t in ("visits", "metrics", "seen"):
                     self.store.compact(self.spark, t)
                 for t in ("visits", "metrics", "frontier", "seen"):
                     self.store.expire_snapshots(
@@ -1560,5 +1532,6 @@ class Crawler:
         return self.spark.createDataFrame(
             [],
             "wave int, seq long, url string, request_url string, original_url string, "
-            "redirect_history array<string>, status int, depth int, host_key string",
+            "redirect_history array<string>, status int, depth int, host_key string, "
+            "pos long",
         )

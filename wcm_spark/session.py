@@ -6,7 +6,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "recommended_sql_confs"]
+__all__ = ["get_spark", "parse_conf_extra", "recommended_sql_confs"]
 
 
 def recommended_sql_confs() -> dict[str, str]:
@@ -41,12 +41,26 @@ def recommended_sql_confs() -> dict[str, str]:
         ),
         # generic conf escape hatch for A/B experiments and site tuning:
         # semicolon-separated key=value pairs, applied last
-        **dict(
-            kv.split("=", 1)
-            for kv in os.environ.get("WCM_SQL_CONF_EXTRA", "").split(";")
-            if "=" in kv
-        ),
+        **parse_conf_extra(os.environ.get("WCM_SQL_CONF_EXTRA", "")),
     }
+
+
+def parse_conf_extra(raw: str) -> dict[str, str]:
+    """``"k1=v1; k2=v2"`` -> ``{"k1": "v1", "k2": "v2"}``, keys and values
+    stripped; empty segments are skipped. A segment without ``=`` or with
+    an empty key raises ValueError naming it, instead of silently dropping
+    a conf the caller meant to set."""
+    out = {}
+    for seg in raw.split(";"):
+        if not seg.strip():
+            continue
+        key, eq, value = seg.partition("=")
+        if not eq or not key.strip():
+            raise ValueError(
+                f"WCM_SQL_CONF_EXTRA segment {seg.strip()!r} is not key=value"
+            )
+        out[key.strip()] = value.strip()
+    return out
 
 
 def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
@@ -82,10 +96,12 @@ def get_spark(
 ) -> SparkSession:
     """local[k] session tuned for the iterative crawl workload.
 
-    AQE stays on (runtime coalescing + skew-join splitting are part of the
-    skew story); Arrow is mandatory for every pandas UDF in the engine;
-    shuffle partitions default to the core count — at cluster scale these
-    come from spark-submit conf instead.
+    Runtime SQL confs come from ``recommended_sql_confs``: AQE is OFF
+    unless ``WCM_AQE=true`` (its coalescing collapsed the Python-UDF
+    stages onto 1-2 cores; skew is handled by host_salt partitioning);
+    Arrow is mandatory for every pandas UDF in the engine; shuffle
+    partitions default to the core count — at cluster scale these come
+    from spark-submit conf instead.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus

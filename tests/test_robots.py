@@ -1,5 +1,7 @@
 """robots.txt parsing, caching, and engine/simulator parity under robots."""
 
+import pytest
+
 from wcm_spark.robots import RobotsCache, parse_robots
 
 BODY = """
@@ -97,6 +99,7 @@ def test_live_robots_fetch_and_gate(spark):
     from wcm_spark.scheduler import Crawler, CrawlConfig
 
     hits: Counter = Counter()
+    robots_agents: list = []
     lock = threading.Lock()
 
     class H(BaseHTTPRequestHandler):
@@ -107,6 +110,7 @@ def test_live_robots_fetch_and_gate(spark):
             with lock:
                 hits[self.path] += 1
             if self.path == "/robots.txt":
+                robots_agents.append(self.headers.get("User-Agent"))
                 body = b"User-agent: *\nDisallow: /private/\n"
                 ct = "text/plain"
             elif self.path == "/index.html":
@@ -135,21 +139,32 @@ def test_live_robots_fetch_and_gate(spark):
         urls = {r["request_url"] for r in res.visits.collect()}
         assert urls == {f"{base}/index.html", f"{base}/pub/y.html"}
         assert hits["/robots.txt"] == 1      # fetched once, cached
+        # through the crawl's own client: the robots request carries the
+        # crawl's User-Agent
+        assert robots_agents == [cfg.robots_agent]
         assert hits.get("/private/x.html", 0) == 0  # never requested
         assert hits["/pub/y.html"] == 1
     finally:
         srv.shutdown()
 
 
-def test_bounded_robots_cache_spill_same_verdicts(spark):
-    """robots_cache_max_hosts bounds the driver-side body dict: overflow
-    bodies spill FIFO to a parquet side table the fetch-time gate joins,
-    so gating verdicts (and the visit set) are IDENTICAL to the
-    unbounded cache while driver memory stays at <= cap bodies. Two
-    hosts (127.0.0.1 / localhost), cap=1: fetching the second host's
-    robots evicts the first's body; a link to the first host's
-    disallowed path discovered AFTER the eviction must still be gated —
-    via the spill join, since the broadcast no longer has those rules."""
+@pytest.mark.parametrize(
+    "queue", [{}, {"cap": 1, "max_conn": 2}], ids=["default", "cap_max_conn"]
+)
+def test_bounded_robots_cache_spill_same_verdicts(spark, queue):
+    """robots_cache_max_hosts bounds the rules the driver and broadcast
+    hold: overflow rules spill FIFO to a parquet side table that BOTH
+    robots gates (enqueue and fetch) join, so the crawl — visit set, seen
+    set, per-wave metrics — is IDENTICAL to the unbounded cache, with or
+    without a queue cap and fetch cap, while at most cap hosts' rules are
+    held. Two hosts (127.0.0.1 / localhost), cap=1: fetching the second
+    host's robots evicts the first's rules; a link to the first host's
+    disallowed path discovered AFTER the eviction must still be gated at
+    enqueue — never digest-marked, never taking queue room (with cap=1 it
+    would crowd /pub/d.html out) — via the spill join, since the
+    broadcast no longer has those rules. The spill is gone once run()
+    returns."""
+    import os
     import threading
     from collections import Counter
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -181,11 +196,13 @@ def test_bounded_robots_cache_spill_same_verdicts(spark):
                 )
                 ct = "text/html"
             elif self.path == "/pub/b.html":
-                # discovered in wave 2, AFTER 127.0.0.1's body is evicted:
-                # links back to the first host's disallowed path — only the
-                # spill join still knows those rules
+                # discovered in wave 2, AFTER 127.0.0.1's rules are
+                # evicted: links back to the first host's disallowed path
+                # (only the spill join still knows those rules), then two
+                # allowed leaves
                 body = (
                     f'<a href="http://127.0.0.1:{port}/private/w.html">w</a>'
+                    f'<a href="/pub/c.html">c</a><a href="/pub/d.html">d</a>'
                     .encode()
                 )
                 ct = "text/html"
@@ -202,28 +219,44 @@ def test_bounded_robots_cache_spill_same_verdicts(spark):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
 
     def crawl(cap):
+        gates = []  # (rules held, spill dir) after each wave's fetch gate
+
+        def snap(_wave, _pages):
+            gates.append((len(c._robots.held), c._robots.spill_dir))
+
         cfg = CrawlConfig(
             fetch_mode="http", use_bloom=False, expected_urls=100,
             http_timeout=5.0, respect_robots=True, max_waves=6,
-            robots_cache_max_hosts=cap,
+            robots_cache_max_hosts=cap, on_wave=snap, **queue,
         )
         c = Crawler(spark, None, cfg)
         res = c.run([f"{base}/index.html"])
-        return c, {r["request_url"] for r in res.visits.collect()}
+        return (
+            {r["request_url"] for r in res.visits.collect()},
+            {r["digest"] for r in res.seen.collect()},
+            [(m["wave"], m["enqueued"], m["skipped"]) for m in res.metrics],
+            gates,
+        )
 
     try:
-        _, unbounded = crawl(None)
+        unbounded = crawl(None)
         hits.clear()
-        c, bounded = crawl(1)
-        assert bounded == unbounded  # same verdicts, same visit set
-        assert len(c._robots_bodies) <= 1  # driver dict bounded
-        assert c._robots_spill_dir is not None  # eviction actually spilled
+        bounded = crawl(1)
+        visits, seen, metrics, gates = bounded
+        assert visits == unbounded[0]  # same verdicts, same visit set
+        assert f"http://localhost:{srv.server_address[1]}/pub/d.html" in visits
+        assert seen == unbounded[1]  # w.html never digest-marked
+        assert metrics == unbounded[2]  # no extra wave to skip w.html
+        assert max(held for held, _ in gates) <= 1  # driver rules bounded
+        spills = {d for _, d in gates if d}
+        assert spills  # eviction actually spilled
+        assert not any(os.path.exists(d) for d in spills)  # and was cleaned
         # disallowed paths never requested on either host, before or
         # after the eviction
         assert not [k for k in hits if "/private/" in k]
         # the late cross-host discovery exercised the spill path: the
         # allowed leaf on the EVICTED host was fetched in a wave after
-        # its body left the broadcast
+        # its rules left the broadcast
         assert any(k.endswith("/pub/a.html") for k in hits)
     finally:
         srv.shutdown()

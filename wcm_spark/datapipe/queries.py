@@ -548,7 +548,7 @@ def _q_robots(d, sf):
     host_id % 3 == 1 serve _ROBOTS_BODY; the SQL hand-unrolls the
     longest-prefix evaluation (most-specific LIKE first — /doc/11
     disallow beats /doc/1 allow beats /doc/ disallow). The Spark side
-    runs the ENGINE's RobotsCache broadcast + pandas-UDF path instead
+    runs the ENGINE's RobotsGate (broadcast rules + pandas UDF) instead
     (_robots_spark override), so the driver compare pins the real rule
     evaluator against an independent SQL restatement."""
     return f"""WITH {_frontier_cte(d, sf)},
@@ -567,38 +567,22 @@ FROM gated"""
 
 
 def _robots_spark(spark, sf_dir):
-    """Engine path for robots_gate: broadcast RobotsCache + the same
-    vectorized allowed() UDF the scheduler's gate uses
-    (scheduler.py::_robots_filter)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType
+    """Engine path for robots_gate: the crawl's own RobotsGate (broadcast
+    rules + its allow-check pandas UDF, robots.py), built from the
+    fixture bodies."""
+    from ..robots import RobotsGate
 
     frontier = spark.sql(
         f"WITH {_frontier_cte('spark', sf_dir)} "
         "SELECT seq, url, host_id, host_key FROM frontier"
     )
-    from ..robots import RobotsCache
-
     hosts = [
         r["host_key"]
         for r in frontier.select("host_id", "host_key").distinct().collect()
         if r["host_id"] % 3 == 1
     ]
-    bc = spark.sparkContext.broadcast(
-        RobotsCache({h: _ROBOTS_BODY for h in hosts}, agent="wcm-spark").to_bodies_state()
-    )
-
-    @F.pandas_udf(BooleanType())
-    def allowed(host_keys, urls):
-        from ..robots import RobotsCache as RC
-
-        cache = RC.from_state(bc.value)
-        return pd.Series([cache.allowed(hk, u) for hk, u in zip(host_keys, urls)])
-
-    return frontier.select(
-        "seq", "url", allowed(F.col("host_key"), F.col("url")).alias("allowed")
-    )
+    gate = RobotsGate(spark, "wcm-spark", {h: _ROBOTS_BODY for h in hosts})
+    return gate.allowed(frontier).select("seq", "url", "allowed")
 
 
 @register("credentials_attach")

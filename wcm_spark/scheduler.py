@@ -46,6 +46,7 @@ from .operators.seq import (
     assign_seq,
     offsets_to_col,
 )
+from .robots import RobotsGate
 from .store import TableStore  # noqa: F401 (re-exported)
 from .store import for_session as store_for_session
 
@@ -96,14 +97,14 @@ class CrawlConfig:
     credentials: dict | None = None        # F8: host_key -> userinfo (UserAgent.pm:17-31)
     respect_robots: bool = False           # north-rule robots.txt gate (off = reference parity)
     robots_agent: str = "wcm-spark"
-    robots_cache_max_hosts: int | None = None  # bound on robots BODIES held in the
-                                           # driver dict + broadcast (live http mode).
-                                           # None = unbounded. Overflow bodies spill
-                                           # FIFO to a parquet side table that the
-                                           # fetch-time gate left-joins, so gating
-                                           # verdicts are identical at any host count;
-                                           # declared Crawl-delays are retained in a
-                                           # separate (tiny) never-evicted dict
+    robots_cache_max_hosts: int | None = None  # bound on hosts whose robots rules the
+                                           # driver + broadcast hold (live http mode).
+                                           # None = unbounded. Overflow rules spill
+                                           # FIFO to a parquet side table that both
+                                           # robots gates (enqueue and fetch) left-join,
+                                           # so visits, seen set and frontier are
+                                           # identical at any host count; declared
+                                           # Crawl-delays are never evicted
     min_delay_waves: int = 0               # F6 politeness budget: waves a host rests between fetches
     broadcast_seen_max: int = 4_000_000    # D2 in-UDF probe while the exact digest set fits a broadcast
     fetch_mode: str = "corpus"             # "corpus" (test/bench join) | "http" (live network fetch)
@@ -257,14 +258,6 @@ class Crawler:
             self._normalize_cred_key(k): v
             for k, v in (self.config.credentials or {}).items()
         }
-        self._robots_bc = None
-        self._robots_bodies: dict[str, str] = {}
-        self._robots_hosts: set[str] = set()
-        # bounded-cache spill state (live http mode, robots_cache_max_hosts):
-        # bodies evicted from the driver dict live in this parquet dir and
-        # re-attach to waves by join; delays are tiny and never evicted
-        self._robots_spill_dir: str | None = None
-        self._robots_delays: dict[str, float] = {}
         # piggybacked driver state (maintained from the per-wave digest
         # collect while the exact seen mirror is alive; None = unknown):
         # count of pending userinfo-carrier rows, and every host_key that
@@ -272,199 +265,9 @@ class Crawler:
         self._pending_ui: int | None = None
         self._pending_nonhttp: int | None = None
         self._frontier_hosts: set[str] | None = None
-        if self.config.respect_robots:
-            if corpus is not None:
-                self._robots_bc = spark.sparkContext.broadcast(
-                    self._build_robots_cache().to_bodies_state()
-                )
-            elif self.config.fetch_mode != "http":
-                raise ValueError("respect_robots without a corpus needs http mode")
-            # http mode without a corpus: robots.txt is fetched live, per
-            # wave, for hosts newly entering the frontier (_refresh_robots)
-
-    def _build_robots_cache(self):
-        """North-rule robots.txt caching: robots bodies are one small row
-        per host — collected once, parsed on the driver, broadcast as a
-        dimension to every executor. No per-URL robots fetches ever."""
-        from .functions.core import host_key_udf as _hk
-        from .robots import RobotsCache
-
-        robots_rows = (
-            self.corpus.filter(F.col("url").endswith("/robots.txt"))
-            .filter(F.col("status") == 200)
-            .select(_hk(F.col("url")).alias("hk"), "body")
-            .collect()
-        )
-        bodies = {
-            r["hk"]: bytes(r["body"]).decode("utf-8", errors="replace")
-            for r in robots_rows
-            if r["hk"] is not None and r["body"] is not None
-        }
-        return RobotsCache(bodies, agent=self.config.robots_agent)
-
-    def _refresh_robots_and_gate(self, wave: DataFrame) -> DataFrame:
-        """Live robots (http mode, no corpus): fetch /robots.txt once per
-        NEW host entering the frontier, fold into the broadcast cache, and
-        gate the wave at FETCH time (a disallowed frontier row is dropped
-        before any socket opens — standard live-crawler behavior; corpus
-        mode gates at enqueue instead, where rules are known up front).
-
-        Scale shape: hosts ≪ URLs and only first-seen hosts fetch, so this
-        is a tiny distinct-collect + a handful of driver-side requests per
-        wave; the rule evaluation itself stays a broadcast dimension."""
-        cfg = self.config
-        if not cfg.respect_robots or cfg.fetch_mode != "http":
-            return wave
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .robots import RobotsCache
-
-        if self._frontier_hosts is not None:
-            # tracked superset of the wave's hosts (piggybacked on the
-            # digest collect) — no per-wave distinct-collect job; fetching
-            # a not-yet-scheduled host's robots a wave early is harmless
-            hosts = self._frontier_hosts - self._robots_hosts
-        else:
-            hosts = {
-                r["host_key"]
-                for r in wave.select("host_key").distinct().collect()
-                if r["host_key"]
-            } - self._robots_hosts
-        if hosts:
-            import urllib.request
-
-            def grab(hk: str):
-                try:
-                    with urllib.request.urlopen(
-                        hk + "/robots.txt", timeout=cfg.http_timeout
-                    ) as resp:
-                        if resp.getcode() == 200:
-                            return hk, resp.read(1 << 20).decode(
-                                "utf-8", errors="replace"
-                            )
-                except Exception:
-                    pass
-                return hk, ""  # unreachable/missing robots ⇒ allow-all
-
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                for hk, body in pool.map(grab, sorted(hosts)):
-                    self._robots_hosts.add(hk)
-                    if body:
-                        self._robots_bodies[hk] = body
-                        # retain declared Crawl-delays outside the bounded
-                        # body cache: a float per declaring host, so the
-                        # politeness dimension survives body eviction
-                        d = RobotsCache(
-                            {hk: body}, agent=cfg.robots_agent
-                        ).host_delays()
-                        self._robots_delays.update(d)
-            cap = cfg.robots_cache_max_hosts
-            if cap is not None and len(self._robots_bodies) > cap:
-                # §5 driver-memory bound: FIFO-evict oldest-fetched bodies
-                # (dict preserves insertion order) to a parquet side table;
-                # the gate below re-attaches them by join, so verdicts are
-                # identical to the unbounded cache at any host count
-                import tempfile
-
-                n_evict = len(self._robots_bodies) - cap
-                evicted = [
-                    (hk, self._robots_bodies.pop(hk))
-                    for hk in list(self._robots_bodies)[:n_evict]
-                ]
-                if self._robots_spill_dir is None:
-                    self._robots_spill_dir = tempfile.mkdtemp(
-                        prefix="wcm_robots_spill_"
-                    )
-                self.spark.createDataFrame(
-                    evicted, "host_key string, robots_body string"
-                ).write.mode("append").parquet(self._robots_spill_dir)
-            if self._robots_bc is not None:
-                self._robots_bc.unpersist()
-            self._robots_bc = self.spark.sparkContext.broadcast(
-                RobotsCache(
-                    dict(self._robots_bodies), agent=cfg.robots_agent
-                ).to_bodies_state()
-            )
-        bc = self._robots_bc
-        if bc is None:
-            return wave
-
-        import pandas as pd
-
-        from pyspark.sql.types import BooleanType
-
-        if self._robots_spill_dir is not None:
-            # evicted hosts: rules ride the wave as a joined body column
-            # and parse per batch — the broadcast stays bounded. isinstance
-            # guards, not `is not None`: a null string cell can surface as
-            # NaN in some pandas versions, and evicted bodies are always
-            # non-empty strings.
-            agent = cfg.robots_agent
-            spill = self.spark.read.parquet(self._robots_spill_dir)
-
-            @F.pandas_udf(BooleanType())
-            def allowed_spill(host_keys, urls, bodies):
-                from .robots import RobotsCache
-
-                cache = RobotsCache.from_state(bc.value)
-                batch_bodies = {
-                    hk: b
-                    for hk, b in zip(host_keys, bodies)
-                    if isinstance(b, str)
-                }
-                spilled = RobotsCache(batch_bodies, agent=agent)
-                return pd.Series(
-                    [
-                        spilled.allowed(hk, u)
-                        if isinstance(b, str)
-                        else cache.allowed(hk, u)
-                        for hk, u, b in zip(host_keys, urls, bodies)
-                    ]
-                )
-
-            cols = wave.columns  # the using-column join moves host_key
-            return (                # first; restore the wave's exact schema
-                wave.join(spill, "host_key", "left")
-                .filter(
-                    allowed_spill(
-                        F.col("host_key"), F.col("url"), F.col("robots_body")
-                    )
-                )
-                .select(*cols)
-            )
-
-        @F.pandas_udf(BooleanType())
-        def allowed(host_keys, urls):
-            from .robots import RobotsCache
-
-            cache = RobotsCache.from_state(bc.value)
-            return pd.Series(
-                [cache.allowed(hk, u) for hk, u in zip(host_keys, urls)]
-            )
-
-        return wave.filter(allowed(F.col("host_key"), F.col("url")))
-
-    def _robots_filter(self, children: DataFrame) -> DataFrame:
-        """Drop robots-disallowed candidates before they enter the frontier
-        (disallowed URLs never get digest-marked — like a cap drop)."""
-        if self._robots_bc is None:
-            return children
-        bc = self._robots_bc
-
-        import pandas as pd
-
-        from pyspark.sql.types import BooleanType
-
-        @F.pandas_udf(BooleanType())
-        def allowed(host_keys, urls):
-            from .robots import RobotsCache
-
-            cache = RobotsCache.from_state(bc.value)
-            return pd.Series(
-                [cache.allowed(hk, u) for hk, u in zip(host_keys, urls)]
-            )
-
-        return children.filter(allowed(F.col("host_key"), F.col("url")))
+        # every robots decision (rules, Crawl-delays, spill, live fetch,
+        # the allow-check) lives behind this gate; off ⇒ a no-op
+        self._robots = RobotsGate.for_crawl(spark, corpus, self.config)
 
     # -- fetch ------------------------------------------------------------
 
@@ -544,7 +347,7 @@ class Crawler:
             )
         )
         joined = wave.join(cred_df, wave.host_key == cred_df.cred_host, "left")
-        has_userinfo = F.col("url").rlike("^[a-z][a-z0-9+.-]*://[^/?#]*@")
+        has_userinfo = F.col("url").rlike(UI_PAT)
         auth = F.when(
             F.col("userinfo").isNotNull() & ~has_userinfo,
             F.regexp_replace(F.col("url"), "^([a-z]+)://", F.concat(F.lit("$1://"), F.col("userinfo"), F.lit("@"))),
@@ -626,18 +429,9 @@ class Crawler:
                     .dropDuplicates(["url"])
                 )
                 wave = wave.join(vdf, "url", "left")
-            host_delays = {}
-            if self._robots_bc is not None:
-                # robots Crawl-delay of the matched agent group raises the
-                # per-host request spacing above the global min_delay_sec
-                from .robots import RobotsCache
-
-                host_delays = RobotsCache.from_state(
-                    self._robots_bc.value
-                ).host_delays()
-            if self._robots_delays:
-                # delays retained across body eviction (bounded robots cache)
-                host_delays = {**host_delays, **self._robots_delays}
+            # robots Crawl-delay of the matched agent group raises the
+            # per-host request spacing above the global min_delay_sec
+            host_delays = self._robots.delays
             if self.config.min_delay_sec > 0 or host_delays:
                 # a host must not span partitions, or in-partition request
                 # spacing would not be globally polite for the wave
@@ -885,7 +679,10 @@ class Crawler:
                 for r in pending.select("host_key").distinct().collect()
                 if r["host_key"]
             }
-        return self._loop(pending, seen, next_seq, start_wave=0, seen_durable=False)
+        try:
+            return self._loop(pending, seen, next_seq, start_wave=0, seen_durable=False)
+        finally:
+            self._robots.close()
 
     @classmethod
     def resume(cls, spark: SparkSession, corpus: DataFrame, config: CrawlConfig) -> "CrawlResult":
@@ -920,13 +717,16 @@ class Crawler:
                 for r in pending.select("host_key").distinct().collect()
                 if r["host_key"]
             }
-        return crawler._loop(
-            pending.localCheckpoint(eager=True),
-            seen.localCheckpoint(eager=True),
-            next_seq=int(meta.get("next_seq", 0)),
-            start_wave=int(meta.get("wave", 0)),
-            seen_durable=seen_snap is seen_snaps[-1],
-        )
+        try:
+            return crawler._loop(
+                pending.localCheckpoint(eager=True),
+                seen.localCheckpoint(eager=True),
+                next_seq=int(meta.get("next_seq", 0)),
+                start_wave=int(meta.get("wave", 0)),
+                seen_durable=seen_snap is seen_snaps[-1],
+            )
+        finally:
+            crawler._robots.close()
 
     def _loop(self, pending, seen, next_seq, start_wave, seen_durable) -> CrawlResult:
         """The wave loop. ``seen_durable``: ``seen`` is already the seen
@@ -934,35 +734,6 @@ class Crawler:
         otherwise the first commit overwrites it with ``seen`` + delta."""
         cfg = self.config
         spark = self.spark
-        import os as _os
-
-        trace = _os.environ.get("WCM_TRACE") == "1"
-        _tm = [time.monotonic(), 0]
-
-        def _next_job_id():
-            # DAGScheduler's internal next-job counter: deltas between
-            # trace points = Spark jobs launched by that phase. Internal
-            # API, so diagnostics only (guarded by WCM_TRACE).
-            try:
-                return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-            except Exception:
-                return 0
-
-        if trace:
-            _tm[1] = _next_job_id()
-
-        def _tr(label):
-            if trace:
-                now = time.monotonic()
-                jid = _next_job_id()
-                print(
-                    f"    [trace] {label}: {now - _tm[0]:.2f}s"
-                    f" jobs={jid - _tm[1]}",
-                    flush=True,
-                )
-                _tm[0] = now
-                _tm[1] = jid
-
         visit_frames: list[DataFrame] = []
         image_frames: list[DataFrame] = []
         metrics: list[dict] = []
@@ -1035,7 +806,6 @@ class Crawler:
             if cfg.max_waves is not None and waves_run >= cfg.max_waves:
                 break
             t0 = time.monotonic()
-            _tm[0] = t0
             wave_id += 1
             waves_run += 1
 
@@ -1052,7 +822,6 @@ class Crawler:
                     (cut["lo"], cut["hi"] + 1) if wave_count
                     else (next_seq, next_seq + 1)
                 )
-                _tr("wave_cut")
             else:
                 # no politeness gate — pending is already materialized, its
                 # cardinality is known and its seqs are the last issued
@@ -1111,11 +880,14 @@ class Crawler:
                 if self._pending_nonhttp is not None:
                     self._pending_nonhttp -= wave_count - gated_count
                 wave, wave_count = gated, gated_count
-            pre_robots = wave
-            wave = self._refresh_robots_and_gate(wave)
-            if wave is not pre_robots:
-                wave, obs = _pin_observed(wave, F.count(F.lit(1)).alias("n"))
-                wave_count = obs["n"]
+            if cfg.fetch_mode == "http":
+                # live robots: learn new hosts' rules, then drop disallowed
+                # rows before any socket opens (corpus mode gates at enqueue
+                # only, where every host's rules are known up front)
+                gated = self._robots.filter_wave(wave, self._frontier_hosts)
+                if gated is not wave:
+                    wave, obs = _pin_observed(gated, F.count(F.lit(1)).alias("n"))
+                    wave_count = obs["n"]
             fetched = self._fetch_wave(wave)
             if cfg.fetch_mode == "http":
                 fetched = fetched.localCheckpoint(eager=True)
@@ -1191,7 +963,6 @@ class Crawler:
                     else:
                         seen_bcs.append(spark.sparkContext.broadcast(seen_delta))
                     seen_delta = set()
-            _tr("seen_broadcast")
             if cfg.on_wave is not None:
                 replaced = cfg.on_wave(wave_id, pages)
                 if replaced is not None:
@@ -1206,7 +977,8 @@ class Crawler:
                 handlers=cfg.html_handlers,
                 redundancy=cfg.redundancy,
             )
-            children = self._robots_filter(children)
+            # a robots-disallowed child never marks seen (like a cap drop)
+            children = self._robots.filter(children)
             if cfg.url_filter_expr:
                 # before the digest collect: a denied child never marks
                 # seen, exactly like a user who never calls enqueue
@@ -1325,7 +1097,6 @@ class Crawler:
                 pos_base += n_visits
                 visits = visits.select(*VISIT_COLS, F.col("__dense").alias("pos"))
             visit_frames.append(visits)
-            _tr("heavy_pass_ckpt")
             next_seq += enq_count
             if seen_set is not None and enq_count:
                 if len(seen_set) + enq_count > cfg.broadcast_seen_max:
@@ -1348,7 +1119,7 @@ class Crawler:
                     # loop needs from the fresh rows: digests (exact seen
                     # mirror + next delta broadcast), the userinfo-carrier
                     # flag (credential-harvest gate) and, in live-robots
-                    # mode, host keys (robots-refresh gate).
+                    # mode, host keys (new hosts for the robots fetch).
                     sel = [
                         F.col("digest"),
                         F.col("url").rlike(UI_PAT).alias("__ui"),
@@ -1381,7 +1152,6 @@ class Crawler:
                         )
             elif bloom is not None and enq_count:
                 build_bloom(enqueue.select("digest"), bloom)
-            _tr("digest_collect")
 
             if drain_level:
                 # BFS fast path: the wave was the whole pending set, so the
@@ -1414,7 +1184,6 @@ class Crawler:
             # anti-join just scans the pieces
             fresh_seen = enqueue.select("digest")
             uncommitted_seen.append(fresh_seen)
-            _tr("pending_seen_update")
             if not drain_level:
                 pending.unpersist()
             pending, seen = new_pending, seen.unionByName(fresh_seen)

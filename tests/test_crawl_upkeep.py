@@ -1,6 +1,10 @@
 """Per-wave upkeep of the crawl loop: the seen mirror→bloom hand-off, the
-commit order that makes the frontier commit the commit point, and the
-number of Spark jobs a polite durable wave launches."""
+durable commit (staged tables concurrently, the frontier last as the
+commit point, the metrics table's schema, the compaction cadence across
+resumes) and the number of Spark jobs a polite durable crawl launches."""
+
+import dataclasses
+import threading
 
 import pytest
 
@@ -12,6 +16,7 @@ from wcm_spark.store import TableStore
 
 N_SITES, PAGES = 2, 8
 POLITE = dict(expected_urls=10_000, max_conn_per_host=3)
+STAGED = ("visits", "seen", "metrics")
 
 
 @pytest.fixture(scope="module")
@@ -106,35 +111,167 @@ def test_crash_mid_commit_resumes_exactly(
     assert _digests(TableStore(cfg.checkpoint_dir).read(spark, "seen")) == want_seen
 
 
-# Spark jobs of one polite durable crawl: set-up (seed and seen
-# checkpoints, the run's and the loop's frontier count, the seen-mirror
-# collect) plus, per wave, the wave-cut checkpoint, the heavy checkpoint,
-# the next-frontier checkpoint and four table writes (visits, seen,
-# metrics, frontier), plus the fresh-digest collect on waves that enqueue
-SETUP_JOBS = 5
+@pytest.mark.parametrize("table", STAGED)
+def test_staged_write_failure_keeps_frontier(
+    spark, corpus, uninterrupted, tmp_path, monkeypatch, table
+):
+    """Wave 2's staged write to ``table`` fails while the other two land:
+    the run raises, the frontier still holds wave 1, and a resume ends
+    with the uninterrupted crawl's durable visits and seen set."""
+    want_visits, want_seen = uninterrupted
+    commit = TableStore.commit
+    landed = []
+
+    def failing_commit(self, name, df, mode="append", meta=None):
+        wave2 = (meta or {}).get("wave") == 2
+        if wave2 and name == table:
+            raise RuntimeError(f"wave 2 {name} write failed")
+        version = commit(self, name, df, mode=mode, meta=meta)
+        if wave2:
+            landed.append(name)
+        return version
+
+    cfg = CrawlConfig(**POLITE, checkpoint_dir=str(tmp_path / "failed"))
+    monkeypatch.setattr(TableStore, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match=f"wave 2 {table} write failed"):
+        Crawler(spark, corpus, cfg).run(seed_urls(N_SITES))
+    monkeypatch.setattr(TableStore, "commit", commit)
+    assert sorted(landed) == sorted(set(STAGED) - {table})
+    store = TableStore(cfg.checkpoint_dir)
+    assert store.latest_meta("frontier")["wave"] == 1
+
+    resumed = Crawler.resume(spark, corpus, cfg)
+    assert _durable_visits(spark, cfg) == want_visits
+    assert _digests(resumed.seen) == want_seen
+    assert _digests(store.read(spark, "seen")) == want_seen
+
+
+def test_staged_writes_overlap_frontier_last(spark, corpus, tmp_path, monkeypatch):
+    """Each wave's three staged writes run at the same time: each waits on
+    a 3-party barrier, which times out if they run one after another. The
+    frontier write starts only after all three have returned."""
+    commit = TableStore.commit
+    barrier = threading.Barrier(3, timeout=30)
+    lock = threading.Lock()
+    events = []
+
+    def traced_commit(self, name, df, mode="append", meta=None):
+        wave = meta["wave"]
+        if name in STAGED:
+            barrier.wait()
+        with lock:
+            events.append(("start", wave, name))
+        version = commit(self, name, df, mode=mode, meta=meta)
+        with lock:
+            events.append(("end", wave, name))
+        return version
+
+    cfg = CrawlConfig(**POLITE, checkpoint_dir=str(tmp_path / "ckpt"))
+    monkeypatch.setattr(TableStore, "commit", traced_commit)
+    res = Crawler(spark, corpus, cfg).run(seed_urls(N_SITES))
+    assert res.waves > 1
+    for w in range(1, res.waves + 1):
+        wave = [(kind, name) for kind, ew, name in events if ew == w]
+        assert len(wave) == 8, wave
+        front = wave.index(("start", "frontier"))
+        assert {n for k, n in wave[:front] if k == "end"} == set(STAGED), wave
+
+
+def test_durable_metrics_round_trip(spark, corpus, tmp_path):
+    """After a run and its resume, the durable metrics table holds exactly
+    the per-wave metrics both calls returned, with long counters and a
+    double ``sec``."""
+    cfg = CrawlConfig(**POLITE, checkpoint_dir=str(tmp_path / "ckpt"), max_waves=2)
+    first = Crawler(spark, corpus, cfg).run(seed_urls(N_SITES))
+    rest = Crawler.resume(spark, corpus, dataclasses.replace(cfg, max_waves=None))
+    durable = TableStore(cfg.checkpoint_dir).read(spark, "metrics")
+    assert {f.name: f.dataType.typeName() for f in durable.schema} == {
+        "enqueued": "long", "fetched": "long", "pending": "long",
+        "sec": "double", "skipped": "long", "wave": "long",
+    }
+    rows = sorted((r.asDict() for r in durable.collect()), key=lambda m: m["wave"])
+    assert rows == first.metrics + rest.metrics
+
+
+def test_compaction_cadence_survives_resume(spark, corpus, tmp_path):
+    """The compaction cadence counts every commit of the crawl: with
+    ``compact_every_commits=3``, a run of 2 commits resumed for 4 more
+    compacts at commits 3 and 6, so the visits table ends on a compaction
+    snapshot (a per-instance count would compact at commit 5 only)."""
+    cfg = CrawlConfig(
+        **POLITE, checkpoint_dir=str(tmp_path / "ckpt"),
+        compact_every_commits=3, max_waves=2,
+    )
+    Crawler(spark, corpus, cfg).run(seed_urls(N_SITES))
+    store = TableStore(cfg.checkpoint_dir)
+    assert store.latest_meta("frontier")["commits"] == 2
+    rest = Crawler.resume(spark, corpus, dataclasses.replace(cfg, max_waves=4))
+    assert len(rest.metrics) == 4
+    assert store.snapshots("visits")[-1]["mode"] == "compact"
+    assert store.latest_meta("frontier")["commits"] == 6
+
+
+# Spark jobs of one polite durable crawl, counted in the caller's job
+# group (the staged writes run on threads that inherit it). Set-up: the
+# frontier checkpoint with its count and tracker sums observed, the seen
+# checkpoint and the seen-mirror collect. Per wave: the wave-cut
+# checkpoint, the heavy checkpoint, the next-frontier checkpoint and four
+# table writes (visits, seen, metrics, frontier), plus the fresh-digest
+# collect on waves that enqueue. A resume's set-up adds the two store
+# reads' parquet schema jobs (frontier, seen) to the same three.
+SETUP_JOBS = 3
+RESUME_SETUP_JOBS = 5
 JOBS_PER_WAVE = 7
 
 
-def test_polite_durable_wave_job_count(spark, tmp_path):
-    """Pins the Spark jobs the loop's own actions launch. Auto-broadcast
-    is off in this session: a broadcast-hash join launches a job of its
-    own, and whether the planner picks one depends on the cache state of
-    the corpus, not on the loop."""
+@pytest.fixture(scope="module")
+def no_broadcast(spark):
+    """A session with auto-broadcast off and its own cached corpus: a
+    broadcast-hash join launches a job of its own, and whether the planner
+    picks one depends on the cache state of the corpus, not on the loop."""
     ns = spark.newSession()
     ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    corpus = make_corpus(ns, N_SITES, PAGES).cache()
-    cfg = CrawlConfig(**POLITE, checkpoint_dir=str(tmp_path / "ckpt"), commit_every=1)
+    return ns, make_corpus(ns, N_SITES, PAGES).cache()
+
+
+def _jobs_in_group(ns, group, fn):
     sc = ns.sparkContext
-    group = "test-polite-durable-jobs"
     sc.setJobGroup(group, group)
     try:
-        res = Crawler(ns, corpus, cfg).run(seed_urls(N_SITES))
+        res = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    enqueuing = sum(1 for m in res.metrics if m["enqueued"])
-    want = SETUP_JOBS + JOBS_PER_WAVE * res.waves + enqueuing
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _want_jobs(setup, metrics):
+    enqueuing = sum(1 for m in metrics if m["enqueued"])
+    return setup + JOBS_PER_WAVE * len(metrics) + enqueuing
+
+
+def test_polite_durable_wave_job_count(no_broadcast, tmp_path):
+    """Pins the Spark jobs the loop's own actions launch in a run."""
+    ns, corpus = no_broadcast
+    cfg = CrawlConfig(**POLITE, checkpoint_dir=str(tmp_path / "ckpt"), commit_every=1)
+    res, jobs = _jobs_in_group(
+        ns, "test-run-jobs", lambda: Crawler(ns, corpus, cfg).run(seed_urls(N_SITES))
+    )
+    want = _want_jobs(SETUP_JOBS, res.metrics)
     print(f"polite durable crawl: {jobs} jobs over {res.waves} waves "
           f"({(jobs - SETUP_JOBS) / res.waves:.2f} per wave)")
     assert jobs == want, f"{jobs} jobs over {res.waves} waves, want {want}"
+
+
+def test_polite_durable_resume_job_count(no_broadcast, tmp_path):
+    """Pins the Spark jobs a resume launches, next to the run's."""
+    ns, corpus = no_broadcast
+    cfg = CrawlConfig(**POLITE, checkpoint_dir=str(tmp_path / "ckpt"), max_waves=2)
+    Crawler(ns, corpus, cfg).run(seed_urls(N_SITES))
+    rest, jobs = _jobs_in_group(
+        ns, "test-resume-jobs",
+        lambda: Crawler.resume(ns, corpus, dataclasses.replace(cfg, max_waves=None)),
+    )
+    assert len(rest.metrics) > 1
+    want = _want_jobs(RESUME_SETUP_JOBS, rest.metrics)
+    assert jobs == want, f"{jobs} jobs over {len(rest.metrics)} waves, want {want}"

@@ -31,8 +31,10 @@ Scale notes (the 1000-executor view):
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -58,9 +60,9 @@ PENDING_COLS = [
     "context_kind", "retries",
 ]
 
-# userinfo-bearing URL (F8 credential carrier) — one pattern shared by the
-# Spark rlike gates and the driver-side seed scan so the carrier count the
-# loop tracks can never disagree with what the harvest collect would find
+# userinfo-bearing URL (F8 credential carrier) — one pattern shared by
+# every Spark rlike gate so the carrier count the loop tracks can never
+# disagree with what the harvest collect would find
 UI_PAT = "^[a-z][a-z0-9+.-]*://[^/?#]*@"
 
 # live-fetchable scheme: the frontier keeps ftp/ws/wss (R2, Mojo.pm:177 —
@@ -90,7 +92,9 @@ class CrawlConfig:
     compact_every_commits: int | None = None  # store maintenance cadence: every N
                                            # durable commits, compact the append
                                            # tables (small-files rewrite) and expire
-                                           # snapshots older than the retained tail
+                                           # snapshots older than the retained tail.
+                                           # Counts every commit of the crawl, across
+                                           # resumes (carried in the frontier meta)
     expire_keep_snapshots: int = 2         # snapshots kept by maintenance expiry
     collect_images: bool = False           # S7 image+caption sink
     shuffle_every: int | None = None       # F5 seeded re-sequencing
@@ -168,10 +172,20 @@ VISIT_COLS = [
 
 # durable metrics rows: the column order and types schema inference gave
 # earlier commits, so appends to an existing metrics table line up
-METRICS_SCHEMA = (
-    "enqueued long, fetched long, pending long, sec double, skipped long, "
-    "wave long"
-)
+METRICS_SCHEMA = [
+    ("enqueued", "long"), ("fetched", "long"), ("pending", "long"),
+    ("sec", "double"), ("skipped", "long"), ("wave", "long"),
+]
+
+
+def _metrics_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """``rows`` as a METRICS_SCHEMA frame built in the JVM: a literal
+    array of structs inlined over a one-row range, so writing it needs no
+    Python rows serialized and no Python worker."""
+    return spark.range(1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(r[c]).cast(t).alias(c) for c, t in METRICS_SCHEMA])
+        for r in rows
+    ])))
 
 
 def _pin_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
@@ -265,6 +279,9 @@ class Crawler:
         self._pending_ui: int | None = None
         self._pending_nonhttp: int | None = None
         self._frontier_hosts: set[str] | None = None
+        # durable commits this crawl has made, across resumes (carried in
+        # the frontier meta): the store-maintenance cadence counts them
+        self._commits_done = 0
         # every robots decision (rules, Crawl-delays, spill, live fetch,
         # the allow-check) lives behind this gate; off ⇒ a no-op
         self._robots = RobotsGate.for_crawl(spark, corpus, self.config)
@@ -651,36 +668,14 @@ class Crawler:
     # -- main loop ----------------------------------------------------------
 
     def run(self, seeds) -> CrawlResult:
-        cfg = self.config
-        pending = self._seed_frontier(seeds).localCheckpoint(eager=True)
+        pending, pending_count = self._pin_frontier(self._seed_frontier(seeds))
         seen = pending.select("digest").localCheckpoint(eager=True)
-        next_seq = pending.count()
-        # seed the piggybacked trackers (list seeds: free driver-side scan;
-        # DataFrame seeds: one narrow one-time job — never per-wave)
-        if isinstance(seeds, (list, tuple)):
-            import re
-
-            self._pending_ui = len(
-                {u for u in seeds if re.match(UI_PAT, u)}
-            )
-            if cfg.fetch_mode == "http":
-                self._pending_nonhttp = len(
-                    {u for u in seeds if not re.match(HTTP_PAT, u)}
-                )
-        else:
-            self._pending_ui = pending.filter(F.col("url").rlike(UI_PAT)).count()
-            if cfg.fetch_mode == "http":
-                self._pending_nonhttp = pending.filter(
-                    ~F.col("url").rlike(HTTP_PAT)
-                ).count()
-        if cfg.respect_robots and cfg.fetch_mode == "http":
-            self._frontier_hosts = {
-                r["host_key"]
-                for r in pending.select("host_key").distinct().collect()
-                if r["host_key"]
-            }
         try:
-            return self._loop(pending, seen, next_seq, start_wave=0, seen_durable=False)
+            # seed seqs are dense [0, n): the next seq to assign is n
+            return self._loop(
+                pending, pending_count, seen, next_seq=pending_count,
+                start_wave=0, seen_durable=False,
+            )
         finally:
             self._robots.close()
 
@@ -688,11 +683,12 @@ class Crawler:
     def resume(cls, spark: SparkSession, corpus: DataFrame, config: CrawlConfig) -> "CrawlResult":
         """Continue a crawl from the last committed wave in checkpoint_dir.
 
-        Restores frontier/seen/next_seq from the TableStore snapshots the
-        loop commits every ``commit_every`` waves. The frontier commit is
-        the commit point, so the seen snapshot read is the one whose wave
-        matches the frontier's: a seen delta a crash left committed past
-        it is ignored, and the resumed loop's first commit rewrites it."""
+        Restores frontier/seen/next_seq and the commit count (the
+        compaction cadence) from the TableStore snapshots the loop commits
+        every ``commit_every`` waves. The frontier commit is the commit
+        point, so the seen snapshot read is the one whose wave matches the
+        frontier's: a seen delta a crash left committed past it is
+        ignored, and the resumed loop's first commit rewrites it."""
         assert config.checkpoint_dir, "resume needs checkpoint_dir"
         crawler = cls(spark, corpus, config)
         store = crawler.store
@@ -706,20 +702,11 @@ class Crawler:
         ]
         seen_snap = at_frontier[-1] if at_frontier else seen_snaps[-1]
         seen = store.read(spark, "seen", version=seen_snap["version"])
-        crawler._pending_ui = pending.filter(F.col("url").rlike(UI_PAT)).count()
-        if config.fetch_mode == "http":
-            crawler._pending_nonhttp = pending.filter(
-                ~F.col("url").rlike(HTTP_PAT)
-            ).count()
-        if config.respect_robots and config.fetch_mode == "http":
-            crawler._frontier_hosts = {
-                r["host_key"]
-                for r in pending.select("host_key").distinct().collect()
-                if r["host_key"]
-            }
+        crawler._commits_done = int(meta.get("commits", 0))
+        pending, pending_count = crawler._pin_frontier(pending)
         try:
             return crawler._loop(
-                pending.localCheckpoint(eager=True),
+                pending, pending_count,
                 seen.localCheckpoint(eager=True),
                 next_seq=int(meta.get("next_seq", 0)),
                 start_wave=int(meta.get("wave", 0)),
@@ -728,10 +715,40 @@ class Crawler:
         finally:
             crawler._robots.close()
 
-    def _loop(self, pending, seen, next_seq, start_wave, seen_durable) -> CrawlResult:
-        """The wave loop. ``seen_durable``: ``seen`` is already the seen
-        table's current snapshot, so commits append per-wave deltas to it;
-        otherwise the first commit overwrites it with ``seen`` + delta."""
+    def _pin_frontier(self, pending: DataFrame) -> tuple[DataFrame, int]:
+        """Checkpoint the starting frontier and seed the piggybacked
+        trackers from it, in ONE job: the row count, the userinfo-carrier
+        count and (http mode) the non-http(s) count ride the checkpoint as
+        observed aggregates. Returns the pinned frontier and its count."""
+        http = self.config.fetch_mode == "http"
+        aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("url").rlike(UI_PAT).cast("long")).alias("ui"),
+        ]
+        if http:
+            aggs.append(
+                F.sum((~F.col("url").rlike(HTTP_PAT)).cast("long")).alias("nh")
+            )
+        pending, obs = _pin_observed(pending, *aggs)
+        # a sum over no rows is null
+        self._pending_ui = obs["ui"] or 0
+        if http:
+            self._pending_nonhttp = obs["nh"] or 0
+            if self.config.respect_robots:
+                self._frontier_hosts = {
+                    r["host_key"]
+                    for r in pending.select("host_key").distinct().collect()
+                    if r["host_key"]
+                }
+        return pending, obs["n"]
+
+    def _loop(
+        self, pending, pending_count, seen, next_seq, start_wave, seen_durable,
+    ) -> CrawlResult:
+        """The wave loop over the pinned ``pending`` frontier of
+        ``pending_count`` rows. ``seen_durable``: ``seen`` is already the
+        seen table's current snapshot, so commits append per-wave deltas to
+        it; otherwise the first commit overwrites it with ``seen`` + delta."""
         cfg = self.config
         spark = self.spark
         visit_frames: list[DataFrame] = []
@@ -751,7 +768,6 @@ class Crawler:
                 [], "host_key string, last_wave int, rest_until int"
             )
 
-        pending_count = pending.count()
         drain_level = (
             cfg.max_conn is None
             and cfg.max_conn_per_host is None
@@ -1235,53 +1251,69 @@ class Crawler:
     ) -> None:
         """Commit every wave since the last boundary in one batch.
 
-        The frontier overwrite is the commit point, so it goes LAST. A
-        crash before it leaves only staged rows: duplicate visit rows
-        (``read_visits`` dedups by (wave, seq), and the re-run is
-        deterministic), a duplicate metrics row for the re-run wave, and a
-        seen delta ``resume`` skips because its ``wave`` meta is past the
+        The three staged tables (the visits append, the seen delta and the
+        metrics append) are independent, so they commit concurrently, on
+        threads that keep the caller's Spark job group. The frontier
+        overwrite is the commit point: it starts only once all three have
+        returned, and not at all if one raised (the others still finish,
+        then the error re-raises). A crash therefore leaves any subset of
+        {visits, seen, metrics} staged and never a frontier: duplicate
+        visit rows (``read_visits`` dedups by (wave, seq), and the re-run
+        is deterministic), a duplicate metrics row for the re-run wave, and
+        a seen delta ``resume`` skips because its ``wave`` meta is past the
         frontier's. With commit_every > 1 the batch carries the union of
         all uncommitted per-wave frames, not just the last. ``seen_frames``
         is the seen delta since the last commit (plus the base the table
         does not hold yet when ``seen_mode`` is "overwrite").
         """
         meta = {"wave": wave_id}
-        self.store.commit(
-            "visits", _union_all(visit_frames), mode="append", meta=meta
-        )
-        self.store.commit("seen", _union_all(seen_frames), mode=seen_mode, meta=meta)
-        self.store.commit(
-            "metrics",
-            self.spark.createDataFrame(metric_rows, METRICS_SCHEMA),
-            mode="append",
-            meta=meta,
-        )
+        staged = [
+            ("visits", _union_all(visit_frames), "append"),
+            ("seen", _union_all(seen_frames), seen_mode),
+            ("metrics", _metrics_frame(self.spark, metric_rows), "append"),
+        ]
+        with ThreadPoolExecutor(max_workers=len(staged)) as pool:
+            # one wrap per task: each copies the caller's local properties
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(self.spark)(self.store.commit),
+                    name, df, mode=mode, meta=meta,
+                )
+                for name, df, mode in staged
+            ]
+        for f in futures:
+            f.result()
         self.store.commit(
             "frontier", pending, mode="overwrite",
-            meta={"wave": wave_id, "next_seq": next_seq},
+            meta={
+                "wave": wave_id, "next_seq": next_seq,
+                "commits": self._commits_done + 1,
+            },
         )
+        self._commits_done += 1
         cfg = self.config
-        if cfg.compact_every_commits:
-            self._commits_done = getattr(self, "_commits_done", 0) + 1
-            if self._commits_done % cfg.compact_every_commits == 0:
-                # Store maintenance on the commit path (Iceberg
-                # rewrite_data_files + expire_snapshots shape): the append
-                # tables accumulate one tiny-file directory per commit — at
-                # 100k-wave scale the visits scan goes metadata-bound
-                # without this. Compaction commits a new snapshot (meta
-                # carried forward, so resume still reads wave/next_seq);
-                # expiry then reclaims directories no retained snapshot
-                # references. Crash-safety: manifest swaps atomically
-                # before any delete; resume reads the current snapshot
-                # (for seen, the newest at the frontier's wave, which
-                # compaction carries forward and a one-batch crash window
-                # never expires).
-                for t in ("visits", "metrics", "seen"):
-                    self.store.compact(self.spark, t)
-                for t in ("visits", "metrics", "frontier", "seen"):
-                    self.store.expire_snapshots(
-                        t, keep_last=cfg.expire_keep_snapshots
-                    )
+        if (
+            cfg.compact_every_commits
+            and self._commits_done % cfg.compact_every_commits == 0
+        ):
+            # Store maintenance on the commit path (Iceberg
+            # rewrite_data_files + expire_snapshots shape): the append
+            # tables accumulate one tiny-file directory per commit — at
+            # 100k-wave scale the visits scan goes metadata-bound
+            # without this. Compaction commits a new snapshot (meta
+            # carried forward, so resume still reads wave/next_seq);
+            # expiry then reclaims directories no retained snapshot
+            # references. Crash-safety: manifest swaps atomically
+            # before any delete; resume reads the current snapshot
+            # (for seen, the newest at the frontier's wave, which
+            # compaction carries forward and a one-batch crash window
+            # never expires).
+            for t in ("visits", "metrics", "seen"):
+                self.store.compact(self.spark, t)
+            for t in ("visits", "metrics", "frontier", "seen"):
+                self.store.expire_snapshots(
+                    t, keep_last=cfg.expire_keep_snapshots
+                )
 
     @classmethod
     def read_visits(cls, spark: SparkSession, config: "CrawlConfig") -> DataFrame | None:

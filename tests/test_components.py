@@ -133,28 +133,44 @@ def test_assign_seq_empty(spark):
     assert assign_seq(df, ["key"]).count() == 0
 
 
+def _wave_seq(df, bounds, start):
+    """Dense seqs for ``(parent_seq, emit_idx)`` rows the way the crawl loop
+    numbers a wave's children: arithmetic buckets over the wave's seq range
+    ``bounds``, per-bucket ranks and bucket counts on one checkpoint, then
+    the literal offset map."""
+    from pyspark.sql import functions as F
+
+    from wcm_spark.scheduler import _dense, _pin_ranked
+
+    keyed = df.select(
+        "*", F.col("parent_seq").alias("__k1"),
+        F.col("emit_idx").alias("__k2"), F.lit(1).alias("__src"),
+    )
+    pinned, counts, n_parts = _pin_ranked(keyed, bounds, [1])
+    rows, n = _dense(pinned, counts, 1, n_parts, start)
+    return rows.select("parent_seq", "emit_idx", F.col("__dense").alias("seq")), n
+
+
 def test_assign_seq_key_bounds_big_start(spark):
     """Offsets past 2^31 must assign exactly (the literal offset map is
     long-typed; an int32 map value would overflow the rank+offset sum)."""
     from pyspark.sql import functions as F
 
-    from wcm_spark.operators.seq import assign_seq
-
     big = 5_000_000_000
-    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") % 7).alias("sub"))
-    out, n = assign_seq(
-        df, ["k", "sub"], start=big, return_count=True, key_bounds=(0, 100)
+    df = spark.range(100).select(
+        F.col("id").alias("parent_seq"), (F.col("id") % 7).alias("emit_idx")
     )
+    out, n = _wave_seq(df, (0, 100), big)
     assert n == 100
     assert sorted(r["seq"] for r in out.collect()) == list(range(big, big + 100))
 
 
 def test_assign_seq_key_bounds_matches_sampled_path(spark):
-    """The arithmetic-bucket fast path must emit the EXACT seqs of the
-    sampled range-exchange path: same (parent, emit) ordering, dense from
-    `start`, duplicate first keys kept in one bucket, out-of-range keys
-    (the retry channel's parent_seq = -1) clamped but still ordered
-    first."""
+    """The loop's arithmetic-bucket numbering must emit the EXACT seqs of
+    the sampled range-exchange ``assign_seq``: same (parent, emit)
+    ordering, dense from `start`, duplicate first keys kept in one bucket,
+    out-of-range keys (the retry channel's parent_seq = -1) clamped but
+    still ordered first."""
     from wcm_spark.operators.seq import assign_seq
 
     rows = [
@@ -167,26 +183,24 @@ def test_assign_seq_key_bounds_matches_sampled_path(spark):
         (p, e, 500 + i)
         for i, (p, e) in enumerate(sorted(rows))
     ]
-    out = assign_seq(
+    out, n = _wave_seq(df, (100, 140), 500)
+    got = sorted(tuple(r) for r in out.collect())
+    sampled = assign_seq(
         df, ["parent_seq", "emit_idx"], out_col="seq", start=500,
-        num_partitions=7, key_bounds=(100, 140), return_count=True,
+        num_partitions=7,
     )
-    got = sorted(tuple(r) for r in out[0].collect())
-    assert out[1] == len(rows)
+    assert n == len(rows)
     assert got == want
+    assert sorted(tuple(r) for r in sampled.collect()) == want
 
 
 def test_assign_seq_key_bounds_degenerate_span(spark):
     """hi == lo (single-parent wave) must not divide by zero and still
     rank correctly in one bucket."""
-    from wcm_spark.operators.seq import assign_seq
-
     df = spark.createDataFrame(
         [(7, i) for i in range(25)], "parent_seq long, emit_idx int"
     )
-    out = assign_seq(
-        df, ["parent_seq", "emit_idx"], out_col="seq", key_bounds=(7, 7)
-    )
+    out, _ = _wave_seq(df, (7, 7), 0)
     assert [r["seq"] for r in out.orderBy("emit_idx").collect()] == list(
         range(25)
     )

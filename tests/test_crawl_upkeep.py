@@ -177,6 +177,40 @@ def test_staged_writes_overlap_frontier_last(spark, corpus, tmp_path, monkeypatc
         assert {n for k, n in wave[:front] if k == "end"} == set(STAGED), wave
 
 
+def test_shuffle_every_keeps_sets_and_unique_seqs(spark, corpus, monkeypatch):
+    """F5 re-sequencing (``shuffle_every``) changes the order pending rows
+    are cut in, never what the crawl reaches: a polite crawl re-sequenced
+    every 2 waves fetches the FIFO crawl's visit set and ends with its
+    seen set. Each re-sequenced frontier keeps its seqs unique, and every
+    seq it re-issues is at least the ``next_seq`` at that wave."""
+    issued = []
+    assign = scheduler.assign_seq
+
+    def recording_assign(df, order_cols, out_col="seq", start=0, **kw):
+        out = assign(df, order_cols, out_col=out_col, start=start, **kw)
+        issued.append((start, [r[out_col] for r in out.select(out_col).collect()]))
+        return out
+
+    monkeypatch.setattr(scheduler, "assign_seq", recording_assign)
+    fifo = Crawler(spark, corpus, CrawlConfig(**POLITE)).run(seed_urls(N_SITES))
+    assert issued == []
+    shuffled = Crawler(
+        spark, corpus, CrawlConfig(**POLITE, shuffle_every=2)
+    ).run(seed_urls(N_SITES))
+    assert shuffled.waves >= 4 and len(issued) >= 2
+
+    def urls(res):
+        return {r["url"] for r in res.visits.select("url").collect()}
+
+    assert urls(shuffled) == urls(fifo)
+    assert _digests(shuffled.seen) == _digests(fifo.seen)
+    for next_seq, seqs in issued:
+        assert len(set(seqs)) == len(seqs)
+        assert min(seqs, default=next_seq) >= next_seq
+    visit_seqs = [r["seq"] for r in shuffled.visits.select("seq").collect()]
+    assert len(set(visit_seqs)) == len(visit_seqs)
+
+
 def test_durable_metrics_round_trip(spark, corpus, tmp_path):
     """After a run and its resume, the durable metrics table holds exactly
     the per-wave metrics both calls returned, with long counters and a
@@ -213,12 +247,13 @@ def test_compaction_cadence_survives_resume(spark, corpus, tmp_path):
 
 # Spark jobs of one polite durable crawl, counted in the caller's job
 # group (the staged writes run on threads that inherit it). Set-up: the
-# frontier checkpoint with its count and tracker sums observed, the seen
+# frontier checkpoint with its count and first-wave facts observed, the seen
 # checkpoint and the seen-mirror collect. Per wave: the wave-cut
 # checkpoint, the heavy checkpoint, the next-frontier checkpoint and four
 # table writes (visits, seen, metrics, frontier), plus the fresh-digest
 # collect on waves that enqueue. A resume's set-up adds the two store
-# reads' parquet schema jobs (frontier, seen) to the same three.
+# reads' parquet schema jobs (frontier, seen) to the same three. A
+# queue-capped crawl launches the same: its cap room is the exact carry.
 SETUP_JOBS = 3
 RESUME_SETUP_JOBS = 5
 JOBS_PER_WAVE = 7
@@ -260,6 +295,22 @@ def test_polite_durable_wave_job_count(no_broadcast, tmp_path):
     want = _want_jobs(SETUP_JOBS, res.metrics)
     print(f"polite durable crawl: {jobs} jobs over {res.waves} waves "
           f"({(jobs - SETUP_JOBS) / res.waves:.2f} per wave)")
+    assert jobs == want, f"{jobs} jobs over {res.waves} waves, want {want}"
+
+
+def test_capped_durable_wave_job_count(no_broadcast, tmp_path):
+    """A queue-capped crawl launches the polite crawl's jobs: the cap's
+    room comes from the exact carry, so the cap costs no count job."""
+    ns, corpus = no_broadcast
+    cfg = CrawlConfig(
+        expected_urls=10_000, cap=6, max_conn=4,
+        checkpoint_dir=str(tmp_path / "ckpt"), commit_every=1,
+    )
+    res, jobs = _jobs_in_group(
+        ns, "test-capped-jobs", lambda: Crawler(ns, corpus, cfg).run(seed_urls(N_SITES))
+    )
+    assert res.waves > 2
+    want = _want_jobs(SETUP_JOBS, res.metrics)
     assert jobs == want, f"{jobs} jobs over {res.waves} waves, want {want}"
 
 

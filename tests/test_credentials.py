@@ -61,7 +61,7 @@ def duo():
     s2.shutdown()
 
 
-def test_credential_learn_attach_and_journal(spark, duo):
+def test_credential_learn_attach_and_journal(spark, duo, seen_max):
     from wcm_spark.scheduler import Crawler, CrawlConfig
 
     (h1, b1), (h2, b2) = duo
@@ -78,6 +78,7 @@ def test_credential_learn_attach_and_journal(spark, duo):
         fetch_mode="http", use_bloom=False, expected_urls=1000,
         http_timeout=5.0, http_concurrency=4,
         credentials={b2: "s2:pw"},  # static entry, URL-style key
+        broadcast_seen_max=seen_max,
     )
     res = Crawler(spark, None, cfg).run([f"{b1}/index.html"])
 
@@ -100,6 +101,28 @@ def test_credential_learn_attach_and_journal(spark, duo):
     assert list(hop["redirect_history"]) == [f"{b1}/redir"]
     # the secret visit is journaled under its credential-free URL
     assert f"{b1}/secret.html" in rows
+
+
+def test_no_harvest_without_carriers(spark, monkeypatch):
+    """With the exact seen mirror off, a crawl whose frontier never holds a
+    userinfo URL never runs the credential harvest: each wave's carrier
+    count rides the checkpoint that pins the wave."""
+    from wcm_spark.corpus import corpus_df, seed_urls
+    from wcm_spark.scheduler import Crawler, CrawlConfig
+
+    calls = []
+    monkeypatch.setattr(
+        Crawler, "_harvest_credentials", lambda self, wave: calls.append(wave)
+    )
+    corpus = corpus_df(spark, n_sites=2, pages_per_site=5)
+    for cfg in (
+        CrawlConfig(expected_urls=1000, broadcast_seen_max=0),
+        CrawlConfig(expected_urls=1000, broadcast_seen_max=0, max_conn_per_host=2),
+    ):
+        res = Crawler(spark, corpus, cfg).run(seed_urls(2))
+        assert res.waves > 1
+        assert not any("@" in r["request_url"] for r in res.visits.collect())
+    assert calls == []
 
 
 def test_harvest_units(spark):

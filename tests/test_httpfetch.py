@@ -144,11 +144,12 @@ def test_live_crawl_error_channel(spark):
     assert all(v["status"] is None for v in vis)
 
 
-def test_non_http_schemes_skipped_in_live_mode(spark):
+def test_non_http_schemes_skipped_in_live_mode(spark, seen_max):
     """The frontier keeps ftp/ws/wss (R2, Mojo.pm:177) but the live
     fetcher speaks only http(s): such rows are SKIPPED at fetch time —
     never requested, never retried, counted in the wave's ``skipped``
-    metric — and the crawl still drains cleanly."""
+    metric — and the crawl still drains cleanly, with or without the exact
+    seen mirror."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -178,7 +179,7 @@ def test_non_http_schemes_skipped_in_live_mode(spark):
     try:
         cfg = CrawlConfig(
             fetch_mode="http", use_bloom=False, expected_urls=100,
-            http_timeout=5.0, retry_errors=2,
+            http_timeout=5.0, retry_errors=2, broadcast_seen_max=seen_max,
             max_waves=5,  # guard: a skip miscounted as pending would spin
         )
         res = Crawler(spark, None, cfg).run([f"{base}/index.html"])

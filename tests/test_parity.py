@@ -125,6 +125,44 @@ def test_politeness_budget_restricts_waves(spark, corpus_small):
     assert all(r["count"] <= 4 for r in wave_sizes)
 
 
+@pytest.mark.parametrize("cap", [2, 4])
+def test_queue_cap_parity(spark, cap):
+    """F4 queue cap (Queue/Memory.pm:42-44) in the scheduler: at max_conn=1
+    the capped crawl visits pages in the reference loop's order and ends
+    with its seen set — newcomers past the cap are dropped and NOT marked,
+    so a later route to them still crawls."""
+    rows = corpus_rows(2, 5)
+    pages = {
+        r["url"]: CorpusPage(
+            url=r["url"], status=r["status"], content_type=r["content_type"],
+            content_length=r["content_length"], body=r["body"],
+            redirect_to=r["redirect_to"],
+        )
+        for r in rows
+    }
+    sim = CrawlSimulator(corpus=pages, cap=cap)
+    for u in seed_urls(2):
+        sim.enqueue(u)
+    sim.crawl()
+    corpus_df = spark.createDataFrame(
+        [
+            (r["url"], r["status"], r["content_type"], r["content_length"],
+             r["body"], r["redirect_to"])
+            for r in rows
+        ],
+        "url string, status int, content_type string, content_length bigint, "
+        "body binary, redirect_to string",
+    )
+    cfg = CrawlConfig(expected_urls=10_000, cap=cap, max_conn=1)
+    res = Crawler(spark, corpus_df, cfg).run(seed_urls(2))
+    got = [
+        r["url"]
+        for r in res.visits.filter("status is not null").orderBy("pos").collect()
+    ]
+    assert got == sim.visit_order
+    assert {r["digest"] for r in res.seen.collect()} == sim.seen
+
+
 def test_fused_equals_staged(spark, corpus_small):
     """scrape_resolve_children (one Arrow pass) must emit exactly what the
     staged scrape_edges → resolve_children pipeline emits."""

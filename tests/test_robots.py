@@ -88,15 +88,27 @@ def test_robots_parity_engine_vs_simulator(spark):
     assert not any("/r/" in u and "site1" in u for u in got)
 
 
-def test_live_robots_fetch_and_gate(spark):
+def test_live_robots_fetch_and_gate(spark, monkeypatch, seen_max):
     """http mode with no corpus: robots.txt is fetched live once per new
     host, disallowed URLs are never requested, and allowed crawling
-    proceeds normally."""
+    proceeds normally — with or without the exact seen mirror. The fetch
+    gate always gets the wave's hosts from the wave's checkpoint, never
+    ``hosts=None`` (which costs a distinct-collect of its own)."""
     import threading
     from collections import Counter
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+    from wcm_spark.robots import RobotsGate
     from wcm_spark.scheduler import Crawler, CrawlConfig
+
+    gate_hosts = []
+    filter_wave = RobotsGate.filter_wave
+
+    def recording_filter_wave(self, wave, hosts=None):
+        gate_hosts.append(hosts)
+        return filter_wave(self, wave, hosts)
+
+    monkeypatch.setattr(RobotsGate, "filter_wave", recording_filter_wave)
 
     hits: Counter = Counter()
     robots_agents: list = []
@@ -133,11 +145,13 @@ def test_live_robots_fetch_and_gate(spark):
     try:
         cfg = CrawlConfig(
             fetch_mode="http", use_bloom=False, expected_urls=100,
-            http_timeout=5.0, respect_robots=True,
+            http_timeout=5.0, respect_robots=True, broadcast_seen_max=seen_max,
         )
         res = Crawler(spark, None, cfg).run([f"{base}/index.html"])
         urls = {r["request_url"] for r in res.visits.collect()}
         assert urls == {f"{base}/index.html", f"{base}/pub/y.html"}
+        assert len(gate_hosts) == res.waves
+        assert None not in gate_hosts
         assert hits["/robots.txt"] == 1      # fetched once, cached
         # through the crawl's own client: the robots request carries the
         # crawl's User-Agent

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .frontier import cap_keep
 from .functions.core import digest_col, host_key_udf, host_salt_col
 from .operators.dedup import NumpyBloom, build_bloom, seen_anti_join
 from .operators.scrape import scrape_resolve_children
@@ -61,8 +62,8 @@ PENDING_COLS = [
 ]
 
 # userinfo-bearing URL (F8 credential carrier) — one pattern shared by
-# every Spark rlike gate so the carrier count the loop tracks can never
-# disagree with what the harvest collect would find
+# every Spark rlike gate so the carrier count a wave's checkpoint observes
+# can never disagree with what the harvest collect would find
 UI_PAT = "^[a-z][a-z0-9+.-]*://[^/?#]*@"
 
 # live-fetchable scheme: the frontier keeps ftp/ws/wss (R2, Mojo.pm:177 —
@@ -207,6 +208,31 @@ def _pin_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
         return pinned, pinned.agg(*aggs).first().asDict()
 
 
+def _pin_ranked(
+    df: DataFrame, bounds: tuple[int, int], srcs: list[int], *aggs
+) -> tuple[DataFrame, dict, int]:
+    """Pin ``df`` (side ``__src``, key (``__k1``, ``__k2``) with ``__k1`` in
+    the wave's seq range ``bounds``) in one job, ranked for ``_dense``:
+    ``__rk`` is the row's rank in its (``__src``, arithmetic bucket
+    ``__pid``), and the bucket counts ``c{src}_{i}`` are observed with
+    ``aggs``. Returns the rows, the observed values and the bucket count."""
+    n_parts = arith_n_parts(df.sparkSession, bounds[1] - bounds[0])
+    ranked = df.withColumn(
+        "__pid", arith_bucket_col(F.col("__k1"), *bounds, n_parts)
+    ).withColumn(
+        "__rk",
+        F.row_number().over(
+            Window.partitionBy("__src", "__pid").orderBy("__k1", "__k2")
+        ),
+    )
+    pinned, obs = _pin_observed(ranked, *[
+        F.sum(((F.col("__src") == src) & (F.col("__pid") == i))
+              .cast("long")).alias(f"c{src}_{i}")
+        for src in srcs for i in range(n_parts)
+    ], *aggs)
+    return pinned, obs, n_parts
+
+
 def _dense(
     ranked: DataFrame, counts: dict, src: int, n_parts: int, start: int
 ) -> tuple[DataFrame, int]:
@@ -272,13 +298,6 @@ class Crawler:
             self._normalize_cred_key(k): v
             for k, v in (self.config.credentials or {}).items()
         }
-        # piggybacked driver state (maintained from the per-wave digest
-        # collect while the exact seen mirror is alive; None = unknown):
-        # count of pending userinfo-carrier rows, and every host_key that
-        # ever entered the frontier (http+robots mode only)
-        self._pending_ui: int | None = None
-        self._pending_nonhttp: int | None = None
-        self._frontier_hosts: set[str] | None = None
         # durable commits this crawl has made, across resumes (carried in
         # the frontier meta): the store-maintenance cadence counts them
         self._commits_done = 0
@@ -326,20 +345,18 @@ class Crawler:
 
         return (hk(key) or key) if "://" in key else key
 
-    def _harvest_credentials(self, wave: DataFrame) -> int:
+    def _harvest_credentials(self, wave: DataFrame) -> None:
         """F8 learn-on-first-sight (UserAgent.pm:17-31): any wave URL that
         carries userinfo teaches this host's credentials; later same-host
         requests get them re-attached. Userinfo-bearing URLs are rare, so
         the harvest is a driver collect of a tiny filtered slice — and the
-        loop only calls it at all while its tracked pending-carrier count
-        (piggybacked on the per-wave digest collect) is nonzero, so the
-        common all-clean crawl pays ZERO extra jobs per wave. Returns the
-        number of carrier rows found (the loop decrements its count)."""
+        loop calls it only for a wave whose ``ui`` count (observed on the
+        checkpoint that pins the wave, see ``_facts``) is nonzero, so the
+        common all-clean crawl pays ZERO extra jobs per wave."""
         from .urlkit import host_key as hk
 
         carriers = wave.filter(F.col("url").rlike(UI_PAT))
-        rows = carriers.select("url", "seq").orderBy("seq").collect()
-        for r in rows:
+        for r in carriers.select("url", "seq").orderBy("seq").collect():
             url = r["url"]
             key = hk(url)
             if key is None:
@@ -348,7 +365,6 @@ class Crawler:
             userinfo = rest.split("@", 1)[0]
             if userinfo:
                 self._creds[key] = userinfo
-        return len(rows)
 
     def _with_credentials(self, wave: DataFrame) -> DataFrame:
         """F8 (UserAgent.pm:17-31,58-63): attach stored userinfo per host_key
@@ -507,14 +523,13 @@ class Crawler:
     )
 
     def _seed_frontier(self, seeds) -> DataFrame:
-        if isinstance(seeds, (list, tuple)):
-            # driver-side fast path: digest dedup (first wins) and dense
-            # seq assignment are pure Python over the seed list — ONE
-            # createDataFrame (host_salt rides as a lazy JVM column on
-            # the caller's checkpoint) instead of the ~5 Spark jobs the
-            # generic window/range-exchange path costs. Seed lists are
-            # the overwhelmingly common entry; DataFrame seeds keep the
-            # distributed path below.
+        if not isinstance(seeds, DataFrame):
+            # driver-side path for any iterable of URLs: digest dedup
+            # (first wins) and dense seq assignment are pure Python over
+            # the seeds — ONE createDataFrame (host_salt rides as a lazy
+            # JVM column on the caller's checkpoint) instead of the ~5
+            # Spark jobs the window/range-exchange path costs. DataFrame
+            # seeds keep the distributed path below.
             from .urlkit import host_key as hk_fn
             from .urlkit import job_digest
 
@@ -541,16 +556,10 @@ class Crawler:
                 )
                 .select(*PENDING_COLS)
             )
-        if isinstance(seeds, DataFrame):
-            df = seeds
-            if "seed_order" not in df.columns:
-                df = df.withColumn(
-                    "seed_order", F.row_number().over(Window.orderBy(F.lit(1))) - 1
-                )
-        else:
-            df = self.spark.createDataFrame(
-                [(i, u, None, None) for i, u in enumerate(seeds)],
-                "seed_order long, url string, method string, params string",
+        df = seeds
+        if "seed_order" not in df.columns:
+            df = df.withColumn(
+                "seed_order", F.row_number().over(Window.orderBy(F.lit(1))) - 1
             )
         if "method" not in df.columns:
             df = df.withColumn("method", F.lit(None).cast("string"))
@@ -579,14 +588,7 @@ class Crawler:
             .withColumn("host_salt", host_salt_col(F.col("host_key"), self.config.salts))
         )
         df = _dedup_min(df, "digest", ["seed_order"])
-        # seed_order is dense [0, n) by construction (list seeds: the
-        # enumerate above; DataFrame seeds: row_number - 1), so the
-        # arithmetic-bucket path applies — no sampling job at crawl start
-        n_seeds = len(seeds) if not isinstance(seeds, DataFrame) else None
-        df = assign_seq(
-            df, ["seed_order"], out_col="seq", start=0,
-            key_bounds=(0, n_seeds) if n_seeds else None,
-        )
+        df = assign_seq(df, ["seed_order"], out_col="seq", start=0)
         return df.select(
             "seq",
             F.lit(0).alias("wave"),
@@ -668,12 +670,14 @@ class Crawler:
     # -- main loop ----------------------------------------------------------
 
     def run(self, seeds) -> CrawlResult:
-        pending, pending_count = self._pin_frontier(self._seed_frontier(seeds))
+        pending, pending_count, facts = self._pin_frontier(
+            self._seed_frontier(seeds)
+        )
         seen = pending.select("digest").localCheckpoint(eager=True)
         try:
             # seed seqs are dense [0, n): the next seq to assign is n
             return self._loop(
-                pending, pending_count, seen, next_seq=pending_count,
+                pending, pending_count, facts, seen, next_seq=pending_count,
                 start_wave=0, seen_durable=False,
             )
         finally:
@@ -703,10 +707,10 @@ class Crawler:
         seen_snap = at_frontier[-1] if at_frontier else seen_snaps[-1]
         seen = store.read(spark, "seen", version=seen_snap["version"])
         crawler._commits_done = int(meta.get("commits", 0))
-        pending, pending_count = crawler._pin_frontier(pending)
+        pending, pending_count, facts = crawler._pin_frontier(pending)
         try:
             return crawler._loop(
-                pending, pending_count,
+                pending, pending_count, facts,
                 seen.localCheckpoint(eager=True),
                 next_seq=int(meta.get("next_seq", 0)),
                 start_wave=int(meta.get("wave", 0)),
@@ -715,40 +719,42 @@ class Crawler:
         finally:
             crawler._robots.close()
 
-    def _pin_frontier(self, pending: DataFrame) -> tuple[DataFrame, int]:
-        """Checkpoint the starting frontier and seed the piggybacked
-        trackers from it, in ONE job: the row count, the userinfo-carrier
-        count and (http mode) the non-http(s) count ride the checkpoint as
-        observed aggregates. Returns the pinned frontier and its count."""
-        http = self.config.fetch_mode == "http"
-        aggs = [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("url").rlike(UI_PAT).cast("long")).alias("ui"),
-        ]
-        if http:
-            aggs.append(
-                F.sum((~F.col("url").rlike(HTTP_PAT)).cast("long")).alias("nh")
-            )
-        pending, obs = _pin_observed(pending, *aggs)
-        # a sum over no rows is null
-        self._pending_ui = obs["ui"] or 0
-        if http:
-            self._pending_nonhttp = obs["nh"] or 0
-            if self.config.respect_robots:
-                self._frontier_hosts = {
-                    r["host_key"]
-                    for r in pending.select("host_key").distinct().collect()
-                    if r["host_key"]
-                }
-        return pending, obs["n"]
+    def _pin_frontier(self, pending: DataFrame) -> tuple[DataFrame, int, dict]:
+        """Checkpoint the starting frontier in ONE job, its row count and
+        its ``_facts`` observed on the way. Returns the pinned frontier,
+        its count and the facts, which hold for the first wave: that wave
+        is the frontier itself or a cut of it."""
+        pending, facts = _pin_observed(
+            pending, F.count(F.lit(1)).alias("n"), *self._facts()
+        )
+        return pending, facts.pop("n"), facts
+
+    def _facts(self, rows=None) -> list:
+        """What the loop needs to know about a wave before its fetch, as
+        aggregates over the rows ``rows`` picks (all when None) that ride
+        the checkpoint pinning those rows: ``ui``, the userinfo carriers
+        (the credential harvest runs only when it is nonzero), and in live
+        robots mode ``hosts``, the host keys (null, so left out, for
+        non-http(s) URLs), from which ``RobotsGate.filter_wave`` learns new
+        hosts' rules."""
+        if rows is None:
+            rows = F.lit(True)
+        aggs = [F.count(F.when(rows & F.col("url").rlike(UI_PAT), 1)).alias("ui")]
+        if self.config.fetch_mode == "http" and self.config.respect_robots:
+            aggs.append(F.collect_set(F.when(rows, F.col("host_key"))).alias("hosts"))
+        return aggs
 
     def _loop(
-        self, pending, pending_count, seen, next_seq, start_wave, seen_durable,
+        self, pending, pending_count, facts, seen, next_seq, start_wave,
+        seen_durable,
     ) -> CrawlResult:
         """The wave loop over the pinned ``pending`` frontier of
-        ``pending_count`` rows. ``seen_durable``: ``seen`` is already the
-        seen table's current snapshot, so commits append per-wave deltas to
-        it; otherwise the first commit overwrites it with ``seen`` + delta."""
+        ``pending_count`` rows, whose ``_facts`` are ``facts``.
+        ``seen_durable``: ``seen`` is already the seen table's current
+        snapshot, so commits append per-wave deltas to it; otherwise the
+        first commit overwrites it with ``seen`` + delta. Each later wave's
+        facts ride the wave-cut checkpoint or, on drain-level crawls (the
+        next wave is the whole fresh enqueue), the heavy checkpoint."""
         cfg = self.config
         spark = self.spark
         visit_frames: list[DataFrame] = []
@@ -791,8 +797,8 @@ class Crawler:
         # only while it fits cfg.broadcast_seen_max. Driver cost at the 4M
         # default: 4M x 32-char digest strings ≈ 128MB of payload, ~400MB
         # with Python object overhead — bounded and disclosed; beyond the
-        # cutoff the mirror (and every tracker piggybacked on its per-wave
-        # collect) is dropped and the bloom+anti-join path takes over.
+        # cutoff the mirror is dropped and the bloom+anti-join path takes
+        # over.
         # The broadcast is INCREMENTAL: the base set ships once, then each
         # wave ships only its fresh-digest delta (seen_bcs pieces, largest
         # first); pieces re-consolidate into one broadcast every 8 waves so
@@ -805,15 +811,10 @@ class Crawler:
         bloom = None
         if cfg.broadcast_seen_max and next_seq <= cfg.broadcast_seen_max:
             seen_set = {r["digest"] for r in seen.select("digest").collect()}
-        else:
-            # no exact mirror ⇒ no piggybacked collect ⇒ trackers unknown
-            self._pending_ui = None
-            self._pending_nonhttp = None
-            self._frontier_hosts = None
-            if cfg.use_bloom:
-                bloom = build_bloom(
-                    seen, NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp)
-                )
+        elif cfg.use_bloom:
+            bloom = build_bloom(
+                seen, NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp)
+            )
         while True:
             if pending_count == 0:
                 if cfg.on_empty is not None:
@@ -829,13 +830,14 @@ class Crawler:
             # parent-seq range its children's seq buckets split
             wave = self._wave_cut(pending, host_state, wave_id)
             if wave is not pending:
-                wave, cut = _pin_observed(
+                wave, facts = _pin_observed(
                     wave, F.count(F.lit(1)).alias("n"),
                     F.min("seq").alias("lo"), F.max("seq").alias("hi"),
+                    *self._facts(),
                 )
-                wave_count = cut["n"]
+                wave_count = facts["n"]
                 bounds = (
-                    (cut["lo"], cut["hi"] + 1) if wave_count
+                    (facts["lo"], facts["hi"] + 1) if wave_count
                     else (next_seq, next_seq + 1)
                 )
             else:
@@ -843,87 +845,61 @@ class Crawler:
                 # cardinality is known and its seqs are the last issued
                 wave_count = pending_count
                 bounds = (next_seq - pending_count, next_seq)
-            if host_state is not None and wave_count:
-                host_state = (
-                    host_state.unionByName(
-                        wave.select("host_key")
-                        .distinct()
-                        .withColumn("last_wave", F.lit(wave_id))
-                        .withColumn("rest_until", F.lit(None).cast("int"))
-                    )
-                    .groupBy("host_key")
-                    .agg(
-                        F.max("last_wave").alias("last_wave"),
-                        F.max("rest_until").alias("rest_until"),
-                    )
-                    .localCheckpoint(eager=True)
+            if facts["ui"]:
+                self._harvest_credentials(wave)
+            # wave_taken: the slice leaving the frontier this wave (incl.
+            # robots-disallowed and non-http(s) rows, which are skipped,
+            # not retried); wave: the slice actually fetched. The carry
+            # below must subtract the TAKEN count (what left the frontier),
+            # while the fetch metric reports the post-gate count —
+            # conflating them inflates pending_count by every skipped row
+            # and the loop never sees the frontier drain.
+            wave_taken, wave_taken_count = wave, wave_count
+            if cfg.fetch_mode == "http":
+                # Live fetch gates, both lazy filters on the fetch's own
+                # plan: the fetcher speaks only http(s), so ftp/ws/wss rows
+                # are skipped (not retried); robots learns the new hosts'
+                # rules (hosts from the wave's facts), then drops
+                # disallowed rows before any socket opens. Corpus mode
+                # gates at enqueue only, where every host's rules are
+                # known up front.
+                wave = self._robots.filter_wave(
+                    wave.filter(F.col("url").rlike(HTTP_PAT)), facts.get("hosts")
                 )
-            # Corpus mode: deliberately NOT persisted — caching would
-            # materialize the body column (measured slower than the
-            # consumers' re-joins); the visits checkpoint below prunes
-            # body out of its join and the one heavy pass (fetch -> parse
-            # -> dedup) happens exactly once. HTTP mode: the fetch has
+            fetched = self._fetch_wave(wave)
+            # Corpus mode: the fetch is deliberately NOT persisted — caching
+            # would materialize the body column (measured slower than the
+            # consumers' re-joins); the heavy checkpoint below prunes body
+            # out of its join and the one heavy pass (fetch -> parse ->
+            # dedup) happens exactly once. HTTP mode: the fetch has
             # real-world side effects and cost, so it is pinned eagerly —
             # every URL is requested exactly ONCE per wave no matter how
-            # many frames derive from it.
-            # credential harvest only while carriers are known (or could
-            # be) pending — the tracked count makes the all-clean crawl
-            # pay zero extra jobs per wave
-            if self._pending_ui is None or self._pending_ui > 0:
-                found = self._harvest_credentials(wave)
-                if self._pending_ui is not None:
-                    self._pending_ui -= found
-            # wave_taken: the slice leaving the frontier this wave (incl.
-            # robots-disallowed rows, which are skipped, not retried);
-            # wave: the slice actually fetched. The carry below must
-            # subtract the TAKEN count (what left the frontier), while the
-            # fetch metric reports the post-gate count — conflating them
-            # inflates pending_count by every disallowed row and the loop
-            # never sees the frontier drain.
-            wave_taken = wave
-            wave_taken_count = wave_count
-            if cfg.fetch_mode == "http" and (
-                self._pending_nonhttp is None or self._pending_nonhttp > 0
-            ):
-                # live fetch speaks only http(s): ftp/ws/wss frontier rows
-                # are skipped (not retried), gated here only while the
-                # tracked pending-non-http count says any could be in play
-                gated, obs = _pin_observed(
-                    wave.filter(F.col("url").rlike(HTTP_PAT)),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                gated_count = obs["n"]
-                if self._pending_nonhttp is not None:
-                    self._pending_nonhttp -= wave_count - gated_count
-                wave, wave_count = gated, gated_count
+            # many frames derive from it — and the pin counts what passed
+            # the gates.
             if cfg.fetch_mode == "http":
-                # live robots: learn new hosts' rules, then drop disallowed
-                # rows before any socket opens (corpus mode gates at enqueue
-                # only, where every host's rules are known up front)
-                gated = self._robots.filter_wave(wave, self._frontier_hosts)
-                if gated is not wave:
-                    wave, obs = _pin_observed(gated, F.count(F.lit(1)).alias("n"))
-                    wave_count = obs["n"]
-            fetched = self._fetch_wave(wave)
-            if cfg.fetch_mode == "http":
-                fetched = fetched.localCheckpoint(eager=True)
-            if cfg.backoff_statuses and host_state is not None:
-                # the server said "slow down": rest the whole host for
-                # backoff_waves waves; its unfetched rows stay pending and
-                # re-enter the wave cut when the cooldown lapses
-                backoff_hosts = (
-                    fetched.filter(
-                        F.col("status").isin(list(cfg.backoff_statuses))
-                    )
-                    .select("host_key")
-                    .distinct()
-                    .withColumn("last_wave", F.lit(None).cast("int"))
-                    .withColumn(
-                        "rest_until", F.lit(wave_id + cfg.backoff_waves)
-                    )
+                fetched, obs = _pin_observed(fetched, F.count(F.lit(1)).alias("n"))
+                wave_count = obs["n"]
+            if host_state is not None and wave_taken_count:
+                # F6/F10 host state, one fold per wave: the wave's hosts
+                # were fetched at wave_id; a host that answered a backoff
+                # status ("slow down") rests until wave_id + backoff_waves,
+                # its unfetched rows staying pending until the cooldown
+                # lapses
+                touched = wave_taken.select(
+                    "host_key", F.lit(wave_id).alias("last_wave"),
+                    F.lit(None).cast("int").alias("rest_until"),
                 )
+                if cfg.backoff_statuses:
+                    touched = touched.unionByName(
+                        fetched.filter(
+                            F.col("status").isin(list(cfg.backoff_statuses))
+                        ).select(
+                            "host_key", F.lit(None).cast("int").alias("last_wave"),
+                            F.lit(wave_id + cfg.backoff_waves).alias("rest_until"),
+                        )
+                    )
                 host_state = (
-                    host_state.unionByName(backoff_hosts)
+                    host_state.unionByName(touched)
                     .groupBy("host_key")
                     .agg(
                         F.max("last_wave").alias("last_wave"),
@@ -1035,8 +1011,6 @@ class Crawler:
                     )
                 )
 
-            remaining = pending.join(wave_taken.select("seq"), "seq", "left_anti")
-
             enqueue = fresh.select(
                 "url", "host_key", "method", "params", "digest", "depth",
                 "referrer_url", "literal_uri", "context", "context_kind",
@@ -1049,12 +1023,13 @@ class Crawler:
                 # against capacity like any enqueue.
                 enqueue = enqueue.unionByName(retry)
 
-            if cfg.cap is not None:
-                # F4: newcomers dropped once length exceeds cap; dropped rows
-                # are NOT marked seen (Queue/Memory.pm:42-44 quirk)
-                remaining_count = remaining.count()
-                room = max(0, cfg.cap + 1 - remaining_count)
-                enqueue = enqueue.orderBy("parent_seq", "emit_idx").limit(room)
+            # F4: newcomers dropped once length exceeds cap; dropped rows
+            # are NOT marked seen. The length is the exact carry: what is
+            # left of the frontier once the wave was taken
+            enqueue = cap_keep(
+                enqueue, cfg.cap, pending_count - wave_taken_count,
+                "parent_seq", "emit_idx",
+            )
 
             # THE one heavy materialization per wave: everything upstream
             # (fetch join -> fused parse UDF -> anti-join -> dedup window)
@@ -1068,8 +1043,9 @@ class Crawler:
             # checkpoint. The dense seq/pos are then a projection: local
             # rank + a literal bucket→offset map. Visits fold into the
             # same checkpoint (discriminator column __src) unless
-            # deferred, so the wave pays ONE checkpoint job for both.
-            n_parts = arith_n_parts(spark, bounds[1] - bounds[0])
+            # deferred, so the wave pays ONE checkpoint job for both. On
+            # drain-level crawls the enqueue side is the whole next wave,
+            # so its facts ride this checkpoint too.
             ranked = enqueue.select(
                 "*", F.col("parent_seq").alias("__k1"),
                 F.col("emit_idx").alias("__k2"), F.lit(1).alias("__src"),
@@ -1081,19 +1057,12 @@ class Crawler:
                     "*", F.col("seq").alias("__k1"), F.lit(0).alias("__k2"),
                     F.lit(0).alias("__src"),
                 ).unionByName(ranked, allowMissingColumns=True)
-            ranked = ranked.withColumn(
-                "__pid", arith_bucket_col(F.col("__k1"), *bounds, n_parts)
-            ).withColumn(
-                "__rk",
-                F.row_number().over(
-                    Window.partitionBy("__src", "__pid").orderBy("__k1", "__k2")
-                ),
+            pinned, counts, n_parts = _pin_ranked(
+                ranked, bounds, srcs,
+                *(self._facts(F.col("__src") == 1) if drain_level else []),
             )
-            pinned, counts = _pin_observed(ranked, *[
-                F.sum(((F.col("__src") == src) & (F.col("__pid") == i))
-                      .cast("long")).alias(f"c{src}_{i}")
-                for src in srcs for i in range(n_parts)
-            ])
+            if drain_level:
+                facts = counts
 
             enqueue, enq_count = _dense(pinned, counts, 1, n_parts, next_seq)
             enqueue = (
@@ -1116,56 +1085,26 @@ class Crawler:
             next_seq += enq_count
             if seen_set is not None and enq_count:
                 if len(seen_set) + enq_count > cfg.broadcast_seen_max:
-                    # outgrown: bloom+anti-join from here on; the trackers
-                    # piggybacked on this collect die with the mirror
+                    # outgrown: bloom+anti-join from here on
                     seen_set = None
                     for b in seen_bcs:
                         b.unpersist()
                     seen_bcs = []
-                    self._pending_ui = None
-                    self._pending_nonhttp = None
-                    self._frontier_hosts = None
                     if cfg.use_bloom:
                         bloom = build_bloom(
                             seen.unionByName(enqueue.select("digest")),
                             NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp),
                         )
                 else:
-                    # ONE driver collect per wave carries everything the
-                    # loop needs from the fresh rows: digests (exact seen
-                    # mirror + next delta broadcast), the userinfo-carrier
-                    # flag (credential-harvest gate) and, in live-robots
-                    # mode, host keys (new hosts for the robots fetch).
-                    sel = [
-                        F.col("digest"),
-                        F.col("url").rlike(UI_PAT).alias("__ui"),
-                    ]
-                    track_nonhttp = (
-                        cfg.fetch_mode == "http"
-                        and self._pending_nonhttp is not None
+                    # the fresh digests extend the exact mirror and ship as
+                    # the next delta broadcast; Arrow-batched (toPandas
+                    # moves the delta as columnar batches, ~10x faster than
+                    # the row-Row collect at 100k+ fresh digests/wave)
+                    fresh_digests = (
+                        enqueue.select("digest").toPandas()["digest"].tolist()
                     )
-                    if track_nonhttp:
-                        sel.append((~F.col("url").rlike(HTTP_PAT)).alias("__nh"))
-                    track_hosts = self._frontier_hosts is not None
-                    if track_hosts:
-                        sel.append(F.col("host_key"))
-                    # Arrow-batched driver transfer: toPandas moves the
-                    # per-wave delta as columnar batches (~10x faster than
-                    # the row-Row collect at 100k+ fresh digests/wave) and
-                    # the tracker folds become vector ops
-                    pdf = enqueue.select(*sel).toPandas()
-                    fresh_digests = pdf["digest"].tolist()
                     seen_set.update(fresh_digests)
                     seen_delta.update(fresh_digests)
-                    n_ui = int(pdf["__ui"].sum())
-                    if self._pending_ui is not None and n_ui:
-                        self._pending_ui += n_ui
-                    if track_nonhttp:
-                        self._pending_nonhttp += int(pdf["__nh"].sum())
-                    if track_hosts:
-                        self._frontier_hosts.update(
-                            h for h in pdf["host_key"] if h
-                        )
             elif bloom is not None and enq_count:
                 build_bloom(enqueue.select("digest"), bloom)
 
@@ -1176,6 +1115,7 @@ class Crawler:
                 # O(frontier) per wave instead of O(total crawled) per wave
                 new_pending = enqueue
             else:
+                remaining = pending.join(wave_taken.select("seq"), "seq", "left_anti")
                 new_pending = remaining.unionByName(enqueue)
             if cfg.shuffle_every and wave_id % cfg.shuffle_every == 0:
                 # F5 (Queue/Memory.pm:32-35): periodic re-sequencing for host

@@ -5,11 +5,16 @@ insensitive value hash): runs each Spark query and its oracle SQL at
 sf0.001 and compares normalized sorted rows.
 """
 
+import hashlib
+import json
 import math
 import os
+import pathlib
+import tempfile
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from wcm_spark.datapipe.queries import TABLES, oracle_sqls, spark_queries
 
@@ -420,12 +425,10 @@ def test_shingle_builders_survive_short_docs(spark, tmp_path):
     """Real-data robustness: docs shorter than the shingle/chunk window
     must yield empty windows, not a crash — Spark's sequence(1, 0)
     descends ([1, 0]) and element_at/slice then error or fabricate
-    windows (the _seq1 guard). Pins every variable-length builder over
-    a 0/1/2/5-token corpus at the REAL operating points (no synthetic
-    gate overrides)."""
+    windows (the _seq1 guard). Runs every variable-length query the way
+    production does (spark_queries) over a 0/1/2/5-token corpus and
+    checks it against its DuckDB oracle over the same table."""
     import pandas as pd
-
-    from wcm_spark.datapipe.queries import _BUILDERS
 
     pdf = pd.DataFrame(
         {
@@ -437,6 +440,8 @@ def test_shingle_builders_survive_short_docs(spark, tmp_path):
     )
     d = tmp_path / "documents.parquet"
     spark.createDataFrame(pdf).write.parquet(str(d))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/*.parquet')")
     for name in (
         "dedup_minhash_lsh",
         "dedup_ngram_jaccard",
@@ -445,11 +450,11 @@ def test_shingle_builders_survive_short_docs(spark, tmp_path):
         "passage_dedup_scrub",
         "doc_decontamination",
     ):
-        # real defaults on purpose: chunk=10 / n-gram windows wider than
-        # every fixture doc here
-        sql = _BUILDERS[name]("spark", str(tmp_path))
-        rows = spark.sql(sql).collect()
-        assert isinstance(rows, list), name
+        sdf = QUERIES[name](spark, str(tmp_path))
+        got = _rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+        cur = con.execute(ORACLES[name])
+        want = _rows([c[0] for c in cur.description], cur.fetchall())
+        assert got == want, name
 
 
 def test_recrawl_conditional_fetch_all_actions(duck):
@@ -539,3 +544,115 @@ def test_url_canonicalize_edge_cases_duck(duck):
 def test_url_canonicalize_edge_cases_spark(spark):
     got = [(r[0], r[1]) for r in spark.sql(_url_canon_sql("spark")).collect()]
     assert got == [(i, c) for i, _, c in URL_CANON_CASES]
+
+
+def test_oracle_texts_frozen():
+    """Every oracle text is pinned by its sha256 in
+    oracle_sqls.sha256.json (the temp dir the fixture parquets live under
+    replaced by a placeholder), so any oracle edit shows up as a reviewed
+    edit of that file. Regenerate it with ``write_oracle_digests()``."""
+    want = json.loads(_DIGESTS.read_text())
+    assert _oracle_digests() == want
+
+
+_DIGESTS = pathlib.Path(__file__).with_name("oracle_sqls.sha256.json")
+
+
+def _oracle_digests() -> dict:
+    tmp = tempfile.gettempdir()
+    return {
+        k: hashlib.sha256(v.replace(tmp, "<TMPDIR>").encode()).hexdigest()
+        for k, v in sorted(ORACLES.items())
+    }
+
+
+def write_oracle_digests() -> None:
+    _DIGESTS.write_text(json.dumps(_oracle_digests(), indent=1, sort_keys=True) + "\n")
+
+
+_TOKENIZER_CASES = [
+    "",
+    "   ",
+    "?!.,;:",
+    "a1-b2_c3",
+    "--lead and trail--",
+    "tabs\tand\nnew\r\nlines",
+    "MiXeD CaSe Words",
+    "Café ÜBER naïve",
+    pytest.param(
+        "İstanbul",
+        marks=pytest.mark.xfail(
+            strict=True,
+            reason="DuckDB lowercases U+0130 to 'i'; Spark to 'i' + U+0307",
+        ),
+    ),
+]
+
+
+@pytest.mark.parametrize("text", _TOKENIZER_CASES)
+def test_tokenizer_same_on_every_engine(spark, text):
+    """The one tokenizer rule gives the same token list as a Column
+    (_tokens_col), as Spark SQL and as DuckDB SQL (_tokens_sql)."""
+    from wcm_spark.datapipe.queries import _tokens_col, _tokens_sql
+
+    df = spark.createDataFrame([(text,)], "text string")
+    col, sql = df.select(_tokens_col(), F.expr(_tokens_sql("spark"))).first()
+    (duck_toks,) = duckdb.execute(
+        f"SELECT {_tokens_sql('duck')} FROM (SELECT ?::VARCHAR AS text)", [text]
+    ).fetchone()
+    assert list(col) == list(sql) == list(duck_toks)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_ivf_kmeans",
+        "ann_ivf_fitted",
+        "ann_ivf_multiprobe",
+        "ann_recall_at_k",
+        "semdedup_prune",
+    ],
+)
+def test_ivf_empty_cell_parity(spark, tmp_path_factory, name):
+    """An IVF cell that loses every member: with vector 1 a copy of
+    vector 0, the two seed centroids tie for every vector, the tie goes
+    to cell 0 and cell 1 empties on both engines. The other cells keep
+    their ids, and every query built on the fitted assignment still
+    matches its oracle."""
+    sf = _ivf_tie_dir(tmp_path_factory)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
+    )
+    cells = {c for (c,) in con.execute(
+        f"SELECT DISTINCT cell FROM ({ORACLES['ann_ivf_kmeans']})"
+    ).fetchall()}
+    assert 0 in cells and 1 not in cells
+
+    sdf = QUERIES[name](spark, sf)
+    got = _rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+    cur = con.execute(ORACLES[name])
+    want = _rows([c[0] for c in cur.description], cur.fetchall())
+    assert len(want) > 0
+    assert got == want, name
+
+
+def _ivf_tie_dir(tmp_path_factory) -> str:
+    """The test scale's embeddings with vector 1's embedding set to
+    vector 0's (written once per session)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.getbasetemp() / "ivf_tie"
+    if not (d / "embeddings.parquet").exists():
+        d.mkdir(exist_ok=True)
+        t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+        emb = t.column("embedding").to_pylist()
+        emb[1] = emb[0]
+        t = t.set_column(
+            t.schema.get_field_index("embedding"),
+            "embedding",
+            pa.array(emb, t.schema.field("embedding").type),
+        )
+        pq.write_table(t, d / "embeddings.parquet")
+    return str(d)

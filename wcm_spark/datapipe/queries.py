@@ -10,8 +10,16 @@ so both engines compute on identical rows with zero side channels.
 Most query bodies are written once as dialect-templated SQL: the Spark
 side renders with ``parquet.`path``` table refs and Spark function names,
 the DuckDB side with plain view names — this guarantees the two texts
-express the same computation. Engine-native operators that SQL cannot
-express (the crawl loop itself, image decode, scrape) register Spark-only
+express the same computation. Each text and vector rule the two engines
+must agree on (the tokenizer, adjacent n-gram windows, passage chunks,
+exploded rows, set-Jaccard verify, cosine, hyperplanes) has ONE
+definition here: a SQL fragment rendering both dialects and, where the
+DataFrame paths need it, a Column or frame helper.
+
+Builders listed in ``_SPARK_OVERRIDES`` are DuckDB-only oracles: Spark
+runs the override, so those builders render the DuckDB text and must not
+be rendered for Spark. Engine-native operators that SQL cannot express
+(the crawl loop itself, image decode, scrape) register Spark-only
 callables; the driver records a weaker rows-only check for those.
 
 Float columns are rounded to 4 decimals on BOTH sides: cross-engine sums
@@ -153,8 +161,47 @@ def _frontier_cte(d: str, sf_dir: str | None) -> str:
 )"""
 
 
-def _tokens_cte(d: str, sf_dir: str | None) -> str:
+#: THE tokenizer rule of every text query: lowercase, split on runs of
+#: anything outside [a-z0-9], drop the empty pieces. Stated once here and
+#: rendered by _tokens_sql (both SQL dialects) and _tokens_col (DataFrame).
+_TOKEN_SPLIT = "[^a-z0-9]+"
+
+
+def _tokens_sql(d: str, col: str = "text") -> str:
+    """The token array of ``col`` in dialect ``d``."""
     f = _fn(d)
+    return f"{f['LFILTER']}({f['SPLIT']}(lower({col}), '{_TOKEN_SPLIT}'), x -> x != '')"
+
+
+def _tokens_col(col: str = "text"):
+    """The token array of ``col`` as a Column — the _tokens_sql rule."""
+    from pyspark.sql import functions as F
+
+    return F.filter(F.split(F.lower(col), _TOKEN_SPLIT), lambda x: x != "")
+
+
+def _adjacent_grams(d: str, n: int) -> str:
+    """Per-doc array of the space-joined adjacent ``n``-token windows of
+    ``tokens`` (1-indexed in both engines; empty for docs shorter than
+    ``n`` — the _seq1 guard on the Spark side)."""
+    idx = ["i"] + [f"i + {k}" for k in range(1, n)]
+    if d == "spark":
+        parts = ", ' ', ".join(f"element_at(tokens, {i})" for i in idx)
+        return f"transform({_seq1(f'size(tokens) - {n - 1}')}, i -> concat({parts}))"
+    parts = " || ' ' || ".join(f"list_extract(tokens, {i})" for i in idx)
+    return f"[{parts} for i in generate_series(1, greatest(len(tokens) - {n - 1}, 0))]"
+
+
+def _unnest(d: str, src: str, arr: str, out: str, keep: str = "doc_id") -> str:
+    """``SELECT keep, out`` with one row per element ``out`` of the array
+    column ``arr`` of ``src``."""
+    pre = f"{keep}, " if keep else ""
+    if d == "spark":
+        return f"SELECT {pre}{out} FROM {src} LATERAL VIEW explode({arr}) x AS {out}"
+    return f"SELECT {pre}unnest({arr}) AS {out} FROM {src}"
+
+
+def _tokens_cte(d: str, sf_dir: str | None) -> str:
     if d == "spark":
         # the documents table is one small parquet split; without an
         # exchange BELOW the tokenize projection the whole CPU-bound
@@ -170,30 +217,18 @@ def _tokens_cte(d: str, sf_dir: str | None) -> str:
         src = _tbl("documents", d, sf_dir)
     return f"""toks AS (
   SELECT doc_id,
-         {f['LFILTER']}({f['SPLIT']}(lower(text), '[^a-z0-9]+'), x -> x != '') AS tokens
+         {_tokens_sql(d)} AS tokens
   FROM {src}
 )"""
 
 
-def _shingles_cte(d: str, sf_dir: str | None, n: int = 3) -> str:
-    """3-gram word shingles (1-indexed in both engines). Shingling is the
-    scale move for near-dup: shingle doc-frequency is low, so the
-    candidate self-join never skews the way unigram tokens do."""
-    if d == "spark":
-        gram = (
-            f"transform({_seq1('size(tokens) - 2')}, "
-            "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1), "
-            "' ', element_at(tokens, i + 2)))"
-        )
-    else:
-        gram = (
-            "[list_extract(tokens, i) || ' ' || list_extract(tokens, i + 1) || "
-            "' ' || list_extract(tokens, i + 2) "
-            "for i in generate_series(1, greatest(len(tokens) - 2, 0))]"
-        )
+def _shingles_cte(d: str, sf_dir: str | None) -> str:
+    """3-gram word shingles. Shingling is the scale move for near-dup:
+    shingle doc-frequency is low, so the candidate self-join never skews
+    the way unigram tokens do."""
     return f"""{_tokens_cte(d, sf_dir)},
 shingled AS (
-  SELECT doc_id, {gram} AS shingles FROM toks
+  SELECT doc_id, {_adjacent_grams(d, 3)} AS shingles FROM toks
 )"""
 
 
@@ -879,8 +914,7 @@ def _q_asof(d, sf):
     engine's union+window operator (operators/temporal.py::asof_join),
     which plans with NO join node at all. Fixture has no (user, ts)
     collisions (verified at every SF), so tie rules cannot diverge."""
-    if d == "duck":
-        return """WITH clicks AS (
+    return """WITH clicks AS (
   SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
 ),
 views AS (
@@ -890,25 +924,6 @@ SELECT c.event_id AS event_id, c.user_id AS user_id,
        v.event_id AS view_event_id, v.value AS view_value
 FROM clicks c ASOF LEFT JOIN views v
   ON c.user_id = v.user_id AND c.ts >= v.ts"""
-    # declarative (slow-path) form for reference only: the registered
-    # Spark callable is _asof_spark, which never runs this SQL — a naive
-    # inequality join in Spark plans as a nested loop, the exact
-    # anti-pattern asof_join exists to avoid
-    return f"""WITH clicks AS (
-  SELECT event_id, user_id, ts FROM {_tbl('events', d, sf)} WHERE event_type = 'click'
-),
-views AS (
-  SELECT event_id, user_id, ts, value FROM {_tbl('events', d, sf)} WHERE event_type = 'view'
-),
-ranked AS (
-  SELECT c.event_id AS event_id, c.user_id AS user_id,
-         v.event_id AS view_event_id, v.value AS view_value,
-         row_number() OVER (PARTITION BY c.event_id
-                            ORDER BY v.ts DESC, v.event_id DESC) AS rn
-  FROM clicks c LEFT JOIN views v
-    ON v.user_id = c.user_id AND v.ts <= c.ts
-)
-SELECT event_id, user_id, view_event_id, view_value FROM ranked WHERE rn = 1"""
 
 
 @register("events_asof_forward")
@@ -1193,10 +1208,6 @@ def _minhash_chain_ctes(d, sf, shingles_cte: str | None = None) -> str:
     once. ``shingles_cte`` swaps the anchor: any CTE text providing the
     ``shingled(doc_id, shingles)`` contract (default: 3-gram document
     shingles). Unused CTEs are pruned by both engines."""
-    if d == "spark":
-        tok_rows = "SELECT doc_id, tok FROM shingled LATERAL VIEW explode(shingles) x AS tok"
-    else:
-        tok_rows = "SELECT doc_id, unnest(shingles) AS tok FROM shingled"
     bands = ",\n       ".join(
         f"md5(mh{2*i} || mh{2*i+1}) AS band{i}" for i in range(4)
     )
@@ -1205,7 +1216,7 @@ def _minhash_chain_ctes(d, sf, shingles_cte: str | None = None) -> str:
         for i in range(4)
     )
     return f"""{shingles_cte or _shingles_cte(d, sf)},
-tok_rows AS ({tok_rows}),
+tok_rows AS ({_unnest(d, "shingled", "shingles", "tok")}),
 tok_set AS (SELECT DISTINCT doc_id, tok FROM tok_rows),
 sizes AS (SELECT doc_id, count(*) AS n FROM tok_set GROUP BY doc_id),
 tok_hashed AS ({_MINHASH_HASHED}),
@@ -1279,30 +1290,16 @@ SELECT doc_a, doc_b, jaccard FROM (
 @register("dedup_simhash")
 def _q_simhash(d, sf):
     """SimHash (16-bit, md5-derived token hashes): majority vote per bit."""
-    f = _fn(d)
-    if d == "spark":
-        tok_rows = "SELECT doc_id, tok FROM toks LATERAL VIEW explode(tokens) x AS tok"
-        bit_rows = (
-            "SELECT doc_id, tok_hash, bit FROM hashed "
-            "LATERAL VIEW explode(sequence(0, 15)) x AS bit"
-        )
-        shift = "shiftright(tok_hash, bit)"
-    else:
-        tok_rows = "SELECT doc_id, unnest(tokens) AS tok FROM toks"
-        bit_rows = (
-            "SELECT doc_id, tok_hash, unnest(range(16)) AS bit FROM hashed"
-        )
-        shift = "(tok_hash >> CAST(bit AS INT))"
     return f"""WITH {_tokens_cte(d, sf)},
-tok_rows AS ({tok_rows}),
+tok_rows AS ({_tok_rows(d)}),
 hashed AS (
   SELECT doc_id, {_hex2int("substr(md5(tok), 1, 8)", d)} AS tok_hash
   FROM (SELECT DISTINCT doc_id, tok FROM tok_rows) t
 ),
-bits AS ({bit_rows}),
+bits AS (SELECT doc_id, tok_hash, unnest(range(16)) AS bit FROM hashed),
 votes AS (
   SELECT doc_id, bit,
-         sum(CASE WHEN {shift} % 2 = 1 THEN 1 ELSE -1 END) AS vote
+         sum(CASE WHEN (tok_hash >> CAST(bit AS INT)) % 2 = 1 THEN 1 ELSE -1 END) AS vote
   FROM bits GROUP BY doc_id, bit
 )
 SELECT doc_id,
@@ -1314,21 +1311,10 @@ FROM votes GROUP BY doc_id"""
 def _q_ann(d, sf):
     """Similarity search baseline: brute-force cosine top-5 per query vector
     (query set = vec_id < 3), exact, engine-portable double math."""
-    if d == "spark":
-        dot = (
-            "aggregate(zip_with(q.embedding, c.embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        norm_q = "sqrt(aggregate(q.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        norm_c = "sqrt(aggregate(c.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        dot = "list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))"
-        norm_q = "sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
-        norm_c = "sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))"
     emb = _tbl("embeddings", d, sf)
     return f"""WITH scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         round({dot} / ({norm_q} * {norm_c}), 4) AS cosine
+         round({_cos_sql('q.embedding', 'c.embedding')}, 4) AS cosine
   FROM {emb} q JOIN {emb} c ON q.vec_id < 3 AND c.vec_id != q.vec_id
 )
 SELECT query_id, cand_id, cosine FROM (
@@ -1352,40 +1338,11 @@ def _q_neardup(d, sf, min_cosine: float = 0.9):
     within-label pair join. Candidate recall at the gate: a cos=0.9 pair
     shares >=1 band with ~97% probability; both dialects express the
     identical restriction so the oracle compare stays exact."""
-    f = _fn(d)
-    sign = (
-        "CASE WHEN "
-        + _hex2int(
-            f"substr(md5('nd' || CAST(p AS {f['STR']}) || '_' || CAST(dim AS {f['STR']})), 1, 4)", d
-        )
-        + " % 2 = 0 THEN 1.0 ELSE -1.0 END"
-    )
-    if d == "spark":
-        planes = f"SELECT id AS p, dim, {sign} AS s FROM range(16) LATERAL VIEW explode(sequence(0, 63)) x AS dim"
-        elems = (
-            "SELECT vec_id, label, dim, CAST(x AS DOUBLE) AS x FROM "
-            f"{_tbl('embeddings', d, sf)} LATERAL VIEW posexplode(embedding) t AS dim, x"
-        )
-        dot = (
-            "aggregate(zip_with(a.embedding, b.embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        na = "sqrt(aggregate(a.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        nb = "sqrt(aggregate(b.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        planes = f"SELECT t1.range AS p, t2.range AS dim, {sign} AS s FROM range(16) t1, range(64) t2"
-        elems = (
-            "SELECT vec_id, label, generate_subscripts(embedding, 1) - 1 AS dim, "
-            f"CAST(unnest(embedding) AS DOUBLE) AS x FROM {_tbl('embeddings', d, sf)}"
-        )
-        dot = "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-        na = "sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
-        nb = "sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))"
     emb = _tbl("embeddings", d, sf)
     # cosine computed once in the inner select (evaluating the 64-element
     # aggregate in both SELECT and WHERE doubles the work — no CSE there)
-    return f"""WITH planes AS ({planes}),
-elems AS ({elems}),
+    return f"""WITH planes AS ({_planes_sql('nd', 16)}),
+elems AS ({_elems_sql(d, sf, "vec_id, label")}),
 proj AS (
   SELECT e.vec_id, e.label, pl.p, round(sum(pl.s * e.x), 6) AS pr
   FROM elems e JOIN planes pl ON pl.dim = e.dim
@@ -1404,7 +1361,7 @@ cand AS (
 )
 SELECT vec_a, vec_b, label, cosine FROM (
   SELECT c.vec_a, c.vec_b, a.label,
-         round({dot} / ({na} * {nb}), 4) AS cosine
+         round({_cos_sql('a.embedding', 'b.embedding')}, 4) AS cosine
   FROM cand c
   JOIN {emb} a ON a.vec_id = c.vec_a
   JOIN {emb} b ON b.vec_id = c.vec_b
@@ -1423,38 +1380,9 @@ def _q_ann_lsh(d, sf, min_cosine: float = 0.9):
     SYNTHETIC_GATES). At scale the bucket join replaces the O(n^2)
     brute-force pair join of ann_cosine_topk: candidates shuffle by
     bucket id only."""
-    f = _fn(d)
-    sign = (
-        "CASE WHEN "
-        + _hex2int(
-            f"substr(md5('pl' || CAST(p AS {f['STR']}) || '_' || CAST(dim AS {f['STR']})), 1, 4)", d
-        )
-        + " % 2 = 0 THEN 1.0 ELSE -1.0 END"
-    )
-    if d == "spark":
-        planes = f"SELECT id AS p, dim, {sign} AS s FROM range(8) LATERAL VIEW explode(sequence(0, 63)) x AS dim"
-        elems = (
-            "SELECT vec_id, dim, CAST(x AS DOUBLE) AS x FROM "
-            f"{_tbl('embeddings', d, sf)} LATERAL VIEW posexplode(embedding) t AS dim, x"
-        )
-        dot = (
-            "aggregate(zip_with(a.embedding, b.embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        na = "sqrt(aggregate(a.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        nb = "sqrt(aggregate(b.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        planes = f"SELECT t1.range AS p, t2.range AS dim, {sign} AS s FROM range(8) t1, range(64) t2"
-        elems = (
-            "SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS dim, "
-            f"CAST(unnest(embedding) AS DOUBLE) AS x FROM {_tbl('embeddings', d, sf)}"
-        )
-        dot = "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-        na = "sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
-        nb = "sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))"
     emb = _tbl("embeddings", d, sf)
-    return f"""WITH planes AS ({planes}),
-elems AS ({elems}),
+    return f"""WITH planes AS ({_planes_sql('pl', 8)}),
+elems AS ({_elems_sql(d, sf)}),
 proj AS (
   SELECT e.vec_id, pl.p, round(sum(pl.s * e.x), 6) AS pr
   FROM elems e JOIN planes pl ON pl.dim = e.dim
@@ -1467,7 +1395,7 @@ bucketed AS (
 )
 SELECT vec_a, vec_b, bucket, cosine FROM (
   SELECT ba.vec_id AS vec_a, bb.vec_id AS vec_b, ba.bucket,
-         round({dot} / ({na} * {nb}), 4) AS cosine
+         round({_cos_sql('a.embedding', 'b.embedding')}, 4) AS cosine
   FROM bucketed ba
   JOIN bucketed bb ON ba.bucket = bb.bucket AND ba.vec_id < bb.vec_id
   JOIN {emb} a ON a.vec_id = ba.vec_id
@@ -1484,17 +1412,7 @@ def _phash_pair_ctes(d, sf, max_hamming: int) -> str:
     only. Hamming is computed in row form (count of differing sign bits
     over the candidate join) — no 2^63 bigint overflow, no
     engine-specific popcount."""
-    if d == "spark":
-        elems = (
-            "SELECT vec_id, dim, CAST(x AS DOUBLE) AS x FROM "
-            f"{_tbl('embeddings', d, sf)} LATERAL VIEW posexplode(embedding) t AS dim, x"
-        )
-    else:
-        elems = (
-            "SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS dim, "
-            f"CAST(unnest(embedding) AS DOUBLE) AS x FROM {_tbl('embeddings', d, sf)}"
-        )
-    return f"""elems AS ({elems}),
+    return f"""elems AS ({_elems_sql(d, sf)}),
 bandsig AS (
   SELECT vec_id, CAST(floor(dim / 16) AS INT) AS band_no,
          CAST(sum(CASE WHEN x > 0 THEN power(2, dim % 16) ELSE 0 END) AS BIGINT) AS sig
@@ -1554,11 +1472,10 @@ def _q_phash_clusters(d, sf, max_hamming: int = 8, iters: int = PHASH_CC_ITERS):
     runs operators/graph.connected_components; this SQL form is the
     independent DuckDB oracle (MATERIALIZED so each unrolled hop reuses
     the LSH chain instead of re-running it)."""
-    mat = "MATERIALIZED " if d == "duck" else ""
     steps = []
     for k in range(1, iters + 1):
         steps.append(f""",
-plbl_{k} AS {mat}(
+plbl_{k} AS MATERIALIZED (
   SELECT l.vec_id,
          least(l.component, coalesce(min(n.component), l.component)) AS component
   FROM plbl_{k - 1} l
@@ -1567,7 +1484,7 @@ plbl_{k} AS {mat}(
   GROUP BY l.vec_id, l.component
 )""")
     return f"""WITH {_phash_pair_ctes(d, sf, max_hamming)},
-pund AS {mat}(
+pund AS MATERIALIZED (
   SELECT vec_a AS a, vec_b AS b FROM phash_pairs
   UNION
   SELECT vec_b, vec_a FROM phash_pairs
@@ -1650,12 +1567,11 @@ def _image_keep_ctes(d: str, max_hamming: int, iters: int) -> str:
     kept_caption_toks)`` and ``ikeep(cluster_id, kept_image_id)`` —
     shared by image_cluster_caption_pick and image_curation_pipeline so
     the keep policy has ONE definition."""
-    mat = "MATERIALIZED " if d == "duck" else ""
     f = _fn(d)
     steps = []
     for k in range(1, iters + 1):
         steps.append(f""",
-ilbl_{k} AS {mat}(
+ilbl_{k} AS MATERIALIZED (
   SELECT l.image_id,
          least(l.component, coalesce(min(n.component), l.component)) AS component
   FROM ilbl_{k - 1} l
@@ -1668,7 +1584,7 @@ ilbl_{k} AS {mat}(
         f"(coalesce(t.caption, ''), ' '), x -> x != '')) AS BIGINT)"
     )
     return f"""{_image_pair_ctes(d, max_hamming)},
-iund AS {mat}(
+iund AS MATERIALIZED (
   SELECT ia AS a, ib AS b FROM ipairs
   UNION
   SELECT ib, ia FROM ipairs
@@ -1969,23 +1885,8 @@ def _q_ann_ivf_fitted(d, sf):
     query touches one inverted list), never the O(n^2) pair space; the
     fit itself is the hash-aggregate chain documented on
     ann_ivf_kmeans."""
-    if d == "spark":
-        def dot(a, b):
-            return (
-                f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-            )
-
-        def norm(a):
-            return f"sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        def dot(a, b):
-            return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
-        def norm(a):
-            return f"sqrt(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
     emb = _tbl("embeddings", d, sf)
-    cos_qx = f"{dot('q.embedding', 'x.embedding')} / ({norm('q.embedding')} * {norm('x.embedding')})"
+    cos_qx = _cos_sql("q.embedding", "x.embedding")
     return f"""WITH {_ivf_kmeans_ctes(d, sf)}
 SELECT query_id, cand_id, cosine FROM (
   SELECT q.vec_id AS query_id, x.vec_id AS cand_id,
@@ -2013,23 +1914,8 @@ def _q_ann_ivf_multiprobe(d, sf, probes: int = 2):
     linearly with ``probes`` (each query touches ``probes`` inverted
     lists) while recall approaches the exhaustive ann_cosine_topk; the
     query->centroid ranking itself is k*dim, broadcast-trivial."""
-    if d == "spark":
-        def dot(a, b):
-            return (
-                f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-            )
-
-        def norm(a):
-            return f"sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        def dot(a, b):
-            return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
-        def norm(a):
-            return f"sqrt(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
     emb = _tbl("embeddings", d, sf)
-    cos_qx = f"{dot('q.embedding', 'x.embedding')} / ({norm('q.embedding')} * {norm('x.embedding')})"
+    cos_qx = _cos_sql("q.embedding", "x.embedding")
     return f"""WITH {_ivf_kmeans_ctes(d, sf)},
 qcells AS (
   SELECT vec_id, cell FROM (
@@ -2077,26 +1963,8 @@ def _q_semdedup(d, sf, min_cosine: float = 0.9):
     synthetic gate override (near-orthogonal fixture embeddings) is
     documented at SYNTHETIC_GATES; production default 0.9 per the
     paper's dedup operating range."""
-    if d == "spark":
-        def dot(a, b):
-            return (
-                f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-            )
-
-        def norm(a):
-            return f"sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        def dot(a, b):
-            return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
-        def norm(a):
-            return f"sqrt(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
     emb = _tbl("embeddings", d, sf)
-    cos_ab = (
-        f"{dot('va.embedding', 'vb.embedding')} / "
-        f"({norm('va.embedding')} * {norm('vb.embedding')})"
-    )
+    cos_ab = _cos_sql("va.embedding", "vb.embedding")
     return f"""WITH {_ivf_kmeans_ctes(d, sf)},
 dups AS (
   SELECT aa.vec_id, count(*) AS n_dups
@@ -2127,42 +1995,12 @@ def _q_ann_recall(d, sf):
     that validates their plans: at 100 TB you tune n_cells / n_planes by
     exactly this query over a sampled query set, with ground truth from
     the (sampled) exact baseline."""
-    f = _fn(d)
-    if d == "spark":
-        dot = (
-            "aggregate(zip_with(q.embedding, c.embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        norm_q = "sqrt(aggregate(q.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        norm_c = "sqrt(aggregate(c.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        dot_qx = (
-            "aggregate(zip_with(q.embedding, x.embedding, (x1, y1) -> CAST(x1 AS DOUBLE) * CAST(y1 AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        norm_x = "sqrt(aggregate(x.embedding, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        dot = "list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))"
-        norm_q = "sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
-        norm_c = "sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))"
-        dot_qx = "list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(x.embedding AS DOUBLE[]))"
-        norm_x = "sqrt(list_dot_product(CAST(x.embedding AS DOUBLE[]), CAST(x.embedding AS DOUBLE[])))"
-    sign = (
-        "CASE WHEN "
-        + _hex2int(
-            f"substr(md5('pl' || CAST(p AS {f['STR']}) || '_' || CAST(dim AS {f['STR']})), 1, 4)", d
-        )
-        + " % 2 = 0 THEN 1.0 ELSE -1.0 END"
-    )
-    if d == "spark":
-        planes = f"SELECT id AS p, dim, {sign} AS s FROM range(8) LATERAL VIEW explode(sequence(0, 63)) x AS dim"
-    else:
-        planes = f"SELECT t1.range AS p, t2.range AS dim, {sign} AS s FROM range(8) t1, range(64) t2"
     emb = _tbl("embeddings", d, sf)
-    cos_qx = f"{dot_qx} / ({norm_q} * {norm_x})"
+    cos_qx = _cos_sql("q.embedding", "x.embedding")
     # elems/vnorm/final_asg come from the shared IVF fit chain; the LSH
     # bucketing reuses the SAME exploded elems rows
     return f"""WITH {_ivf_kmeans_ctes(d, sf)},
-planes AS ({planes}),
+planes AS ({_planes_sql('pl', 8)}),
 proj AS (
   SELECT e.vec_id, pl.p, round(sum(pl.s * e.x), 6) AS pr
   FROM elems e JOIN planes pl ON pl.dim = e.dim
@@ -2178,7 +2016,7 @@ exact3 AS (
     SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
            row_number() OVER (
              PARTITION BY q.vec_id
-             ORDER BY round({dot} / ({norm_q} * {norm_c}), 6) DESC, c.vec_id
+             ORDER BY round({_cos_sql('q.embedding', 'c.embedding')}, 6) DESC, c.vec_id
            ) AS rk
     FROM {emb} q JOIN {emb} c ON q.vec_id < 3 AND c.vec_id != q.vec_id
   ) t WHERE rk <= 3
@@ -2227,22 +2065,9 @@ def _q_ann_ivf(d, sf):
     assigned to its max-cosine centroid; queries (vec_id < 3) probe ONLY
     their own cell — the candidate join shuffles on cell id, never the
     full O(n^2) pair space."""
-    if d == "spark":
-        def dot(a, b):
-            return (
-                f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-            )
-        def norm(a):
-            return f"sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    else:
-        def dot(a, b):
-            return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-        def norm(a):
-            return f"sqrt(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
     emb = _tbl("embeddings", d, sf)
-    cos_vc = f"{dot('v.embedding', 'c.embedding')} / ({norm('v.embedding')} * {norm('c.embedding')})"
-    cos_qx = f"{dot('q.embedding', 'x.embedding')} / ({norm('q.embedding')} * {norm('x.embedding')})"
+    cos_vc = _cos_sql("v.embedding", "c.embedding")
+    cos_qx = _cos_sql("q.embedding", "x.embedding")
     return f"""WITH centroids AS (
   SELECT vec_id AS cell, embedding FROM {emb} WHERE vec_id < 8
 ),
@@ -2270,17 +2095,43 @@ SELECT query_id, cand_id, cosine FROM (
 ) t WHERE rk <= 3"""
 
 
-def _elems_sql(d, sf):
-    """(vec_id, dim, x) exploded view of the embeddings table — the shared
-    long-form input of the kmeans/PQ fit chains."""
+def _elems_sql(d, sf, keys: str = "vec_id"):
+    """(keys, dim, x) exploded view of the embeddings table — the shared
+    long-form input of the kmeans/PQ fit chains and the hyperplane/phash
+    projections."""
     if d == "spark":
         return (
-            "SELECT vec_id, dim, CAST(x AS DOUBLE) AS x FROM "
+            f"SELECT {keys}, dim, CAST(x AS DOUBLE) AS x FROM "
             f"{_tbl('embeddings', d, sf)} LATERAL VIEW posexplode(embedding) t AS dim, x"
         )
     return (
-        "SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS dim, "
+        f"SELECT {keys}, generate_subscripts(embedding, 1) - 1 AS dim, "
         f"CAST(unnest(embedding) AS DOUBLE) AS x FROM {_tbl('embeddings', d, sf)}"
+    )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """Cosine of two embedding arrays in the DuckDB oracles (the engine
+    paths fold the same doubles with _dot_expr / _norm_expr)."""
+
+    def dot(x, y):
+        return f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
+
+    return f"{dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)}))"
+
+
+def _planes_sql(seed: str, n: int) -> str:
+    """``(p, dim, s)`` rows of ``n`` deterministic ±1 hyperplanes over the
+    64 dims: s is the parity of the first 4 hex digits of
+    md5('<seed>' || p || '_' || dim) — the DuckDB oracle form of
+    _hyperplane_prs_col."""
+    h = _hex2int(
+        f"substr(md5('{seed}' || CAST(p AS VARCHAR) || '_' || CAST(dim AS VARCHAR)), 1, 4)",
+        "duck",
+    )
+    return (
+        f"SELECT t1.range AS p, t2.range AS dim, CASE WHEN {h} % 2 = 0 "
+        f"THEN 1.0 ELSE -1.0 END AS s FROM range({n}) t1, range(64) t2"
     )
 
 
@@ -2645,15 +2496,25 @@ ORDER BY vec_id"""
 _STOPWORD_RAW = r"\b(the|a|an|and|or|of|to|in|is|it)\b"
 
 
+def _doc_counts(d: str) -> tuple[str, str]:
+    """(stop_hits, n_tokens): the per-doc stopword-hit and token counts
+    the language and quality heuristics share."""
+    f = _fn(d)
+    return (
+        f"CAST({f['LEN']}(regexp_extract_all(lower(text), {_rx(_STOPWORD_RAW, d)}, 1)) AS BIGINT)",
+        f"CAST({f['LEN']}({_tokens_sql(d)}) AS BIGINT)",
+    )
+
+
 @register("lang_id_heuristic")
 def _q_langid(d, sf):
     """Language-ID heuristic: stopword density + vowel-run profile (the
     deterministic n-gram-ish scorer; both engines compute the same rule)."""
-    f = _fn(d)
+    stop_hits, n_tokens = _doc_counts(d)
     return f"""WITH feat AS (
   SELECT doc_id, lang,
-    CAST({f['LEN']}(regexp_extract_all(lower(text), {_rx(_STOPWORD_RAW, d)}, 1)) AS BIGINT) AS stop_hits,
-    CAST({f['LEN']}({f['LFILTER']}({f['SPLIT']}(lower(text), '[^a-z0-9]+'), x -> x != '')) AS BIGINT) AS n_tokens
+    {stop_hits} AS stop_hits,
+    {n_tokens} AS n_tokens
   FROM {_tbl('documents', d, sf)}
 )
 SELECT doc_id, lang,
@@ -2669,11 +2530,12 @@ def _quality_feat_cte(d, sf) -> str:
     the per-doc quality features shared by quality_score and
     corpus_curation_pipeline (one definition, both gates agree)."""
     f = _fn(d)
+    stop_hits, n_tokens = _doc_counts(d)
     return f"""feat AS (
   SELECT doc_id, n_chars,
     CAST({f['LEN']}(regexp_extract_all(text, '([.!?,;:])', 1)) AS BIGINT) AS punct,
-    CAST({f['LEN']}({f['LFILTER']}({f['SPLIT']}(lower(text), '[^a-z0-9]+'), x -> x != '')) AS BIGINT) AS n_tokens,
-    CAST({f['LEN']}(regexp_extract_all(lower(text), {_rx(_STOPWORD_RAW, d)}, 1)) AS BIGINT) AS stop_hits
+    {n_tokens} AS n_tokens,
+    {stop_hits} AS stop_hits
   FROM {_tbl('documents', d, sf)}
 )"""
 
@@ -2718,11 +2580,12 @@ def _q_stratified(d, sf):
     runs scan-side on every engine. At 100 TB this is the only sampling
     shape that composes with resumable pipelines (rand() does not)."""
     f = _fn(d)
+    stop_hits, n_tokens = _doc_counts(d)
     bucket = _hex2int(f"substr(md5('smp' || CAST(doc_id AS {f['STR']})), 1, 4)", d)
     return f"""WITH feat AS (
   SELECT doc_id, lang, text, n_chars,
-    CAST({f['LEN']}(regexp_extract_all(lower(text), {_rx(_STOPWORD_RAW, d)}, 1)) AS BIGINT) AS stop_hits,
-    CAST({f['LEN']}({f['LFILTER']}({f['SPLIT']}(lower(text), '[^a-z0-9]+'), x -> x != '')) AS BIGINT) AS n_tokens
+    {stop_hits} AS stop_hits,
+    {n_tokens} AS n_tokens
   FROM {_tbl('documents', d, sf)}
 ),
 labeled AS (
@@ -2745,11 +2608,11 @@ def _q_topk_quality(d, sf):
     the quality score. Window rank inside each language stratum — the
     shuffle keys on the stratum, each group sorts locally, no global
     sort; k caps the output so downstream stages see a bounded set."""
-    f = _fn(d)
+    stop_hits, n_tokens = _doc_counts(d)
     return f"""WITH feat AS (
   SELECT doc_id, n_chars,
-    CAST({f['LEN']}({f['LFILTER']}({f['SPLIT']}(lower(text), '[^a-z0-9]+'), x -> x != '')) AS BIGINT) AS n_tokens,
-    CAST({f['LEN']}(regexp_extract_all(lower(text), {_rx(_STOPWORD_RAW, d)}, 1)) AS BIGINT) AS stop_hits
+    {n_tokens} AS n_tokens,
+    {stop_hits} AS stop_hits
   FROM {_tbl('documents', d, sf)}
 ),
 scored AS (
@@ -2777,9 +2640,10 @@ SELECT stratum, doc_id, quality FROM (
 def _q_fingerprint(d, sf):
     """Document fingerprint: md5 over whitespace-normalized lowercase text
     + a coarse 16-bit locality bucket from the fingerprint prefix."""
+    fp = f"md5(regexp_replace(lower(text), '{_TOKEN_SPLIT}', ' '))"
     return f"""SELECT doc_id,
-  md5(regexp_replace(lower(text), '[^a-z0-9]+', ' ')) AS fingerprint,
-  {_hex2int("substr(md5(regexp_replace(lower(text), '[^a-z0-9]+', ' ')), 1, 4)", d)} AS bucket
+  {fp} AS fingerprint,
+  {_hex2int(f"substr({fp}, 1, 4)", d)} AS bucket
 FROM {_tbl('documents', d, sf)}"""
 
 
@@ -2838,10 +2702,53 @@ GROUP BY {bucket}"""
 
 
 def _tok_rows(d: str) -> str:
-    """Exploded (doc_id, tok) rows from the toks CTE, dialect-split."""
+    """Exploded (doc_id, tok) rows from the toks CTE."""
+    return _unnest(d, "toks", "tokens", "tok")
+
+
+def _passage_ctes(d: str, sf, chunk: int, with_text: bool) -> str:
+    """``toks`` + ``chunked(doc_id, chunklist)`` (each doc's consecutive
+    ``chunk``-token passages, space-joined) + ``chunk_rows(doc_id, pos,
+    [c,] h)``: one row per passage with its 0-based position, its text
+    when ``with_text``, and its md5."""
     if d == "spark":
-        return "SELECT doc_id, tok FROM toks LATERAL VIEW explode(tokens) x AS tok"
-    return "SELECT doc_id, unnest(tokens) AS tok FROM toks"
+        chunks = (
+            f"transform({_seq1(f'CAST(floor(size(tokens) / {chunk}) AS INT)')}, "
+            f"i -> concat_ws(' ', slice(tokens, (i - 1) * {chunk} + 1, {chunk})))"
+        )
+        chunk_rows = (
+            f"SELECT doc_id, pos, {'c, ' if with_text else ''}md5(c) AS h FROM "
+            "(SELECT doc_id, chunklist FROM chunked) t "
+            "LATERAL VIEW posexplode(chunklist) x AS pos, c"
+        )
+    else:
+        chunks = (
+            f"[array_to_string(list_slice(tokens, (i - 1) * {chunk} + 1, i * {chunk}), ' ') "
+            f"for i in generate_series(1, CAST(floor(len(tokens) / {chunk}) AS INT))]"
+        )
+        chunk_rows = (
+            "SELECT doc_id, generate_subscripts(chunklist, 1) - 1 AS pos, "
+            f"{'unnest(chunklist) AS c, ' if with_text else ''}"
+            "md5(unnest(chunklist)) AS h FROM chunked"
+        )
+    return f"""{_tokens_cte(d, sf)},
+chunked AS (SELECT doc_id, {chunks} AS chunklist FROM toks),
+chunk_rows AS ({chunk_rows})"""
+
+
+def _kept_digest(d: str, kept: str) -> str:
+    """md5 of a doc's passages ``c`` for which ``kept`` holds, re-joined
+    in ``pos`` order — an aggregate over the doc's rows."""
+    if d == "spark":
+        # ordered reassembly without a window: sort the per-doc kept
+        # chunks inside the aggregate (collect_list skips the NULLs the
+        # CASE leaves for dropped passages)
+        return (
+            "md5(concat_ws(' ', transform(array_sort("
+            f"collect_list(CASE WHEN {kept} THEN named_struct('pos', pos, 'c', c) END)), "
+            "s -> s.c)))"
+        )
+    return f"md5(coalesce(string_agg(CASE WHEN {kept} THEN c END, ' ' ORDER BY pos), ''))"
 
 
 @register("passage_dedup_rate")
@@ -2862,28 +2769,7 @@ def _q_passage_dedup(d, sf, chunk: int = 10):
     ``chunk=10`` is the real operating point; the registry overrides to
     3 on the synthetic word-soup fixtures (SYNTHETIC_GATES) where
     10-token windows never repeat."""
-    if d == "spark":
-        chunks = (
-            f"transform({_seq1(f'CAST(floor(size(tokens) / {chunk}) AS INT)')}, "
-            f"i -> concat_ws(' ', slice(tokens, (i - 1) * {chunk} + 1, {chunk})))"
-        )
-        chunk_rows = (
-            "SELECT doc_id, pos, md5(c) AS h FROM "
-            "(SELECT doc_id, chunklist FROM chunked) t "
-            "LATERAL VIEW posexplode(chunklist) x AS pos, c"
-        )
-    else:
-        chunks = (
-            f"[array_to_string(list_slice(tokens, (i - 1) * {chunk} + 1, i * {chunk}), ' ') "
-            f"for i in generate_series(1, CAST(floor(len(tokens) / {chunk}) AS INT))]"
-        )
-        chunk_rows = (
-            "SELECT doc_id, generate_subscripts(chunklist, 1) - 1 AS pos, "
-            "md5(unnest(chunklist)) AS h FROM chunked"
-        )
-    return f"""WITH {_tokens_cte(d, sf)},
-chunked AS (SELECT doc_id, {chunks} AS chunklist FROM toks),
-chunk_rows AS ({chunk_rows}),
+    return f"""WITH {_passage_ctes(d, sf, chunk, with_text=False)},
 packed AS (
   SELECT doc_id, h, doc_id * 1000000 + pos AS pk FROM chunk_rows
 ),
@@ -2915,39 +2801,7 @@ def _q_passage_scrub(d, sf, chunk: int = 10):
     per-doc reassembly aggregate (sort of ≤n_passages kept chunks), so
     partition order never matters. ``chunk=10`` is the real operating
     point; SYNTHETIC_GATES overrides to 3 on the word-soup fixtures."""
-    if d == "spark":
-        chunks = (
-            f"transform({_seq1(f'CAST(floor(size(tokens) / {chunk}) AS INT)')}, "
-            f"i -> concat_ws(' ', slice(tokens, (i - 1) * {chunk} + 1, {chunk})))"
-        )
-        chunk_rows = (
-            "SELECT doc_id, pos, c, md5(c) AS h FROM "
-            "(SELECT doc_id, chunklist FROM chunked) t "
-            "LATERAL VIEW posexplode(chunklist) x AS pos, c"
-        )
-        # ordered reassembly without a window: sort the per-doc kept
-        # chunks inside the aggregate (collect_list skips the NULLs the
-        # CASE leaves for dropped passages)
-        digest = (
-            "md5(concat_ws(' ', transform(array_sort("
-            "collect_list(CASE WHEN kept THEN named_struct('pos', pos, 'c', c) END)), "
-            "s -> s.c)))"
-        )
-    else:
-        chunks = (
-            f"[array_to_string(list_slice(tokens, (i - 1) * {chunk} + 1, i * {chunk}), ' ') "
-            f"for i in generate_series(1, CAST(floor(len(tokens) / {chunk}) AS INT))]"
-        )
-        chunk_rows = (
-            "SELECT doc_id, generate_subscripts(chunklist, 1) - 1 AS pos, "
-            "unnest(chunklist) AS c, md5(unnest(chunklist)) AS h FROM chunked"
-        )
-        digest = (
-            "md5(coalesce(string_agg(CASE WHEN kept THEN c END, ' ' ORDER BY pos), ''))"
-        )
-    return f"""WITH {_tokens_cte(d, sf)},
-chunked AS (SELECT doc_id, {chunks} AS chunklist FROM toks),
-chunk_rows AS ({chunk_rows}),
+    return f"""WITH {_passage_ctes(d, sf, chunk, with_text=True)},
 packed AS (
   SELECT doc_id, pos, c, h, doc_id * 1000000 + pos AS pk FROM chunk_rows
 ),
@@ -2959,7 +2813,7 @@ flagged AS (
 SELECT doc_id,
   CAST(count(*) AS BIGINT) AS n_passages,
   CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-  {digest} AS scrub_digest
+  {_kept_digest(d, "kept")} AS scrub_digest
 FROM flagged
 GROUP BY doc_id"""
 
@@ -2986,36 +2840,7 @@ def _q_boilerplate_scrub(d, sf, chunk: int = 10, min_docs: int = 5):
     ``min_docs=5`` is the real operating point; SYNTHETIC_GATES
     overrides to 2/3 on the word-soup fixtures where 10-token windows
     never repeat."""
-    if d == "spark":
-        chunks = (
-            f"transform({_seq1(f'CAST(floor(size(tokens) / {chunk}) AS INT)')}, "
-            f"i -> concat_ws(' ', slice(tokens, (i - 1) * {chunk} + 1, {chunk})))"
-        )
-        chunk_rows = (
-            "SELECT doc_id, pos, c, md5(c) AS h FROM "
-            "(SELECT doc_id, chunklist FROM chunked) t "
-            "LATERAL VIEW posexplode(chunklist) x AS pos, c"
-        )
-        digest = (
-            "md5(concat_ws(' ', transform(array_sort("
-            "collect_list(CASE WHEN NOT boiler THEN named_struct('pos', pos, 'c', c) END)), "
-            "s -> s.c)))"
-        )
-    else:
-        chunks = (
-            f"[array_to_string(list_slice(tokens, (i - 1) * {chunk} + 1, i * {chunk}), ' ') "
-            f"for i in generate_series(1, CAST(floor(len(tokens) / {chunk}) AS INT))]"
-        )
-        chunk_rows = (
-            "SELECT doc_id, generate_subscripts(chunklist, 1) - 1 AS pos, "
-            "unnest(chunklist) AS c, md5(unnest(chunklist)) AS h FROM chunked"
-        )
-        digest = (
-            "md5(coalesce(string_agg(CASE WHEN NOT boiler THEN c END, ' ' ORDER BY pos), ''))"
-        )
-    return f"""WITH {_tokens_cte(d, sf)},
-chunked AS (SELECT doc_id, {chunks} AS chunklist FROM toks),
-chunk_rows AS ({chunk_rows}),
+    return f"""WITH {_passage_ctes(d, sf, chunk, with_text=True)},
 src AS (SELECT doc_id, source FROM {_tbl('documents', d, sf)}),
 joined AS (
   SELECT c.doc_id, s.source, c.pos, c.c, c.h
@@ -3034,7 +2859,7 @@ SELECT doc_id,
   CAST(sum(CASE WHEN boiler THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
   round(CAST(sum(CASE WHEN boiler THEN 1 ELSE 0 END) AS DOUBLE)
         / count(*), 4) AS boiler_frac,
-  {digest} AS scrub_digest
+  {_kept_digest(d, "NOT boiler")} AS scrub_digest
 FROM flagged
 GROUP BY doc_id"""
 
@@ -3166,10 +2991,7 @@ def _q_decontamination(d, sf, n: int = 13):
     pairing anywhere. Fixture override n=3 via SYNTHETIC_GATES (the
     word-soup docs are ~50 tokens; 13-gram overlap is vacuously zero
     there, while 3-gram contamination hits ~35% of docs)."""
-    if d == "spark":
-        gram_rows = "SELECT doc_id, g FROM grams LATERAL VIEW explode(shingles) x AS g"
-    else:
-        gram_rows = "SELECT doc_id, unnest(shingles) AS g FROM grams"
+    gram_rows = _unnest(d, "grams", "shingles", "g")
     return f"""WITH {_ngram_cte(d, sf, n)},
 gram_rows AS (SELECT DISTINCT doc_id, g FROM ({gram_rows}) t),
 eval_grams AS (
@@ -3269,28 +3091,11 @@ def _caption_shingles_cte(d: str) -> str:
     anchors on (doc_id := image_id). Bigrams, not the document family's
     3-grams: captions are 1-10 words, so 3-gram sets are too sparse to
     overlap."""
-    f = _fn(d)
-    toks = (
-        f"{f['LFILTER']}({f['SPLIT']}(lower(caption), '[^a-z0-9]+'), x -> x != '')"
-    )
-    if d == "spark":
-        gram = (
-            f"transform({_seq1('size(tokens) - 1')}, "
-            "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1)))"
-        )
-    else:
-        gram = (
-            "[list_extract(tokens, i) || ' ' || list_extract(tokens, i + 1) "
-            "for i in generate_series(1, greatest(len(tokens) - 1, 0))]"
-        )
-    # the >= 2 guard is load-bearing on the Spark side: sequence(1, 0)
-    # DESCENDS ([1, 0]) rather than returning empty, so a 0/1-token
-    # caption would hit element_at past the end (ANSI error)
     return f"""ctoks AS (
-  SELECT image_id AS doc_id, {toks} AS tokens FROM {_images_tbl(d)}
+  SELECT image_id AS doc_id, {_tokens_sql(d, 'caption')} AS tokens FROM {_images_tbl(d)}
 ),
 shingled AS (
-  SELECT doc_id, {gram} AS shingles FROM ctoks WHERE {f['LEN']}(tokens) >= 2
+  SELECT doc_id, {_adjacent_grams(d, 2)} AS shingles FROM ctoks WHERE {_fn(d)['LEN']}(tokens) >= 2
 )"""
 
 
@@ -3542,17 +3347,6 @@ def _q_repetition(d, sf):
     order (per-(doc, gram) count, then per-doc max/sum) — map-side
     combinable, no window, no sort; all divisions are exact int/int
     casts so the cross-engine hash compare is stable."""
-    f = _fn(d)
-    if d == "spark":
-        bigram = (
-            f"transform({_seq1('size(tokens) - 1')}, "
-            "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1)))"
-        )
-    else:
-        bigram = (
-            "[list_extract(tokens, i) || ' ' || list_extract(tokens, i + 1) "
-            "for i in generate_series(1, greatest(len(tokens) - 1, 0))]"
-        )
     return f"""WITH {_tokens_cte(d, sf)},
 tok_rows AS ({_tok_rows(d)}),
 uni AS (SELECT doc_id, tok, count(*) AS c FROM tok_rows GROUP BY doc_id, tok),
@@ -3560,10 +3354,8 @@ uni_agg AS (
   SELECT doc_id, sum(c) AS n_toks, count(*) AS n_distinct, max(c) AS top_c
   FROM uni GROUP BY doc_id
 ),
-bigrammed AS (SELECT doc_id, {bigram} AS bigrams FROM toks WHERE {f['LEN']}(tokens) >= 2),
-bi_rows AS ({"SELECT doc_id, bg FROM bigrammed LATERAL VIEW explode(bigrams) x AS bg"
-             if d == "spark" else
-             "SELECT doc_id, unnest(bigrams) AS bg FROM bigrammed"}),
+bigrammed AS (SELECT doc_id, {_adjacent_grams(d, 2)} AS bigrams FROM toks WHERE {_fn(d)['LEN']}(tokens) >= 2),
+bi_rows AS ({_unnest(d, "bigrammed", "bigrams", "bg")}),
 bi AS (SELECT doc_id, bg, count(*) AS c FROM bi_rows GROUP BY doc_id, bg),
 bi_agg AS (SELECT doc_id, sum(c) AS n_bi, max(c) AS top_bc FROM bi GROUP BY doc_id)
 SELECT u.doc_id,
@@ -3585,14 +3377,9 @@ def _q_tfidf(d, sf):
     term list (#sources * vocab rows, not corpus rows). Ranking uses the
     ROUNDED score with term as total tie-break so both engines pick
     identical rows."""
+    src = f"(SELECT source, doc_id, {_tokens_sql(d)} AS tokens FROM {_tbl('documents', d, sf)}) t"
     return f"""WITH srctoks AS (
-  {"SELECT source, doc_id, tok FROM (SELECT source, doc_id, "
-   "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '') AS tokens "
-   f"FROM {_tbl('documents', d, sf)}) t LATERAL VIEW explode(tokens) x AS tok"
-   if d == "spark" else
-   "SELECT source, doc_id, unnest(tokens) AS tok FROM (SELECT source, doc_id, "
-   "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tokens "
-   f"FROM {_tbl('documents', d, sf)}) t"}
+  {_unnest(d, src, "tokens", "tok", keep="source, doc_id")}
 ),
 n_docs AS (SELECT count(DISTINCT doc_id) AS n FROM srctoks),
 df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM srctoks GROUP BY tok),
@@ -3629,13 +3416,8 @@ def _q_bm25(d, sf, k1: float = 1.2, b: float = 0.75, topk: int = 3):
     top-K window runs over #queries * #candidate-docs rows. Ranking
     uses the 6-decimal rounded score with doc_id tie-break so both
     engines pick identical rows."""
-    tok_rows = (
-        "SELECT doc_id, tok FROM toks LATERAL VIEW explode(tokens) x AS tok"
-        if d == "spark"
-        else "SELECT doc_id, unnest(tokens) AS tok FROM toks"
-    )
     return f"""WITH {_tokens_cte(d, sf)},
-tok_rows AS ({tok_rows}),
+tok_rows AS ({_tok_rows(d)}),
 tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok_rows GROUP BY doc_id, tok),
 dl AS (SELECT doc_id, count(*) AS dlen FROM tok_rows GROUP BY doc_id),
 stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(CAST(dlen AS DOUBLE)) AS avg_len FROM dl),
@@ -3749,27 +3531,13 @@ def _q_bigram_pmi(d, sf, min_count: int = PMI_MIN_COUNT):
     scoring joins the bigram table against the vocabulary-sized unigram
     side twice (broadcastable), and the corpus totals are one-row
     aggregates. min_count prunes the long tail before the join."""
-    f = _fn(d)
-    if d == "spark":
-        grams = (
-            f"transform({_seq1('size(tokens) - 1')}, "
-            "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1)))"
-        )
-    else:
-        grams = (
-            "[list_extract(tokens, i) || ' ' || list_extract(tokens, i + 1) "
-            "for i in generate_series(1, greatest(len(tokens) - 1, 0))]"
-        )
-    if d == "spark":
-        big_rows = "SELECT bg FROM grams LATERAL VIEW explode(bgs) x AS bg"
-    else:
-        big_rows = "SELECT unnest(bgs) AS bg FROM grams"
+    big_rows = _unnest(d, "grams", "bgs", "bg", keep="")
     return f"""WITH {_tokens_cte(d, sf)},
 tok_rows AS ({_tok_rows(d)}),
 uni AS (SELECT tok, count(*) AS c FROM tok_rows GROUP BY tok),
 n_uni AS (SELECT sum(c) AS n FROM uni),
 grams AS (
-  SELECT doc_id, {grams} AS bgs FROM toks WHERE {f['LEN']}(tokens) >= 2
+  SELECT doc_id, {_adjacent_grams(d, 2)} AS bgs FROM toks WHERE {_fn(d)['LEN']}(tokens) >= 2
 ),
 big AS (
   SELECT bg, count(*) AS c_xy FROM ({big_rows}) t
@@ -3804,28 +3572,15 @@ def _q_dsir(d, sf, buckets: int = DSIR_BUCKETS):
     broadcast join of per-doc bucket counts against the bucket weights +
     one hash aggregate per doc. No window, no pair join; the md5-bucket
     hash is engine-portable (conv/hex parity like the MinHash family)."""
-    f = _fn(d)
-    if d == "spark":
-        grams = (
-            f"transform({_seq1('size(tokens) - 1')}, "
-            "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1)))"
-        )
-        gram_rows = "SELECT doc_id, g FROM grams LATERAL VIEW explode(gs) x AS g"
-    else:
-        grams = (
-            "[list_extract(tokens, i) || ' ' || list_extract(tokens, i + 1) "
-            "for i in generate_series(1, greatest(len(tokens) - 1, 0))]"
-        )
-        gram_rows = "SELECT doc_id, unnest(gs) AS g FROM grams"
     b_expr = f"{_hex2int('substr(md5(g), 1, 15)', d)} % {buckets}"
     return f"""WITH {_tokens_cte(d, sf)},
 tok_rows AS ({_tok_rows(d)}),
-grams AS (SELECT doc_id, {grams} AS gs FROM toks WHERE {f['LEN']}(tokens) >= 2),
+grams AS (SELECT doc_id, {_adjacent_grams(d, 2)} AS gs FROM toks WHERE {_fn(d)['LEN']}(tokens) >= 2),
 feat AS (
   SELECT doc_id, {b_expr} AS b FROM (
     SELECT doc_id, tok AS g FROM tok_rows
     UNION ALL
-    {gram_rows}
+    {_unnest(d, "grams", "gs", "g")}
   ) t
 ),
 doc_feat AS (SELECT doc_id, b, count(*) AS n FROM feat GROUP BY doc_id, b),
@@ -3905,14 +3660,12 @@ def _neardup_cluster_ctes(d, sf, iters: int = NEARDUP_CC_ITERS) -> str:
     propagation."""
     # DuckDB inlines CTEs per reference — without MATERIALIZED each
     # unrolled hop would re-run the whole shingle->LSH chain (hangs even
-    # at sf0.001). Spark SQL has no such keyword, but the engine path is
-    # the DataFrame override (_neardup_clusters_spark), which checkpoints
-    # the edge set explicitly.
-    mat = "MATERIALIZED " if d == "duck" else ""
+    # at sf0.001). The engine path (_neardup_clusters_spark) checkpoints
+    # the edge set instead.
     steps = []
     for k in range(1, iters + 1):
         steps.append(f""",
-lbl_{k} AS {mat}(
+lbl_{k} AS MATERIALIZED (
   SELECT l.doc_id,
          least(l.component, coalesce(min(n.component), l.component)) AS component
   FROM lbl_{k - 1} l
@@ -3922,7 +3675,7 @@ lbl_{k} AS {mat}(
 )""")
     return f"""{_minhash_chain_ctes(d, sf)},
 {_MINHASH_CAND_CTE},
-und AS {mat}(
+und AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM cand
   UNION
   SELECT doc_b, doc_a FROM cand
@@ -4009,58 +3762,6 @@ GROUP BY lang"""
 # ---------------------------------------------------------------------------
 
 
-def _token_set_df(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # distinct-within-doc via array_distinct: no dropDuplicates exchange
-    return docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != "")
-            )
-        ).alias("tok"),
-    )
-
-
-def _shingle_set_df(spark, sf_dir):
-    """Distinct 3-gram shingles per doc — mirrors _shingles_cte exactly."""
-    from pyspark.sql import functions as F
-
-    # the documents table is one small parquet split — without the
-    # repartition the whole tokenize->shingle->md5 chain (the dominant
-    # cost of every LSH-family query) runs map-side on one core until
-    # the first shuffle
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    toks = docs.select(
-        "doc_id",
-        F.filter(F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != "").alias("tokens"),
-    )
-    shingles = toks.select(
-        "doc_id",
-        F.expr(
-            f"transform({_seq1('size(tokens) - 2')}, "
-            "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1), "
-            "' ', element_at(tokens, i + 2)))"
-        ).alias("shingles"),
-    )
-    # barrier before explode: Catalyst collapses the projections and then
-    # re-evaluates the whole transform(...) chain once per EXPLODED row
-    # (~50x re-computation); materializing the arrays keeps it once per doc
-    shingles = shingles.localCheckpoint(eager=False)
-    # SELECT DISTINCT (doc_id, tok) over the explode is exactly
-    # distinct-WITHIN-document, so array_distinct before the explode
-    # yields the identical relation with zero shuffle (the global
-    # dropDuplicates exchange this chain used to pay)
-    return shingles.select(
-        "doc_id", F.explode(F.array_distinct("shingles")).alias("tok")
-    )
-
-
 def _minhash_buckets_df(spark, sf_dir):
     """(doc_id, band_no, bucket) rows under the SAME signature scheme as
     the SQL dialects (_minhash_sig_select: two md5s per shingle sliced
@@ -4084,51 +3785,37 @@ def _shingle_arrays_df(spark, sf_dir):
     shuffled it back through a groupBy for the signatures. Docs with no
     shingle (< 3 tokens) are dropped here, exactly the rows the exploded
     relation never produced."""
+    return _app_cached(
+        spark,
+        f"shingle_arrays:{sf_dir}",
+        lambda: _gram_arrays_df(spark, f"{sf_dir}/documents.parquet", "doc_id", "text", 3),
+    )
+
+
+def _gram_arrays_df(spark, path: str, id_col: str, text_col: str, n: int):
+    """EAGER-pinned per-doc DISTINCT adjacent ``n``-gram arrays
+    (doc_id := ``id_col``, toks) of ``text_col`` in the parquet at
+    ``path``: tokenize (_tokens_col) -> n-gram (_adjacent_grams) ->
+    barrier -> array_distinct -> pin. Docs without a gram are dropped."""
     from pyspark.sql import functions as F
 
-    def build():
-        docs = (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        toks = docs.select(
-            "doc_id",
-            F.filter(
-                F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != ""
-            ).alias("tokens"),
-        )
-        shingles = toks.select(
-            "doc_id",
-            F.expr(
-                f"transform({_seq1('size(tokens) - 2')}, "
-                "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1), "
-                "' ', element_at(tokens, i + 2)))"
-            ).alias("shingles"),
-        )
-        # barrier BEFORE the size filter: the filter references the
-        # computed array, so predicate pushdown would otherwise inline
-        # the whole tokenize+shingle chain into a Filter below the
-        # repartition — evaluated twice, on the single scan split
-        # (measured 216s at sf1.0 without this)
-        shingles = shingles.localCheckpoint(eager=False)
-        return (
-            shingles.select(
-                "doc_id", F.array_distinct("shingles").alias("toks")
-            )
-            .filter(F.size("toks") > 0)
-            .localCheckpoint(eager=True)
-        )
-
-    return _app_cached(spark, f"shingle_arrays:{sf_dir}", build)
-
-
-def _shingle_tokset_df(spark, sf_dir):
-    """Exploded distinct (doc_id, tok) rows — derived from the memoized
-    array frame; kept for consumers that need row form."""
-    from pyspark.sql import functions as F
-
-    return _shingle_arrays_df(spark, sf_dir).select(
-        "doc_id", F.explode("toks").alias("tok")
+    rows = spark.read.parquet(path).repartition(spark.sparkContext.defaultParallelism)
+    toks = rows.select(
+        F.col(id_col).alias("doc_id"), _tokens_col(text_col).alias("tokens")
+    )
+    # barrier BEFORE the size filter: the filter references the computed
+    # array, so predicate pushdown would otherwise inline the whole
+    # tokenize+gram chain into a Filter below the repartition — evaluated
+    # twice, on the single scan split (measured 216s at sf1.0 without
+    # this); it also keeps Catalyst from re-evaluating the transform once
+    # per consumer of the array
+    grams = toks.select(
+        "doc_id", F.expr(_adjacent_grams("spark", n)).alias("shingles")
+    ).localCheckpoint(eager=False)
+    return (
+        grams.select("doc_id", F.array_distinct("shingles").alias("toks"))
+        .filter(F.size("toks") > 0)
+        .localCheckpoint(eager=True)
     )
 
 
@@ -4211,34 +3898,14 @@ def _caption_arrays_df(spark):
     here, exactly the rows the exploded relation never produced. Keyed on
     the resolved fixture path: WCM_IMAGES_N changes the table between
     bench and driver runs."""
-    from pyspark.sql import functions as F
-
     from .fixtures import images_table_path
 
     p = images_table_path()
-
-    def build():
-        imgs = spark.read.parquet(p).repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        toks = imgs.select(
-            F.col("image_id").alias("doc_id"),
-            F.filter(
-                F.split(F.lower("caption"), "[^a-z0-9]+"), lambda x: x != ""
-            ).alias("tokens"),
-        ).filter(F.size("tokens") >= 2)
-        grams = toks.select(
-            "doc_id",
-            F.expr(
-                f"transform({_seq1('size(tokens) - 1')}, "
-                "i -> concat(element_at(tokens, i), ' ', element_at(tokens, i + 1)))"
-            ).alias("shingles"),
-        ).localCheckpoint(eager=False)
-        return grams.select(
-            "doc_id", F.array_distinct("shingles").alias("toks")
-        ).localCheckpoint(eager=True)
-
-    return _app_cached(spark, f"caption_arrays:{p}", build)
+    return _app_cached(
+        spark,
+        f"caption_arrays:{p}",
+        lambda: _gram_arrays_df(spark, p, "image_id", "caption", 2),
+    )
 
 
 def _caption_buckets_df(spark):
@@ -4251,6 +3918,45 @@ def _caption_buckets_df(spark):
         lambda: _buckets_from_sigs(
             _sigs_from_arrays(_caption_arrays_df(spark))
         ).localCheckpoint(eager=True),
+    )
+
+
+def _docset_join(pairs, ds):
+    """Exact set-Jaccard verify of candidate ``pairs(doc_a, doc_b, ...)``
+    against per-doc distinct-set arrays ``ds(doc_id, toks, n)``: returns
+    (pairs joined to both sides' arrays, the unrounded Jaccard Column).
+    |A inter B| is size(array_intersect(ta, tb)) per pair — both arrays
+    are distinct sets — instead of a double join of the token rows."""
+    from pyspark.sql import functions as F
+
+    da = ds.select(
+        F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"),
+        F.col("n").alias("na"),
+    )
+    db = ds.select(
+        F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"),
+        F.col("n").alias("nb"),
+    )
+    both = F.size(F.array_intersect("ta", "tb")).cast("long")
+    jac = both.cast("double") / (F.col("na") + F.col("nb") - both)
+    return pairs.join(da, "doc_a").join(db, "doc_b"), jac
+
+
+def _band_pairs(buckets):
+    """The LSH band self-join of ``buckets(doc_id, band_no, bucket)``:
+    one row per (doc_id < doc_b_id, shared band) with band_no kept."""
+    from pyspark.sql import functions as F
+
+    b = buckets.select(
+        F.col("doc_id").alias("doc_b_id"),
+        F.col("band_no").alias("band_no_b"),
+        F.col("bucket").alias("bucket_b"),
+    )
+    return buckets.join(
+        b,
+        (F.col("bucket") == F.col("bucket_b"))
+        & (F.col("band_no") == F.col("band_no_b"))
+        & (F.col("doc_id") < F.col("doc_b_id")),
     )
 
 
@@ -4272,32 +3978,17 @@ def _caption_neardup_spark(spark, sf_dir, min_jaccard: float = 0.5):
         .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .distinct()
     )
-    # r6: per-pair array_intersect over per-image bigram arrays replaces
-    # the token-row double join (see _jaccard_spark — same identity,
-    # both sides are distinct sets); the arrays come straight off the
-    # memoized anchor frame instead of a collect_list re-aggregation of
-    # its explode
+    # r6: the arrays come straight off the memoized anchor frame instead
+    # of a collect_list re-aggregation of its explode
     ds = _caption_arrays_df(spark).select(
         "doc_id", "toks", F.size("toks").cast("long").alias("n")
     )
-    da = ds.select(
-        F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"),
-        F.col("n").alias("na"),
-    )
-    db = ds.select(
-        F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"),
-        F.col("n").alias("nb"),
-    )
-    both = F.size(F.array_intersect("ta", "tb")).cast("long")
+    joined, jac = _docset_join(cand, ds)
     v = (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
+        joined.select(
             F.col("doc_b").alias("image_id"),
             F.col("doc_a").alias("rep_id"),
-            F.round(
-                both.cast("double") / (F.col("na") + F.col("nb") - both), 4
-            ).alias("jaccard"),
+            F.round(jac, 4).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= min_jaccard)
     )
@@ -4319,19 +4010,8 @@ def _minhash_cand_df(spark, sf_dir):
     def build():
         from pyspark.sql import functions as F
 
-        buckets = _minhash_buckets_df(spark, sf_dir)
-        b = buckets.select(
-            F.col("doc_id").alias("doc_b_id"),
-            F.col("band_no").alias("band_no_b"),
-            F.col("bucket").alias("bucket_b"),
-        )
         return (
-            buckets.join(
-                b,
-                (F.col("bucket") == F.col("bucket_b"))
-                & (F.col("band_no") == F.col("band_no_b"))
-                & (F.col("doc_id") < F.col("doc_b_id")),
-            )
+            _band_pairs(_minhash_buckets_df(spark, sf_dir))
             .select(F.col("doc_id").alias("doc_a"), F.col("doc_b_id").alias("doc_b"))
             .dropDuplicates()
             .localCheckpoint(eager=True)
@@ -4343,23 +4023,11 @@ def _minhash_cand_df(spark, sf_dir):
 def _minhash_spark(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    buckets = _minhash_buckets_df(spark, sf_dir)
-    b = buckets.select(
-        F.col("doc_id").alias("doc_b_id"),
-        F.col("band_no").alias("band_no_b"),
-        F.col("bucket").alias("bucket_b"),
-    )
-    out = (
-        buckets.join(
-            b,
-            (F.col("bucket") == F.col("bucket_b"))
-            & (F.col("band_no") == F.col("band_no_b"))
-            & (F.col("doc_id") < F.col("doc_b_id")),
-        )
+    return (
+        _band_pairs(_minhash_buckets_df(spark, sf_dir))
         .groupBy(F.col("doc_id").alias("doc_a"), F.col("doc_b_id").alias("doc_b"))
         .agg(F.countDistinct("band_no").cast("long").alias("shared_bands"))
     )
-    return out
 
 
 def _shingle_docsets_df(spark, sf_dir):
@@ -4392,22 +4060,11 @@ def _jaccard_spark(spark, sf_dir):
     verify ~48k pairs (6.6s measured at sf1.0 for the verify alone)."""
     from pyspark.sql import functions as F
 
-    cand = _minhash_cand_df(spark, sf_dir)
-    ds = _shingle_docsets_df(spark, sf_dir)
-    da = ds.select(
-        F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"),
-        F.col("n").alias("na"),
+    joined, jac = _docset_join(
+        _minhash_cand_df(spark, sf_dir), _shingle_docsets_df(spark, sf_dir)
     )
-    db = ds.select(
-        F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"),
-        F.col("n").alias("nb"),
-    )
-    both = F.size(F.array_intersect("ta", "tb")).cast("long")
-    jac = both.cast("double") / (F.col("na") + F.col("nb") - both)
     return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+        joined.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.8)
     )
 
@@ -4422,10 +4079,7 @@ def _ann_exact_spark(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    norm_expr = (
-        "sqrt(aggregate(embedding, CAST(0.0 AS DOUBLE), "
-        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    )
+    norm_expr = _norm_expr("embedding")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
@@ -4437,10 +4091,7 @@ def _ann_exact_spark(spark, sf_dir):
         F.col("embedding").alias("c_emb"),
         F.expr(norm_expr).alias("nc"),
     )
-    dot = (
-        "aggregate(zip_with(q_emb, c_emb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
+    dot = _dot_expr("q_emb", "c_emb")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("cand_id")
     )
@@ -4485,22 +4136,10 @@ def _minhash_est_spark(spark, sf_dir):
     # r6: per-pair array_intersect over the docset arrays replaces the
     # token-row double join (see _jaccard_spark) — a zero-overlap pair
     # yields both = 0 directly, matching the old LEFT-join + coalesce
-    ds = _shingle_docsets_df(spark, sf_dir)
-    da = ds.select(
-        F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"),
-        F.col("n").alias("na"),
-    )
-    db = ds.select(
-        F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"),
-        F.col("n").alias("nb"),
-    )
-    both = F.size(F.array_intersect("ta", "tb")).cast("long")
-    jac = both.cast("double") / (F.col("na") + F.col("nb") - both)
+    joined, jac = _docset_join(est, _shingle_docsets_df(spark, sf_dir))
     est_j = F.col("n_match").cast("double") / 8
     return (
-        est.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
+        joined.select(
             "doc_a",
             "doc_b",
             F.round(est_j, 4).alias("est_jaccard"),
@@ -4523,10 +4162,7 @@ def _simhash_spark(spark, sf_dir):
     )
     toks = docs.select(
         "doc_id",
-        F.expr(
-            "array_distinct(filter(split(lower(text), '[^a-z0-9]+'), "
-            "x -> x != ''))"
-        ).alias("toks"),
+        F.array_distinct(_tokens_col()).alias("toks"),
     ).localCheckpoint(eager=False)  # barrier: keep the size filter from
     # re-inlining the tokenize chain below the repartition
     hashed = toks.filter(F.size("toks") > 0).select(
@@ -4801,6 +4437,23 @@ def _ivf_final_cent_df(spark, sf_dir):
     )[1]
 
 
+def _dot_expr(a: str, b: str) -> str:
+    """Dot product of two numeric array columns folded in DOUBLE from 0.0,
+    dimension ascending — the engine-path form of _cos_sql's dot."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+
+
+def _norm_expr(a: str) -> str:
+    """L2 norm of a numeric array column, the _dot_expr fold of a with a."""
+    return (
+        f"sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), "
+        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
+    )
+
+
 def _ivf_emb_df(spark, sf_dir):
     """Per-application memoized double-cast embedding frame (vec_id, v),
     repartitioned before pinning — the table is one small parquet split
@@ -4868,12 +4521,14 @@ def _ivf_ncs(cents):
     return [math.sqrt(sum(c * c for c in cx)) for cx in cents]
 
 
-def _ivf_assign_df(emb, cents):
+def _ivf_assign_df(emb, cents, ids=None):
     """(vec_id, cell) argmax-cosine assignment via the NumPy kernel —
     centroids ride the task closure (O(model) state, like the old
     driver-side literal, minus its parse/analyze and the interpreted
-    per-cell lambda eval)."""
+    per-cell lambda eval). ``ids`` are the cell ids of ``cents`` in
+    ascending order (default: list positions)."""
     ncs = _ivf_ncs(cents)
+    ids = list(range(len(cents))) if ids is None else ids
 
     def fn(it):
         import numpy as np
@@ -4883,7 +4538,7 @@ def _ivf_assign_df(emb, cents):
             vec = batch.column("vec_id")
             v = batch.column("v").flatten().to_numpy(zero_copy_only=False)
             v2d = np.ascontiguousarray(v).reshape(len(vec), 64)
-            cells = _ivf_cos_cells(v2d, cents, ncs)
+            cells = np.asarray(ids, dtype=np.int64)[_ivf_cos_cells(v2d, cents, ncs)]
             yield pa.RecordBatch.from_arrays(
                 [vec, pa.array(cells, type=pa.int64())],
                 names=["vec_id", "cell"],
@@ -4894,7 +4549,7 @@ def _ivf_assign_df(emb, cents):
     )
 
 
-def _ivf_assign_exploded_df(emb, cents):
+def _ivf_assign_exploded_df(emb, cents, ids):
     """(cell, dim, x) rows of the assignment — the Lloyd centroid
     update's input, exploded straight from the kernel (same multiset as
     the old assignment + posexplode)."""
@@ -4908,7 +4563,7 @@ def _ivf_assign_exploded_df(emb, cents):
             v = batch.column("v").flatten().to_numpy(zero_copy_only=False)
             r = batch.num_rows
             v2d = np.ascontiguousarray(v).reshape(r, 64)
-            cells = _ivf_cos_cells(v2d, cents, ncs)
+            cells = np.asarray(ids, dtype=np.int64)[_ivf_cos_cells(v2d, cents, ncs)]
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat(cells, 64), type=pa.int64()),
@@ -4977,10 +4632,7 @@ def _lsh_bucket8_df(spark, sf_dir):
             emb.withColumn("__prs", _hyperplane_prs_col("pl", 8))
             .select(
                 "vec_id", bucket.alias("bucket"), "v",
-                F.expr(
-                    "sqrt(aggregate(v, CAST(0.0 AS DOUBLE), "
-                    "(acc, t) -> acc + t * t))"
-                ).alias("nv"),
+                F.expr(_norm_expr("v")).alias("nv"),
             )
             .localCheckpoint(eager=True)
         )
@@ -5006,11 +4658,7 @@ def _ann_lsh_spark(spark, sf_dir):
         F.col("vec_id").alias("vec_b"), "bucket", F.col("v").alias("vb"),
         F.col("nv").alias("nb"),
     )
-    dot = (
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"
-    )
-
+    dot = _dot_expr("va", "vb")
     return (
         a.join(c, "bucket")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -5045,9 +4693,7 @@ def _embedding_neardup_spark(spark, sf_dir):
     # only the survivors — cross-band duplicates carry identical
     # (label, cosine), so dropDuplicates on the pair key yields the
     # identical relation. Norms per VECTOR, not per pair (same doubles).
-    nv = F.expr(
-        "sqrt(aggregate(v, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t * t))"
-    )
+    nv = F.expr(_norm_expr("v"))
     bandsig = (
         emb.withColumn("__prs", _hyperplane_prs_col("nd", 16))
         .select(
@@ -5067,11 +4713,7 @@ def _embedding_neardup_spark(spark, sf_dir):
         "label", "band_no", "sig", F.col("vec_id").alias("vec_b"),
         F.col("v").alias("vb"), F.col("nv").alias("nb"),
     )
-    dot = (
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"
-    )
-
+    dot = _dot_expr("va", "vb")
     return (
         a.join(b, ["label", "band_no", "sig"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -5105,9 +4747,10 @@ def _ivf_fit_df(spark, sf_dir):
         [float(x) for x in r["v"]]
         for r in emb.filter(F.col("vec_id") < n_cells).orderBy("vec_id").collect()
     ]
+    ids = list(range(n_cells))
     for _ in range(2):  # cent0 -> cent1 -> cent2 (2 update rounds)
         rows = (
-            _ivf_assign_exploded_df(emb, cents)
+            _ivf_assign_exploded_df(emb, cents, ids)
             .groupBy("cell", "dim")
             .agg(F.round(F.avg("x"), 6).alias("cx"))
             .collect()
@@ -5115,27 +4758,16 @@ def _ivf_fit_df(spark, sf_dir):
         upd = {}
         for r in rows:
             upd.setdefault(int(r["cell"]), {})[int(r["dim"])] = float(r["cx"])
-        # a cell can lose every member to a tie — keep its previous
-        # centroid only if it had one update rowset; SQL's avg join
-        # simply drops empty cells from cent, so mirror that by
-        # ranking only over cells present (empty cells never win
-        # anyway since they keep no rows — build the list in cell
-        # order from the cells that DO have updates)
-        cents = [
-            [upd[c][d] for d in range(dims)] for c in sorted(upd)
-        ]
-        if sorted(upd) != list(range(len(upd))):
-            # non-dense cell ids would desync list order from cell id
-            # — fall back to explicit id mapping
-            raise AssertionError(
-                f"non-dense IVF cells after update: {sorted(upd)}"
-            )
+        # a cell that loses every member drops out, and the others keep
+        # their ids — exactly the SQL chain's avg join. The kernel's
+        # argmax position maps back through the ascending id list, so a
+        # tie still goes to the lowest cell id
+        ids = sorted(upd)
+        cents = [[upd[c][d] for d in range(dims)] for c in ids]
     # final assignment under cent2
-    asg = _ivf_assign_df(emb, cents).localCheckpoint(eager=True)
+    asg = _ivf_assign_df(emb, cents, ids).localCheckpoint(eager=True)
     cent_rows = [
-        (cell, dim, cents[cell][dim])
-        for cell in range(len(cents))
-        for dim in range(dims)
+        (cell, dim, cx[dim]) for cell, cx in zip(ids, cents) for dim in range(dims)
     ]
     cent = spark.createDataFrame(cent_rows, "cell BIGINT, dim INT, cx DOUBLE")
     return asg, cent
@@ -5178,11 +4810,7 @@ def _ann_recall_spark(spark, sf_dir):
         F.col("nv").alias("qn"),
         F.col("bucket").alias("qbucket"),
     )
-    dot = (
-        "aggregate(zip_with(qv, cv, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"
-    )
-    cos = F.expr(f"round({dot} / (qn * cn), 6)")
+    cos = F.expr(f"round({_dot_expr('qv', 'cv')} / (qn * cn), 6)")
     top3 = (
         lambda df: df.withColumn(
             "rk",
@@ -5257,15 +4885,8 @@ def _semdedup_spark(spark, sf_dir):
     gate = SYNTHETIC_GATES["semdedup_prune"]["min_cosine"]
     asg = _ivf_final_asg_df(spark, sf_dir)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-    def norm(c):
-        return (
-            f"sqrt(aggregate({c}, CAST(0.0 AS DOUBLE), "
-            "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        )
-
     # r6: per-vector norms on the join inputs, not per candidate pair
-    withv = asg.join(emb, "vec_id").withColumn("__ne", F.expr(norm("embedding")))
+    withv = asg.join(emb, "vec_id").withColumn("__ne", F.expr(_norm_expr("embedding")))
     a = withv.select(
         F.col("vec_id").alias("vid_a"), "cell", F.col("embedding").alias("ea"),
         F.col("__ne").alias("__na"),
@@ -5274,11 +4895,7 @@ def _semdedup_spark(spark, sf_dir):
         F.col("vec_id").alias("vid_b"), "cell", F.col("embedding").alias("eb"),
         F.col("__ne").alias("__nb"),
     )
-    dot = (
-        "aggregate(zip_with(ea, eb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    cos = F.expr(f"{dot} / (__na * __nb)")
+    cos = F.expr(f"{_dot_expr('ea', 'eb')} / (__na * __nb)")
     dups = (
         a.join(b, "cell")
         .filter(F.col("vid_b") < F.col("vid_a"))
@@ -5314,18 +4931,13 @@ def _stratified_spark(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )
+    stop_hits, n_tokens = _doc_counts("spark")
     labeled = (
         docs.select(
             "doc_id",
             "n_chars",
-            F.expr(
-                "CAST(size(regexp_extract_all(lower(text), "
-                f"{_rx(_STOPWORD_RAW, 'spark')}, 1)) AS BIGINT)"
-            ).alias("stop_hits"),
-            F.expr(
-                "CAST(size(filter(split(lower(text), '[^a-z0-9]+'), "
-                "x -> x != '')) AS BIGINT)"
-            ).alias("n_tokens"),
+            F.expr(stop_hits).alias("stop_hits"),
+            F.expr(n_tokens).alias("n_tokens"),
         )
         .select(
             "doc_id",
@@ -5367,9 +4979,7 @@ def _bm25_spark(spark, sf_dir, k1: float = 1.2, b: float = 0.75, topk: int = 3):
     tf = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.filter(F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != "")
-            ).alias("tok"),
+            F.explode(_tokens_col()).alias("tok"),
         )
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -5431,12 +5041,7 @@ def _dsir_spark(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    toks = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')").alias(
-            "tokens"
-        ),
-    )
+    toks = docs.select("doc_id", _tokens_col().alias("tokens"))
     # ONE tokenize + ONE explode: the old uni/bi UNION referenced the
     # unmaterialized toks twice, so Spark inlined (and ran) the
     # tokenize chain once per leg. Exploding the concatenated
@@ -5445,15 +5050,9 @@ def _dsir_spark(spark, sf_dir):
     # the old `bi` filter excluded); the md5 bucket stays in the
     # codegen'd projection ABOVE the Generate, not inside an
     # interpreted transform lambda.
-    bigram = "concat(element_at(tokens, i), ' ', element_at(tokens, i + 1))"
     feat = toks.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"concat(tokens, "
-                f"transform({_seq1('size(tokens) - 1')}, i -> {bigram}))"
-            )
-        ).alias("g"),
+        F.explode(F.expr(f"concat(tokens, {_adjacent_grams('spark', 2)})")).alias("g"),
     ).select(
         "doc_id",
         F.expr(
@@ -5521,12 +5120,7 @@ def _bigram_pmi_spark(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    toks = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')").alias(
-            "tokens"
-        ),
-    )
+    toks = docs.select("doc_id", _tokens_col().alias("tokens"))
     # ONE tokenize + ONE explode + ONE shuffle: the old shape built the
     # unigram and bigram count tables from separate subtrees over the
     # unmaterialized toks, running the tokenize chain once per table.
@@ -5534,17 +5128,11 @@ def _bigram_pmi_spark(spark, sf_dir):
     # vocabulary-sized groupBy; _seq1 is empty for size(tokens) < 2,
     # exactly the rows the old bigram filter excluded. The kind tag is
     # derived AFTER the explode (codegen) rather than built inside an
-    # interpreted transform lambda: unigrams are split on [^a-z0-9]+ so
+    # interpreted transform lambda: unigrams are split on _TOKEN_SPLIT so
     # they can never contain the space every bigram carries.
-    bigram = "concat(element_at(tokens, i), ' ', element_at(tokens, i + 1))"
     counts = (
         toks.select(
-            F.explode(
-                F.expr(
-                    f"concat(tokens, "
-                    f"transform({_seq1('size(tokens) - 1')}, i -> {bigram}))"
-                )
-            ).alias("g")
+            F.explode(F.expr(f"concat(tokens, {_adjacent_grams('spark', 2)})")).alias("g")
         )
         .select(F.expr("CASE WHEN g LIKE '% %' THEN 1 ELSE 0 END").alias("k"), "g")
         .groupBy("k", "g")
@@ -5607,7 +5195,6 @@ def _ivf_probe_top3(spark, sf_dir, asg):
     inverted list; cosine on the array column JVM-side
     (aggregate/zip_with), ranked on the 6-decimal rounding like the SQL
     dialects."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -5620,24 +5207,25 @@ def _ivf_probe_top3(spark, sf_dir, asg):
             F.col("embedding").alias("q_emb"),
         )
     )
-    def norm(c):
-        return (
-            f"sqrt(aggregate({c}, CAST(0.0 AS DOUBLE), "
-            "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        )
+    return _cosine_top3(q, asg, emb)
+
+
+def _cosine_top3(q, asg, emb):
+    """Exact cosine top-3 of each query ``q(query_id, cell, q_emb)`` among
+    the other vectors of its cell in ``asg(vec_id, cell)``: ranked on the
+    6-decimal rounding with the vec_id tie rule like the SQL oracles,
+    reported at 4 decimals."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     # r6: norms ride the per-vector join inputs instead of re-deriving
     # inside every pair expression (identical doubles, earlier evaluation)
-    q = q.withColumn("__nq", F.expr(norm("q_emb")))
+    q = q.withColumn("__nq", F.expr(_norm_expr("q_emb")))
     x = asg.join(emb, "vec_id").select(
         F.col("vec_id").alias("cand_id"), "cell", F.col("embedding").alias("x_emb"),
-        F.expr(norm("embedding")).alias("__nx"),
+        F.expr(_norm_expr("embedding")).alias("__nx"),
     )
-    dot = (
-        "aggregate(zip_with(q_emb, x_emb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    cos = F.expr(f"{dot} / (__nq * __nx)")
+    cos = F.expr(f"{_dot_expr('q_emb', 'x_emb')} / (__nq * __nx)")
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("__cos"), 6).desc(), F.col("cand_id")
     )
@@ -5694,34 +5282,7 @@ def _ivf_multiprobe_spark(spark, sf_dir):
         emb.select("vec_id", F.col("embedding").alias("q_emb")),
         qcells["query_id"] == F.col("vec_id"),
     ).select("query_id", "cell", "q_emb")
-    def norm(c):
-        return (
-            f"sqrt(aggregate({c}, CAST(0.0 AS DOUBLE), "
-            "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        )
-
-    # r6: per-vector norms on the join inputs (see _ivf_probe_top3)
-    q = q.withColumn("__nq", F.expr(norm("q_emb")))
-    x = asg.join(emb, "vec_id").select(
-        F.col("vec_id").alias("cand_id"), "cell", F.col("embedding").alias("x_emb"),
-        F.expr(norm("embedding")).alias("__nx"),
-    )
-    dot_qx = (
-        "aggregate(zip_with(q_emb, x_emb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    cos = F.expr(f"{dot_qx} / (__nq * __nx)")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("__cos"), 6).desc(), F.col("cand_id")
-    )
-    return (
-        q.join(x, "cell")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("__cos", cos)
-        .withColumn("rk", F.row_number().over(w))
-        .filter("rk <= 3")
-        .select("query_id", "cand_id", F.round(F.col("__cos"), 4).alias("cosine"))
-    )
+    return _cosine_top3(q, asg, emb)
 
 
 def _round6_half_up_np(a):
@@ -6385,6 +5946,9 @@ def _decon_spark(spark, sf_dir):
     )
 
 
+# name -> the engine path Spark runs instead of the SQL builder. Each such
+# builder is the query's DuckDB-only oracle: its text is never rendered
+# for Spark, so it carries no Spark dialect.
 _SPARK_OVERRIDES = {
     "dedup_incremental": _dedup_incremental_spark,
     "doc_decontamination": _decon_spark,
@@ -7151,8 +6715,7 @@ def _reorder(out: dict) -> dict:
 
 
 def spark_queries() -> dict[str, Callable]:
-    out = {name: _mk_spark_fn(name) for name in _BUILDERS}
-    out.update(_SPARK_OVERRIDES)
+    out = {name: _SPARK_OVERRIDES.get(name) or _mk_spark_fn(name) for name in _BUILDERS}
     out["resolve_href_goldens"] = _resolve_spark
     out.update(_SPARK_ONLY)
     return _reorder(out)

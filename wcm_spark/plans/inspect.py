@@ -3,7 +3,7 @@
 At 100 TB the difference between a good and a bad plan is whether filters
 reached the parquet scan, whether the small side broadcast, and whether the
 hot expressions stayed inside whole-stage codegen. These helpers parse
-``explain("formatted")`` output so tests (tests/test_plans.py) can ASSERT
+``explain("formatted")`` output so tests (tests/test_plans_streaming.py) can ASSERT
 plan shape instead of hoping: a regression that drops a pushed filter or
 flips a broadcast join to shuffle fails CI, not a cluster bill.
 """

@@ -10,6 +10,7 @@ import json
 import math
 import os
 import pathlib
+import re
 import tempfile
 
 import duckdb
@@ -55,11 +56,17 @@ def duck():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(name, spark, duck):
-    sdf = QUERIES[name](spark, SF_DIR)
+    _assert_parity(name, QUERIES[name](spark, SF_DIR), duck)
+
+
+def _assert_parity(name, sdf, con):
+    """Collect the Spark frame ``sdf``, run ``name``'s oracle on the
+    DuckDB connection ``con`` and assert the same columns and the same
+    rows in any order. Returns the oracle's normalized rows."""
     spark_cols = sdf.columns
     spark_data = [tuple(r) for r in sdf.collect()]
 
-    cur = duck.execute(ORACLES[name])
+    cur = con.execute(ORACLES[name])
     duck_cols = [c[0] for c in cur.description]
     duck_data = cur.fetchall()
 
@@ -71,6 +78,7 @@ def test_oracle_parity(name, spark, duck):
     assert got == want, f"{name}: value mismatch; first diff: " + str(
         next((a, b) for a, b in zip(got, want) if a != b)
     )
+    return want
 
 
 #: duck logical type -> the numeric class the DRIVER's hash sees after
@@ -450,11 +458,7 @@ def test_shingle_builders_survive_short_docs(spark, tmp_path):
         "passage_dedup_scrub",
         "doc_decontamination",
     ):
-        sdf = QUERIES[name](spark, str(tmp_path))
-        got = _rows(sdf.columns, [tuple(r) for r in sdf.collect()])
-        cur = con.execute(ORACLES[name])
-        want = _rows([c[0] for c in cur.description], cur.fetchall())
-        assert got == want, name
+        _assert_parity(name, QUERIES[name](spark, str(tmp_path)), con)
 
 
 def test_recrawl_conditional_fetch_all_actions(duck):
@@ -548,8 +552,8 @@ def test_url_canonicalize_edge_cases_spark(spark):
 
 def test_oracle_texts_frozen():
     """Every oracle text is pinned by its sha256 in
-    oracle_sqls.sha256.json (the temp dir the fixture parquets live under
-    replaced by a placeholder), so any oracle edit shows up as a reviewed
+    oracle_sqls.sha256.json (fixture parquet paths and the temp dir
+    replaced by placeholders), so any oracle edit shows up as a reviewed
     edit of that file. Regenerate it with ``write_oracle_digests()``."""
     want = json.loads(_DIGESTS.read_text())
     assert _oracle_digests() == want
@@ -559,9 +563,15 @@ _DIGESTS = pathlib.Path(__file__).with_name("oracle_sqls.sha256.json")
 
 
 def _oracle_digests() -> dict:
+    """sha256 of each oracle text with every fixture parquet path masked:
+    the fixture names are content hashes of generated data (encoded image
+    bytes, env-sized tables), which are not oracle SQL."""
     tmp = tempfile.gettempdir()
+    fixture = re.compile(re.escape(tmp) + r"/wcm_fixtures/[^']*\.parquet")
     return {
-        k: hashlib.sha256(v.replace(tmp, "<TMPDIR>").encode()).hexdigest()
+        k: hashlib.sha256(
+            fixture.sub("<FIXTURE>", v).replace(tmp, "<TMPDIR>").encode()
+        ).hexdigest()
         for k, v in sorted(ORACLES.items())
     }
 
@@ -610,6 +620,8 @@ def test_tokenizer_same_on_every_engine(spark, text):
         "ann_ivf_fitted",
         "ann_ivf_multiprobe",
         "ann_recall_at_k",
+        "ann_ivfpq_adc",
+        "ann_ivfpq_recall_at_k",
         "semdedup_prune",
     ],
 )
@@ -629,12 +641,7 @@ def test_ivf_empty_cell_parity(spark, tmp_path_factory, name):
     ).fetchall()}
     assert 0 in cells and 1 not in cells
 
-    sdf = QUERIES[name](spark, sf)
-    got = _rows(sdf.columns, [tuple(r) for r in sdf.collect()])
-    cur = con.execute(ORACLES[name])
-    want = _rows([c[0] for c in cur.description], cur.fetchall())
-    assert len(want) > 0
-    assert got == want, name
+    assert len(_assert_parity(name, QUERIES[name](spark, sf), con)) > 0
 
 
 def _ivf_tie_dir(tmp_path_factory) -> str:

@@ -5612,13 +5612,16 @@ def _ivfpq_adc_top3(spark, sf_dir):
         by_cell: dict[int, dict[int, float]] = {}
         for r in cent_rows:
             by_cell.setdefault(int(r["cell"]), {})[int(r["dim"])] = float(r["cx"])
+        # indexed by cell id: an emptied cell keeps its slot (any row
+        # fills it; no member ever looks it up)
+        fill = next(iter(by_cell.values()))
         cent_lit = "array(" + ", ".join(
             "array("
             + ", ".join(
-                _dlit(by_cell[c][d]) for d in range(64)
+                _dlit(by_cell.get(c, fill)[d]) for d in range(64)
             )
             + ")"
-            for c in sorted(by_cell)
+            for c in range(max(by_cell) + 1)
         ) + ")"
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").join(
             asg, "vec_id"

@@ -221,7 +221,7 @@ def _crawl_run(cores: int, corpus_path: str, cap: int | None = None) -> dict:
         for r in corpus.filter("url like '%/p/0.html'").select("url").collect()
     ]
     cfg = CrawlConfig(
-        expected_urls=2_000_000, use_bloom=False, max_conn_per_host=cap
+        max_conn_per_host=cap
     )
     crawler = Crawler(spark, corpus, cfg)
     # warm-up, untimed: ONE FULL crawl. A 2-wave mini-crawl (the r1-r4

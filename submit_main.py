@@ -63,7 +63,6 @@ def main() -> None:
         max_waves=args.max_waves,
         checkpoint_dir=args.checkpoint,
         collect_images=args.images,
-        expected_urls=max(args.sites * args.pages * 4, 100_000),
         fetch_mode=args.fetch_mode,
         respect_robots=args.respect_robots,
         min_delay_sec=args.min_delay_sec,

@@ -44,7 +44,6 @@ def test_bucketed_fetch_join_plans_no_corpus_exchange(spark, bucketed_table):
             crawler = Crawler(
                 spark, corpus,
                 CrawlConfig(
-                    expected_urls=10_000, use_bloom=False,
                     corpus_prepartitioned=prepartitioned,
                 ),
             )
@@ -72,11 +71,11 @@ def test_bucketed_crawl_matches_plain(spark, bucketed_table):
 
     plain = Crawler(
         spark, corpus_df(spark, n_sites=2, pages_per_site=8).cache(),
-        CrawlConfig(expected_urls=10_000, use_bloom=False),
+        CrawlConfig(),
     ).run(seed_urls(2))
     bucketed = Crawler(
         spark, spark.table(bucketed_table),
-        CrawlConfig(expected_urls=10_000, use_bloom=False, corpus_prepartitioned=True),
+        CrawlConfig(corpus_prepartitioned=True),
     ).run(seed_urls(2))
     cols = ["pos", "url", "status", "depth"]
     a = [tuple(r) for r in plain.visits.select(*cols).orderBy("pos").collect()]

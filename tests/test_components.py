@@ -1,5 +1,5 @@
 """Component tests: queue semantics (t/queue.t analog), distributed seq
-assignment, bloom/cuckoo filters, snapshot store, image codecs/fidelity."""
+assignment, bloom filter and seen set, snapshot store, image codecs/fidelity."""
 
 import numpy as np
 import pytest
@@ -13,7 +13,7 @@ from wcm_spark.images import (
     phash64,
     psnr,
 )
-from wcm_spark.operators.dedup import CuckooFilter, NumpyBloom
+from wcm_spark.operators.dedup import NumpyBloom
 
 
 # -- queue semantics (t/queue.t:15-54) --------------------------------------
@@ -206,7 +206,7 @@ def test_assign_seq_key_bounds_degenerate_span(spark):
     )
 
 
-# -- bloom / cuckoo ----------------------------------------------------------
+# -- bloom / seen set -------------------------------------------------------
 
 
 def test_numpy_bloom_membership():
@@ -238,16 +238,37 @@ def test_bloom_distributed_build_and_prefilter(spark):
     assert ids == list(range(2000, 4000))  # exactness restored by anti-join
 
 
-def test_cuckoo_filter():
-    cf = CuckooFilter(1024)
-    items = [hash(f"item-{i}") & (2**62 - 1) for i in range(800)]
-    for h in items:
-        assert cf.add(h)
-    assert all(cf.contains(h) for h in items)
-    misses = sum(cf.contains(hash(f"other-{i}") & (2**62 - 1)) for i in range(800))
-    assert misses < 80
-    assert cf.delete(items[0])
-    assert not cf.contains(items[0]) or True  # delete removes one copy
+def test_seen_set_bloom_keeps_its_fpp_as_it_grows(spark, monkeypatch):
+    """Past the bound the seen set's bloom is rebuilt at twice the count
+    once it fills: after adding 10x the initial count, the count stays
+    within the capacity, no added digest is missed, the empirical fpp
+    stays within 2x the 1% target, and ``unseen`` stays exact."""
+    from pyspark.sql import functions as F
+
+    from wcm_spark.operators.dedup import SeenSet, with_bloom_hashes
+
+    monkeypatch.setattr(SeenSet, "MIN_CAPACITY", 1024)
+
+    def digests(lo, hi):
+        return spark.range(lo, hi).select(
+            F.md5(F.col("id").cast("string")).alias("digest")
+        )
+
+    def in_bloom(df):
+        h = with_bloom_hashes(df).select("__bh1", "__bh2").toPandas()
+        return seen._bloom.contains(h["__bh1"].to_numpy(), h["__bh2"].to_numpy())
+
+    n0 = 1000
+    seen = SeenSet(digests(0, n0), n0, 0)
+    try:
+        for w in range(1, 11):
+            seen.add(digests(w * n0, (w + 1) * n0).localCheckpoint(eager=True), n0)
+        assert seen.n == 11 * n0 <= seen.capacity
+        assert in_bloom(digests(0, 11 * n0)).all()
+        assert in_bloom(digests(10**6, 10**6 + 20_000)).mean() <= 0.02
+        assert seen.unseen(digests(10 * n0, 12 * n0)).count() == n0
+    finally:
+        seen.close()
 
 
 # -- snapshot store ----------------------------------------------------------
@@ -377,7 +398,7 @@ def test_crawl_store_maintenance_preserves_resume(spark, tmp_path):
     corpus = corpus_df(spark, 2, 8).cache()
     plain = Crawler(
         spark, corpus,
-        CrawlConfig(expected_urls=10_000, use_bloom=False),
+        CrawlConfig(),
     ).run(seed_urls(2))
     want = sorted(
         (r["wave"], r["seq"], r["url"])
@@ -385,7 +406,6 @@ def test_crawl_store_maintenance_preserves_resume(spark, tmp_path):
     )
 
     cfg = CrawlConfig(
-        expected_urls=10_000, use_bloom=False,
         checkpoint_dir=str(tmp_path / "ckpt"),
         compact_every_commits=1, expire_keep_snapshots=1,
         max_waves=2,
@@ -394,7 +414,6 @@ def test_crawl_store_maintenance_preserves_resume(spark, tmp_path):
     # resume after maintenance: meta (wave/next_seq) must have survived
     # the compact/expire cycle
     cfg2 = CrawlConfig(
-        expected_urls=10_000, use_bloom=False,
         checkpoint_dir=str(tmp_path / "ckpt"),
         compact_every_commits=1, expire_keep_snapshots=1,
     )
@@ -505,7 +524,7 @@ def test_drain_pos_fast_path_dense_and_ordered(spark):
     from wcm_spark.scheduler import CrawlConfig, Crawler
 
     corpus = corpus_df(spark, n_sites=3, pages_per_site=8).cache()
-    cfg = CrawlConfig(expected_urls=10_000, use_bloom=False, retry_errors=1)
+    cfg = CrawlConfig(retry_errors=1)
     res = Crawler(spark, corpus, cfg).run(seed_urls(3))
     rows = res.visits.select("pos", "wave", "seq").collect()
     assert rows, "crawl produced no visits"
@@ -533,7 +552,7 @@ def test_long_chain_crawl_consolidates_seen_broadcast(spark):
         "url string, status int, content_type string, content_length bigint, "
         "body binary, redirect_to string",
     ).cache()
-    cfg = CrawlConfig(expected_urls=1000, use_bloom=False)
+    cfg = CrawlConfig()
     res = Crawler(spark, corpus, cfg).run(["http://chain.test/p0.html"])
     vis = [r["url"] for r in res.visits.orderBy("pos").collect()]
     assert vis == [f"http://chain.test/p{i}.html" for i in range(n)]
@@ -551,7 +570,6 @@ def test_priority_crawl_same_coverage_different_order(spark):
 
     corpus = corpus_df(spark, 2, 8).cache()
     base = dict(
-        expected_urls=10_000, use_bloom=False,
         max_conn_per_host=3, max_conn=6,
     )
     fifo = Crawler(spark, corpus, CrawlConfig(**base)).run(seed_urls(2))

@@ -4,10 +4,12 @@ commit point, the metrics table's schema, the compaction cadence across
 resumes) and the number of Spark jobs a polite durable crawl launches."""
 
 import dataclasses
+import os
 import threading
 
 import pytest
 
+import wcm_spark.operators.dedup as dedup
 import wcm_spark.scheduler as scheduler
 from wcm_spark.corpus import corpus_df as make_corpus
 from wcm_spark.corpus import seed_urls
@@ -15,7 +17,7 @@ from wcm_spark.scheduler import CrawlConfig, Crawler
 from wcm_spark.store import TableStore
 
 N_SITES, PAGES = 2, 8
-POLITE = dict(expected_urls=10_000, max_conn_per_host=3)
+POLITE = dict(max_conn_per_host=3)
 STAGED = ("visits", "seen", "metrics")
 
 
@@ -36,20 +38,26 @@ def _digests(seen):
 
 
 def test_mirror_to_bloom_hand_off(spark, corpus, monkeypatch):
-    """A use_bloom crawl whose exact seen mirror is outgrown mid-crawl
-    builds the bloom exactly once, at the hand-off, and crawls exactly
-    like the default run, which never builds one."""
-    calls = []
-    build = scheduler.build_bloom
+    """A crawl whose exact seen mirror is outgrown mid-crawl builds the
+    bloom once, at the hand-off, prefilters every later wave's anti-join
+    with it, and crawls exactly like the default run, which never builds
+    one."""
+    builds, prefilters = [], []
+    build, prefilter = dedup.build_bloom, dedup.bloom_prefilter
 
     def counting_build(*args, **kw):
-        calls.append(1)
+        builds.append(1)
         return build(*args, **kw)
 
-    monkeypatch.setattr(scheduler, "build_bloom", counting_build)
+    def counting_prefilter(*args, **kw):
+        prefilters.append(1)
+        return prefilter(*args, **kw)
+
+    monkeypatch.setattr(dedup, "build_bloom", counting_build)
+    monkeypatch.setattr(dedup, "bloom_prefilter", counting_prefilter)
     base = Crawler(spark, corpus, CrawlConfig(**POLITE)).run(seed_urls(N_SITES))
     base_rows = _visit_rows(base.visits)
-    assert len(calls) == 0
+    assert not builds and not prefilters
 
     # the mirror holds every digest until the last wave that enqueues,
     # which pushes it one past broadcast_seen_max; later waves still fetch
@@ -58,12 +66,26 @@ def test_mirror_to_bloom_hand_off(spark, corpus, monkeypatch):
     last_enqueue = max(m["wave"] for m in base.metrics if m["enqueued"])
     assert last_enqueue < base.waves
     handoff = Crawler(
-        spark, corpus,
-        CrawlConfig(**POLITE, use_bloom=True, broadcast_seen_max=n_seen - 1),
+        spark, corpus, CrawlConfig(**POLITE, broadcast_seen_max=n_seen - 1),
     ).run(seed_urls(N_SITES))
     assert _visit_rows(handoff.visits) == base_rows
     assert _digests(handoff.seen) == _digests(base.seen)
-    assert len(calls) == 1
+    assert len(builds) == 1
+    assert len(prefilters) == handoff.waves - last_enqueue
+
+
+def test_crawl_destroys_its_broadcasts(spark, corpus, seen_max):
+    """Every seen broadcast a crawl makes is destroyed by the time ``run``
+    returns (a replaced mirror piece or bloom at once, the rest at
+    close), so the driver's broadcast files do not pile up across
+    crawls."""
+    temp_dir = spark.sparkContext._temp_dir
+    before = sorted(os.listdir(temp_dir))
+    res = Crawler(
+        spark, corpus, CrawlConfig(**POLITE, broadcast_seen_max=seen_max)
+    ).run(seed_urls(N_SITES))
+    assert res.waves > 1
+    assert sorted(os.listdir(temp_dir)) == before
 
 
 def _durable_visits(spark, cfg):
@@ -303,7 +325,7 @@ def test_capped_durable_wave_job_count(no_broadcast, tmp_path):
     room comes from the exact carry, so the cap costs no count job."""
     ns, corpus = no_broadcast
     cfg = CrawlConfig(
-        expected_urls=10_000, cap=6, max_conn=4,
+        cap=6, max_conn=4,
         checkpoint_dir=str(tmp_path / "ckpt"), commit_every=1,
     )
     res, jobs = _jobs_in_group(

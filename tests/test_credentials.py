@@ -75,7 +75,7 @@ def test_credential_learn_attach_and_journal(spark, duo, seen_max):
     h1.redirect_to = f"{b2}/landing"
 
     cfg = CrawlConfig(
-        fetch_mode="http", use_bloom=False, expected_urls=1000,
+        fetch_mode="http",
         http_timeout=5.0, http_concurrency=4,
         credentials={b2: "s2:pw"},  # static entry, URL-style key
         broadcast_seen_max=seen_max,
@@ -116,8 +116,8 @@ def test_no_harvest_without_carriers(spark, monkeypatch):
     )
     corpus = corpus_df(spark, n_sites=2, pages_per_site=5)
     for cfg in (
-        CrawlConfig(expected_urls=1000, broadcast_seen_max=0),
-        CrawlConfig(expected_urls=1000, broadcast_seen_max=0, max_conn_per_host=2),
+        CrawlConfig(broadcast_seen_max=0),
+        CrawlConfig(broadcast_seen_max=0, max_conn_per_host=2),
     ):
         res = Crawler(spark, corpus, cfg).run(seed_urls(2))
         assert res.waves > 1

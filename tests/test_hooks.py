@@ -53,8 +53,6 @@ def test_wave_hooks_and_handler_config(spark):
         return None  # observe only
 
     cfg = CrawlConfig(
-        expected_urls=5_000,
-        use_bloom=False,
         on_wave=on_wave,
         on_empty=lambda: empty_fired.append(True),
         html_handlers={"a[href]": lambda n: n.attrs.get("href")},
@@ -71,7 +69,7 @@ def test_wave_hooks_and_handler_config(spark):
 
     # default presets DO discover assets on the same corpus
     res_full = Crawler(
-        spark, corpus, CrawlConfig(expected_urls=5_000, use_bloom=False)
+        spark, corpus, CrawlConfig()
     ).run(seed_urls(2))
     full_urls = [r["request_url"] for r in res_full.visits.collect()]
     assert len(full_urls) > len(urls)
@@ -90,7 +88,7 @@ def test_on_wave_can_replace_pages(spark):
 
     res = Crawler(
         spark, corpus,
-        CrawlConfig(expected_urls=5_000, use_bloom=False, on_wave=drop_all),
+        CrawlConfig(on_wave=drop_all),
     ).run(seed_urls(2))
     assert res.waves == 1 and res.fetched == 2
 
@@ -111,7 +109,7 @@ def test_redundancy_replacement(spark):
     base = {r["url"] for r in corpus.select("url").collect()}
     page0 = sorted(u for u in base if u.endswith("/p/0.html"))[0]
 
-    cfg = CrawlConfig(use_bloom=False, expected_urls=100, redundancy=ignore_query)
+    cfg = CrawlConfig(redundancy=ignore_query)
     res = Crawler(spark, corpus, cfg).run(
         [page0, page0 + "?utm=x", page0 + "?utm=y"]
     )
@@ -120,7 +118,7 @@ def test_redundancy_replacement(spark):
     assert len(first_wave) == 1 and first_wave[0]["request_url"] == page0
 
     # default digest keeps them distinct
-    res2 = Crawler(spark, corpus, CrawlConfig(use_bloom=False, expected_urls=100)).run(
+    res2 = Crawler(spark, corpus, CrawlConfig()).run(
         [page0, page0 + "?utm=x", page0 + "?utm=y"]
     )
     assert len([r for r in res2.visits.collect() if r["wave"] == 1]) == 3

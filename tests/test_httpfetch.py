@@ -94,7 +94,7 @@ def test_live_crawl_visit_set_and_depths(spark, server):
     from wcm_spark.scheduler import Crawler, CrawlConfig
 
     cfg = CrawlConfig(
-        fetch_mode="http", use_bloom=False, expected_urls=1000,
+        fetch_mode="http",
         http_concurrency=4, http_timeout=5.0,
     )
     res = Crawler(spark, None, cfg).run([f"{server}/index.html"])
@@ -133,7 +133,7 @@ def test_live_crawl_error_channel(spark):
     from wcm_spark.scheduler import Crawler, CrawlConfig
 
     cfg = CrawlConfig(
-        fetch_mode="http", use_bloom=False, expected_urls=100,
+        fetch_mode="http",
         http_timeout=0.5, retry_errors=1, max_waves=3,
     )
     # RFC 5737 TEST-NET address: connection fails fast
@@ -178,7 +178,7 @@ def test_non_http_schemes_skipped_in_live_mode(spark, seen_max):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, retry_errors=2, broadcast_seen_max=seen_max,
             max_waves=5,  # guard: a skip miscounted as pending would spin
         )
@@ -231,7 +231,7 @@ def test_http_mode_fetches_each_url_exactly_once(spark):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0,
         )
         res = Crawler(spark, None, cfg).run([f"{base}/root.html"])
@@ -278,7 +278,7 @@ def test_min_delay_sec_spaces_same_host_requests(spark):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, min_delay_sec=0.4,
         )
         res = Crawler(spark, None, cfg).run([f"{base}/root.html"])
@@ -333,7 +333,7 @@ def test_backoff_status_rests_host_and_retries(spark):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, retry_errors=2,
             backoff_statuses=(429,), backoff_waves=2, max_waves=12,
         )
@@ -409,7 +409,7 @@ def test_conditional_get_304_with_validators(spark):
 
     try:
         cfg1 = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, on_wave=harvest,
         )
         res1 = Crawler(spark, None, cfg1).run([f"{base}/index.html"])
@@ -427,7 +427,7 @@ def test_conditional_get_304_with_validators(spark):
             "url string, etag string",
         )
         cfg2 = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, validators=validators, max_depth=1,
         )
         res2 = Crawler(spark, None, cfg2).run(sorted(harvested))

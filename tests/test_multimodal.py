@@ -141,7 +141,7 @@ def test_credentials_attach(spark):
         "url string, status int, content_type string, content_length bigint, body binary, redirect_to string",
     )
     cfg = CrawlConfig(
-        expected_urls=1000, use_bloom=False, max_waves=1,
+        max_waves=1,
         credentials={"http://site0.example.test": "user:pw"},
     )
     crawler = Crawler(spark, corpus_df, cfg)

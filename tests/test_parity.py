@@ -41,7 +41,7 @@ def sim_result(corpus_small):
 
 
 @pytest.fixture(scope="module")
-def spark_result(spark, corpus_small):
+def spark_result(spark, corpus_small, seen_max):
     corpus_df = spark.createDataFrame(
         [
             (r["url"], r["status"], r["content_type"], r["content_length"],
@@ -51,7 +51,7 @@ def spark_result(spark, corpus_small):
         "url string, status int, content_type string, content_length bigint, "
         "body binary, redirect_to string",
     ).cache()
-    crawler = Crawler(spark, corpus_df, CrawlConfig(expected_urls=10_000))
+    crawler = Crawler(spark, corpus_df, CrawlConfig(broadcast_seen_max=seen_max))
     return crawler.run(seed_urls(N_SITES))
 
 
@@ -115,7 +115,7 @@ def test_politeness_budget_restricts_waves(spark, corpus_small):
         "url string, status int, content_type string, content_length bigint, "
         "body binary, redirect_to string",
     )
-    cfg = CrawlConfig(max_conn=4, max_conn_per_host=2, max_waves=3, expected_urls=10_000)
+    cfg = CrawlConfig(max_conn=4, max_conn_per_host=2, max_waves=3)
     res = Crawler(spark, corpus_df, cfg).run(seed_urls(N_SITES))
     per_wave = (
         res.visits.groupBy("wave", "host_key").count().collect()
@@ -153,7 +153,7 @@ def test_queue_cap_parity(spark, cap):
         "url string, status int, content_type string, content_length bigint, "
         "body binary, redirect_to string",
     )
-    cfg = CrawlConfig(expected_urls=10_000, cap=cap, max_conn=1)
+    cfg = CrawlConfig(cap=cap, max_conn=1)
     res = Crawler(spark, corpus_df, cfg).run(seed_urls(2))
     got = [
         r["url"]
@@ -208,7 +208,7 @@ def test_min_delay_per_host(spark, corpus_small):
         "body binary, redirect_to string",
     )
     cfg = CrawlConfig(
-        expected_urls=10_000, use_bloom=False, min_delay_waves=1,
+        min_delay_waves=1,
         max_conn_per_host=2, max_waves=8,
     )
     res = Crawler(spark, corpus_df, cfg).run(seed_urls(N_SITES))
@@ -241,8 +241,6 @@ def test_url_filter_children_gated_seeds_bypass(spark):
         spark,
         corpus,
         CrawlConfig(
-            expected_urls=10_000,
-            use_bloom=False,
             url_filter_expr=f"url LIKE '{prefix}%'",
         ),
     ).run(seed_urls(CRAWL_FIXTURE[0]))
@@ -279,7 +277,6 @@ def test_priority_crawl_visit_order_parity(spark):
         spark,
         corpus,
         CrawlConfig(
-            expected_urls=10_000, use_bloom=False,
             max_conn=4, priority_expr="depth",
         ),
     ).run(seed_urls(CRAWL_FIXTURE[0]))
@@ -313,8 +310,7 @@ def test_priority_seq_reduces_to_fifo(spark):
     def run(expr):
         res = Crawler(
             spark, corpus,
-            CrawlConfig(expected_urls=10_000, use_bloom=False,
-                        max_conn=6, priority_expr=expr),
+            CrawlConfig(max_conn=6, priority_expr=expr),
         ).run(seed_urls(CRAWL_FIXTURE[0]))
         return [
             (r["pos"], r["url"], r["status"], r["depth"])
@@ -357,12 +353,8 @@ def test_skew_crawl_visit_set_matches_uncapped(spark):
         res = Crawler(spark, corpus, cfg).run(seeds)
         return {r["url"] for r in res.visits.select("url").collect()}
 
-    uncapped = visit_urls(CrawlConfig(expected_urls=10_000, use_bloom=False))
-    capped = visit_urls(
-        CrawlConfig(
-            expected_urls=10_000, use_bloom=False, max_conn_per_host=12
-        )
-    )
+    uncapped = visit_urls(CrawlConfig())
+    capped = visit_urls(CrawlConfig(max_conn_per_host=12))
     assert capped == uncapped
     # the skew is real: the hot host holds >40% of visits
     hot = sum(1 for u in uncapped if "//site0." in u)

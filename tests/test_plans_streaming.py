@@ -1,6 +1,7 @@
 """Plan-shape assertions (.explain auditing) + streaming metrics."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -75,7 +76,7 @@ def test_visits_stream_end_to_end(spark, tmp_path):
         "url string, status int, content_type string, content_length bigint, body binary, redirect_to string",
     )
     ckpt = str(tmp_path / "store")
-    cfg = CrawlConfig(expected_urls=5000, use_bloom=False, checkpoint_dir=ckpt)
+    cfg = CrawlConfig(checkpoint_dir=ckpt)
     res = Crawler(spark, corpus, cfg).run(seed_urls(2))
 
     visits_dirs = TableStore(ckpt).snapshots("visits")[-1]["dirs"]
@@ -260,15 +261,14 @@ def test_neardup_and_jaccard_have_no_pair_explosion(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the image cluster queries checkpoint their pair chain before the
-    # label/keeper joins the loop above sees — assert the pair chain's
-    # OWN plan too (candidates must equi-join on (band_no, sig), never
-    # pair the table with itself)
-    from wcm_spark.datapipe.queries import _image_pair_ctes
+    # label/keeper joins the loop above sees — assert the production pair
+    # frame's OWN plan too (candidates must equi-join on (band_no, sig),
+    # never pair the table with itself)
+    from wcm_spark.datapipe.queries import _image_pairs_df
 
-    plan = formatted_plan(
-        spark.sql(f"WITH {_image_pair_ctes('spark', 8)} SELECT * FROM ipairs")
-    )
+    plan = formatted_plan(_image_pairs_df(spark, 8))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert re.search(r"Left keys \[2\]: \[band_no#\d+, sig#\d+L?\]", plan), plan
 
 
 def test_stream_dedup_first_wins(spark, tmp_path):

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 
 from wcm_spark.htmlkit import extract_links, parse_html, serialize_node
 from wcm_spark.images import LOSSLESS_FMT, LOSSY_FMT, decode_image, encode_image, psnr
-from wcm_spark.operators.dedup import CuckooFilter, NumpyBloom
+from wcm_spark.operators.dedup import NumpyBloom
 from wcm_spark.robots import parse_robots
 from wcm_spark.urlkit import (
     SCHEME_ALLOW,
@@ -107,14 +107,6 @@ def test_guess_encoding_total(ct, body):
 def test_robots_parse_total(body):
     rules = parse_robots(body)
     assert isinstance(rules.allowed("/any/path"), bool)
-
-
-@given(hashes=st.lists(st.integers(min_value=0, max_value=2**62 - 1), max_size=300, unique=True))
-@settings(max_examples=50, deadline=None)
-def test_cuckoo_no_false_negatives(hashes):
-    cf = CuckooFilter(1024)
-    inserted = [h for h in hashes if cf.add(h)]
-    assert all(cf.contains(h) for h in inserted)
 
 
 @given(seed=st.integers(min_value=0, max_value=2**31 - 1), n=st.integers(min_value=1, max_value=2000))

@@ -29,17 +29,15 @@ def test_kill_resume_equivalence(spark, corpus_df, tmp_path):
     """A crawl killed after 2 waves and resumed matches an uninterrupted
     crawl: same total fetches, same visit set, same seen set."""
     full = Crawler(
-        spark, corpus_df, CrawlConfig(expected_urls=5000, use_bloom=False)
+        spark, corpus_df, CrawlConfig()
     ).run(seed_urls(N_SITES))
     full_urls = {r["url"] for r in full.visits.collect()}
     full_seen = {r["digest"] for r in full.seen.collect()}
 
     ckpt = str(tmp_path / "ckpt")
-    cfg_partial = CrawlConfig(
-        expected_urls=5000, use_bloom=False, checkpoint_dir=ckpt, max_waves=2
-    )
+    cfg_partial = CrawlConfig(checkpoint_dir=ckpt, max_waves=2)
     partial = Crawler(spark, corpus_df, cfg_partial).run(seed_urls(N_SITES))
-    cfg_resume = CrawlConfig(expected_urls=5000, use_bloom=False, checkpoint_dir=ckpt)
+    cfg_resume = CrawlConfig(checkpoint_dir=ckpt)
     resumed = Crawler.resume(spark, corpus_df, cfg_resume)
 
     assert partial.fetched + resumed.fetched == full.fetched
@@ -64,7 +62,7 @@ def test_image_payload_fidelity(spark, corpus_df):
     lossless, PSNR >= 40 dB for lossy, caption equality vs the source."""
     res = Crawler(
         spark, corpus_df,
-        CrawlConfig(expected_urls=5000, use_bloom=False, collect_images=True),
+        CrawlConfig(collect_images=True),
     ).run(seed_urls(N_SITES))
     rows = res.images.collect()
     assert rows, "crawl must sink image rows"
@@ -134,7 +132,7 @@ def test_kill_resume_live_http_no_refetch(spark, tmp_path):
     try:
         ckpt = str(tmp_path / "http-ckpt")
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, checkpoint_dir=ckpt,
         )
         import dataclasses
@@ -169,9 +167,7 @@ def test_kill_resume_priority_crawl_order_parity(spark, corpus_df, tmp_path):
     the uninterrupted crawl's visit sequence — the checkpoint carries
     enough frontier state (seq, depth) for the (priority DESC, seq)
     total order to continue unchanged."""
-    cfg_kw = dict(
-        expected_urls=5000, use_bloom=False, max_conn=6, priority_expr="depth"
-    )
+    cfg_kw = dict(max_conn=6, priority_expr="depth")
     full = Crawler(spark, corpus_df, CrawlConfig(**cfg_kw)).run(seed_urls(N_SITES))
     full_v = [
         (r["pos"], r["url"], r["depth"])

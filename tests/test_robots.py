@@ -78,7 +78,7 @@ def test_robots_parity_engine_vs_simulator(spark):
         [(r["url"], r["status"], r["content_type"], r["content_length"], r["body"], r["redirect_to"]) for r in rows],
         "url string, status int, content_type string, content_length bigint, body binary, redirect_to string",
     ).cache()
-    cfg = CrawlConfig(expected_urls=10_000, use_bloom=False, respect_robots=True)
+    cfg = CrawlConfig(respect_robots=True)
     res = Crawler(spark, corpus_df, cfg).run(seed_urls(3))
 
     got = [r["url"] for r in res.visits.filter("status is not null").orderBy("pos").collect()]
@@ -144,7 +144,7 @@ def test_live_robots_fetch_and_gate(spark, monkeypatch, seen_max):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, respect_robots=True, broadcast_seen_max=seen_max,
         )
         res = Crawler(spark, None, cfg).run([f"{base}/index.html"])
@@ -239,7 +239,7 @@ def test_bounded_robots_cache_spill_same_verdicts(spark, queue):
             gates.append((len(c._robots.held), c._robots.spill_dir))
 
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, respect_robots=True, max_waves=6,
             robots_cache_max_hosts=cap, on_wave=snap, **queue,
         )
@@ -322,7 +322,7 @@ def test_fetch_time_robots_gate_drains_frontier(spark):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, respect_robots=True,
             max_waves=5,  # guard: pre-fix the loop would spin to this cap
         )
@@ -408,7 +408,7 @@ def test_live_crawl_delay_spaces_requests(spark):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         cfg = CrawlConfig(
-            fetch_mode="http", use_bloom=False, expected_urls=100,
+            fetch_mode="http",
             http_timeout=5.0, respect_robots=True,
         )
         res = Crawler(spark, None, cfg).run([f"{base}/root.html"])

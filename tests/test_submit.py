@@ -35,7 +35,7 @@ def test_crawl_under_stock_aqe_session(spark):
 
     ns = spark.newSession()
     ns.conf.set("spark.sql.adaptive.enabled", "true")
-    cfg = CrawlConfig(expected_urls=100_000)
+    cfg = CrawlConfig()
     res = Crawler(ns, corpus_df(ns, 2, 6).cache(), cfg).run(seed_urls(2))
     base = Crawler(spark, corpus_df(spark, 2, 6).cache(), cfg).run(
         seed_urls(2)

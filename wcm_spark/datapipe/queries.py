@@ -75,14 +75,14 @@ def _hex2int(expr: str, d: str) -> str:
     return f"cast(('0x' || {expr}) as bigint)"
 
 
-def _shr(expr: str, n: int, d: str) -> str:
-    """Bigint right shift (DuckDB has >>, Spark the function form)."""
-    return f"shiftright({expr}, {n})" if d == "spark" else f"({expr} >> {n})"
+def _shr(expr: str, n: int) -> str:
+    """DuckDB bigint right shift (the image pair oracle's band slice)."""
+    return f"({expr} >> {n})"
 
 
-def _xor(a: str, b: str, d: str) -> str:
-    """Bigint xor — Spark's ^ is xor, DuckDB's ^ is exponentiation."""
-    return f"({a} ^ {b})" if d == "spark" else f"xor({a}, {b})"
+def _xor(a: str, b: str) -> str:
+    """DuckDB bigint xor: DuckDB's ^ is exponentiation."""
+    return f"xor({a}, {b})"
 
 
 def _dlit(x: float) -> str:
@@ -1510,11 +1510,12 @@ def _image_pair_ctes(d, max_hamming: int) -> str:
     band-equal candidates, exact Hamming = bit_count(xor) on candidates
     only. Ends in ``ipairs(ia, ib, hamming)``. The fixture is engineered
     so the REAL hamming<=8 operating point is non-trivial (no synthetic
-    gate override)."""
+    gate override). DuckDB oracle text: Spark builds the same pair set
+    in ``_image_pairs_df``."""
     t = _images_tbl(d)
     band_sel = "\n  UNION ALL ".join(
         f"SELECT image_id, {b} AS band_no, "
-        f"{_shr('phash', b * 16, d)} & 65535 AS sig FROM it"
+        f"{_shr('phash', b * 16)} & 65535 AS sig FROM it"
         for b in range(4)
     )
     return f"""it AS (SELECT image_id, phash, caption FROM {t}),
@@ -1528,11 +1529,11 @@ icand AS (
 ),
 ipairs AS (
   SELECT c.ia, c.ib,
-         CAST(bit_count({_xor('ta.phash', 'tb.phash', d)}) AS BIGINT) AS hamming
+         CAST(bit_count({_xor('ta.phash', 'tb.phash')}) AS BIGINT) AS hamming
   FROM icand c
   JOIN it ta ON ta.image_id = c.ia
   JOIN it tb ON tb.image_id = c.ib
-  WHERE bit_count({_xor('ta.phash', 'tb.phash', d)}) <= {max_hamming}
+  WHERE bit_count({_xor('ta.phash', 'tb.phash')}) <= {max_hamming}
 )"""
 
 
@@ -1657,54 +1658,58 @@ FROM idecided
 GROUP BY fmt"""
 
 
+def _image_pairs_df(spark, gate: int):
+    """The image LSH pair frame ``(a, b)`` of the engine path, a < b,
+    hamming <= ``gate`` (oracle: ``_image_pair_ctes``). One scan with
+    phash riding the band rows replaces the SQL chain's 4-scan band union
+    + DISTINCT + double join-back (the hamming gate needs both phashes;
+    carrying them through the band self-join makes the verify map-side).
+    Same pair set: the gate commutes with the cross-band dedup (hamming
+    is pair-determined), and ia < ib is preserved."""
+    from pyspark.sql import functions as F
+
+    it = spark.sql(f"SELECT image_id, phash FROM {_images_tbl('spark')}")
+    bands = it.select(
+        "image_id",
+        "phash",
+        F.posexplode(
+            F.expr(
+                "transform(sequence(0, 3), "
+                "b -> shiftright(phash, b * 16) & 65535)"
+            )
+        ).alias("band_no", "sig"),
+    )
+    a = bands.select(
+        "band_no", "sig",
+        F.col("image_id").alias("ia"), F.col("phash").alias("pha"),
+    )
+    b = bands.select(
+        "band_no", "sig",
+        F.col("image_id").alias("ib"), F.col("phash").alias("phb"),
+    )
+    return (
+        a.join(b, ["band_no", "sig"])
+        .filter(F.col("ia") < F.col("ib"))
+        .filter(F.expr("bit_count(pha ^ phb)") <= F.lit(gate))
+        .select(F.col("ia").alias("a"), F.col("ib").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
+
+
 def _image_pick_frames(spark, gate: int):
     """(labels, profile, keep) frames of the image keep-one policy on
-    the engine path: the LSH pair chain is checkpointed ONCE and the
-    propagation runs through the graph module's connected_components —
-    the SQL builders' unrolled CTE form would be inlined by Catalyst
-    into every hop (2^iters re-evaluations, the measured round-3 failure
-    mode) and stays the independent DuckDB oracle. Memoized per
+    the engine path: the LSH pair chain (``_image_pairs_df``) is
+    checkpointed ONCE and the propagation runs through the graph
+    module's connected_components — the SQL builders' unrolled CTE
+    form would be inlined by Catalyst into every hop (2^iters
+    re-evaluations, the measured round-3 failure mode) and stays the
+    independent DuckDB oracle. Memoized per
     application: caption pick and the curation pipeline share one
     cluster+keep computation."""
     from pyspark.sql import functions as F
 
     def build():
-        # r6: one scan with phash riding the band rows replaces the SQL
-        # chain's 4-scan band union + DISTINCT + double join-back (the
-        # hamming gate needs both phashes; carrying them through the
-        # band self-join makes the verify map-side). Same pair set: the
-        # gate commutes with the cross-band dedup (hamming is
-        # pair-determined), and ia < ib is preserved.
-        it = spark.sql(
-            f"SELECT image_id, phash FROM {_images_tbl('spark')}"
-        )
-        bands = it.select(
-            "image_id",
-            "phash",
-            F.posexplode(
-                F.expr(
-                    "transform(sequence(0, 3), "
-                    "b -> shiftright(phash, b * 16) & 65535)"
-                )
-            ).alias("band_no", "sig"),
-        )
-        a = bands.select(
-            "band_no", "sig",
-            F.col("image_id").alias("ia"), F.col("phash").alias("pha"),
-        )
-        b = bands.select(
-            "band_no", "sig",
-            F.col("image_id").alias("ib"), F.col("phash").alias("phb"),
-        )
-        pairs = (
-            a.join(b, ["band_no", "sig"])
-            .filter(F.col("ia") < F.col("ib"))
-            .filter(
-                F.expr("bit_count(pha ^ phb)") <= F.lit(gate)
-            )
-            .select(F.col("ia").alias("a"), F.col("ib").alias("b"))
-            .dropDuplicates(["a", "b"])
-        )
+        pairs = _image_pairs_df(spark, gate)
         final = _lsh_component_labels(spark, pairs, IMG_CC_ITERS, "image_id")
         imgs = spark.sql(
             f"SELECT image_id, caption FROM {_images_tbl('spark')}"
@@ -6015,7 +6020,7 @@ def _q_crawl(spark, sf_dir):
     from .fixtures import CRAWL_FIXTURE, fixture_corpus_path
 
     corpus = spark.read.parquet(fixture_corpus_path(*CRAWL_FIXTURE)).cache()
-    res = Crawler(spark, corpus, CrawlConfig(expected_urls=10_000, use_bloom=False)).run(
+    res = Crawler(spark, corpus, CrawlConfig()).run(
         seed_urls(CRAWL_FIXTURE[0])
     )
     return res.visits.select("pos", "url", "status", "depth").orderBy("pos")
@@ -6043,8 +6048,6 @@ def _q_crawl_url_filter(spark, sf_dir):
         spark,
         corpus,
         CrawlConfig(
-            expected_urls=10_000,
-            use_bloom=False,
             url_filter_expr=f"url LIKE '{CRAWL_URL_FILTER_PREFIX}%'",
         ),
     ).run(seed_urls(CRAWL_FIXTURE[0]))
@@ -6287,7 +6290,7 @@ def _image_crawl(spark):
         corpus = spark.read.parquet(fixture_corpus_path(*CRAWL_FIXTURE)).cache()
         return Crawler(
             spark, corpus,
-            CrawlConfig(expected_urls=10_000, use_bloom=False, collect_images=True),
+            CrawlConfig(collect_images=True),
         ).run(seed_urls(CRAWL_FIXTURE[0]))
 
     return _app_cached(spark, "image_crawl", build)

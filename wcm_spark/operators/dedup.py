@@ -1,21 +1,24 @@
-"""URL-seen set at scale: exact anti-join + bloom/cuckoo prefilters (D2).
+"""The URL-seen set (D2): one owner, one bound.
 
 The reference keeps an exact in-memory hash of MD5 digests
-(Queue/Memory.pm:10,37-46). At 10^10 URLs a single hash set is impossible;
-the engine layers:
+(Queue/Memory.pm:10,37-46). :class:`SeenSet` keeps the crawl's copy and
+takes every seen-set decision behind one bound, ``broadcast_seen_max``:
 
-1. **broadcast counting-bloom prefilter** — built distributively (partial
-   numpy bit-arrays per partition, OR-merged on the driver, ~MBs for 1e8+
-   digests at 1% fpp), broadcast to executors; definite-negatives skip the
-   join entirely. Hash indexes are derived from two JVM-side xxhash64
-   columns (Kirsch–Mitzenmacher double hashing) so no Python touches the
-   hot rows until the vectorized membership test.
-2. **exact left-anti join backstop** against the ``seen(digest)`` table —
-   the bloom only thins the probe side; correctness never depends on it.
+1. **at or below the bound: exact mirror** — the digest set lives on the
+   driver and ships to the fused scrape UDF as broadcast pieces (the base
+   set once, then one fresh-digest delta per wave), which drops seen
+   children before they cross the Arrow boundary.
+2. **past the bound: bloom + exact anti-join** — a bloom sized from the
+   seen count (rebuilt at twice the count once it fills) is built
+   distributively (partial numpy bit-arrays per partition, OR-merged on
+   the driver) and broadcast; definite-negatives skip the anti-join
+   shuffle, and the exact left-anti join against the seen digests backs
+   it, so correctness never depends on the bloom. Hash indexes come from
+   two JVM-side xxhash64 columns (Kirsch–Mitzenmacher double hashing), so
+   no Python touches the rows until the vectorized membership test.
 
-A deletable :class:`CuckooFilter` is provided as the second
-approximate-membership structure the north rule names; see its docstring
-for why the append-only crawl paths don't use it.
+The set is append-only, so no cuckoo filter: deletion is what a cuckoo
+filter buys over a bloom, and nothing here is ever removed.
 
 PySpark exposes no bloom builder (DataFrameStatFunctions.bloomFilter is
 Scala-only), hence the numpy implementation.
@@ -30,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["NumpyBloom", "CuckooFilter", "with_bloom_hashes", "build_bloom", "seen_anti_join"]
+__all__ = ["NumpyBloom", "SeenSet", "with_bloom_hashes", "build_bloom", "seen_anti_join"]
 
 _H1 = "__bh1"
 _H2 = "__bh2"
@@ -69,80 +72,6 @@ class NumpyBloom:
         hits = (self.bits[(idx // 8).astype(np.int64)] >> (idx % 8).astype(np.uint8)) & 1
         return hits.all(axis=0)
 
-    def merge(self, other: "NumpyBloom") -> "NumpyBloom":
-        assert self.n_bits == other.n_bits and self.n_hashes == other.n_hashes
-        self.bits |= other.bits
-        return self
-
-
-class CuckooFilter:
-    """Bucketed cuckoo filter (4-slot buckets, 16-bit fingerprints).
-
-    The deletable approximate-membership building block the north rule
-    names alongside the counting bloom. Property-tested
-    (tests/test_properties.py, test_components.py) but deliberately NOT on
-    the crawl hot path: the URL-seen set is append-only (deletion support
-    buys nothing there), and intra-partition duplicate suppression before
-    the first-emit-wins shuffle already happens for free in Catalyst's
-    map-side partial aggregation of the digest groupBy. Reach for it when
-    a deployment needs membership WITH deletes (e.g. a recrawl frontier
-    that retires expired URLs). numpy storage, scalar kick loop (bounded)."""
-
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int):
-        self.n_buckets = 1 << (n_buckets - 1).bit_length()  # power of two
-        self.table = np.zeros((self.n_buckets, 4), dtype=np.uint16)
-
-    def _fp(self, h: int) -> int:
-        fp = (h >> 32) & 0xFFFF
-        return fp if fp != 0 else 1
-
-    def _b1(self, h: int) -> int:
-        return h & (self.n_buckets - 1)
-
-    def _b2(self, b1: int, fp: int) -> int:
-        # partial-key cuckoo: alt bucket = b1 xor hash(fp)
-        return (b1 ^ (fp * 0x5BD1E995)) & (self.n_buckets - 1)
-
-    def add(self, h: int) -> bool:
-        fp = self._fp(h)
-        b1 = self._b1(h)
-        b2 = self._b2(b1, fp)
-        for b in (b1, b2):
-            row = self.table[b]
-            free = np.where(row == 0)[0]
-            if free.size:
-                row[free[0]] = fp
-                return True
-        b = b1 if (h & 1) else b2
-        for _ in range(self.MAX_KICKS):
-            slot = (h >> 48) & 3
-            fp, self.table[b, slot] = int(self.table[b, slot]), fp
-            b = self._b2(b, fp)
-            row = self.table[b]
-            free = np.where(row == 0)[0]
-            if free.size:
-                row[free[0]] = fp
-                return True
-        return False  # table full — callers fall back to the exact path
-
-    def contains(self, h: int) -> bool:
-        fp = self._fp(h)
-        b1 = self._b1(h)
-        b2 = self._b2(b1, fp)
-        return bool((self.table[b1] == fp).any() or (self.table[b2] == fp).any())
-
-    def delete(self, h: int) -> bool:
-        fp = self._fp(h)
-        b1 = self._b1(h)
-        for b in (b1, self._b2(b1, fp)):
-            hit = np.where(self.table[b] == fp)[0]
-            if hit.size:
-                self.table[b, hit[0]] = 0
-                return True
-        return False
-
 
 def with_bloom_hashes(df: DataFrame, digest_col: str = "digest") -> DataFrame:
     """Attach the two JVM-side base hashes used by every bloom op."""
@@ -172,21 +101,23 @@ def build_bloom(df: DataFrame, bloom: NumpyBloom, digest_col: str = "digest") ->
     return bloom
 
 
-def bloom_prefilter(df: DataFrame, bloom: NumpyBloom, digest_col: str = "digest"):
+def bloom_prefilter(df: DataFrame, bloom, digest_col: str = "digest"):
     """Split candidates into (maybe_seen, definitely_fresh) via the bloom.
 
     ``definitely_fresh`` rows skip the anti-join shuffle entirely; only
-    ``maybe_seen`` rows (true hits + fpp false positives) pay the join."""
-    spark = df.sparkSession
-    b = spark.sparkContext.broadcast((bloom.n_bits, bloom.n_hashes, bloom.bits.tobytes()))
+    ``maybe_seen`` rows (true hits + fpp false positives) pay the join.
+    ``bloom``: a :class:`NumpyBloom`, broadcast here, or a broadcast of one
+    that the caller owns (``SeenSet`` holds one at a time)."""
+    b = (
+        df.sparkSession.sparkContext.broadcast(bloom)
+        if isinstance(bloom, NumpyBloom) else bloom
+    )
 
     @F.pandas_udf("boolean")
     def maybe(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        n_bits, n_hashes, raw = b.value
-        bf = NumpyBloom(n_bits, n_hashes, np.frombuffer(raw, dtype=np.uint8))
         if not len(h1):
             return pd.Series([], dtype=bool)
-        return pd.Series(bf.contains(h1.to_numpy(), h2.to_numpy()))
+        return pd.Series(b.value.contains(h1.to_numpy(), h2.to_numpy()))
 
     hashed = with_bloom_hashes(df, digest_col).withColumn("__maybe", maybe(F.col(_H1), F.col(_H2)))
     maybe_seen = hashed.filter("__maybe").drop(_H1, _H2, "__maybe")
@@ -197,7 +128,7 @@ def bloom_prefilter(df: DataFrame, bloom: NumpyBloom, digest_col: str = "digest"
 def seen_anti_join(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: NumpyBloom | None = None,
+    bloom=None,
     digest_col: str = "digest",
     seen_count: int | None = None,
     broadcast_threshold: int = 4_000_000,
@@ -223,3 +154,106 @@ def seen_anti_join(
     maybe_seen, fresh = bloom_prefilter(candidates, bloom, digest_col)
     survivors = maybe_seen.join(seen, digest_col, "left_anti")
     return fresh.unionByName(survivors)
+
+
+class SeenSet:
+    """The crawl's URL-seen set, marked at enqueue (D2): the seed or
+    snapshot ``digests`` (``n`` of them at most) plus every ``add``.
+
+    At or below ``bound`` digests it is an exact driver mirror that the
+    scrape UDF probes (``probe``); the first ``add`` past the bound hands
+    off, for good, to a bloom of capacity ``max(2n, MIN_CAPACITY)`` that
+    prefilters an exact shuffle anti-join (``unseen``), rebuilt from
+    ``frame`` at twice the count once it fills. Driver cost of the mirror
+    at the 4M default: ~128MB of digest payload, ~400MB with Python
+    object overhead. ``frame`` is always the exact set, a lazy union of
+    checkpointed digest pieces, so no wave re-checkpoints it. A broadcast
+    replaced by a newer one is destroyed; ``close`` destroys the rest."""
+
+    MAX_PIECES = 8  # mirror pieces before they re-consolidate into one
+    MIN_CAPACITY = 1 << 16
+    FPP = 0.01
+
+    def __init__(self, digests: DataFrame, n: int, bound: int):
+        self.frame = digests.localCheckpoint(eager=True)
+        self.n = n
+        self._bound = bound
+        self._sc = digests.sparkSession.sparkContext
+        self._pieces: list = []
+        self._delta: set = set()
+        self._mirror = self._bloom = self._bloom_bc = None
+        self.capacity = 0  # the bloom's; 0 while the mirror is on
+        if n <= bound:
+            self._mirror = {r["digest"] for r in self.frame.collect()}
+            self.n = len(self._mirror)
+        else:
+            self._build_bloom()
+
+    def probe(self) -> list | None:
+        """The mirror's broadcast pieces for the scrape UDF's in-UDF
+        probe, largest first, or None past the bound. The base set ships
+        once, then each wave only its fresh-digest delta (O(new) per wave,
+        not O(total)); every MAX_PIECES pieces they re-consolidate into
+        one, so the per-candidate probe stays O(1)-ish."""
+        if self._mirror is None:
+            return None
+        if not self._pieces or (self._delta and len(self._pieces) >= self.MAX_PIECES):
+            self._destroy_pieces()
+            self._pieces = [self._sc.broadcast(self._mirror)]
+        elif self._delta:
+            self._pieces.append(self._sc.broadcast(self._delta))
+        self._delta = set()
+        return self._pieces
+
+    def unseen(self, children: DataFrame) -> DataFrame:
+        """``children`` (scraped with this wave's ``probe``) whose digest is
+        not in the set: unchanged while the mirror's probe already dropped
+        the seen ones in-UDF, else the bloom-prefiltered anti-join."""
+        if self._mirror is not None:
+            return children
+        if self._bloom_bc is None:
+            self._bloom_bc = self._sc.broadcast(self._bloom)
+        return seen_anti_join(children, self.frame, self._bloom_bc)
+
+    def add(self, fresh: DataFrame, n: int) -> None:
+        """Mark ``fresh``, a pinned frame of ``n`` enqueued digests, seen:
+        the mirror's delta collect (Arrow-batched, ~10x the row collect at
+        100k+ digests), the hand-off once the mirror would outgrow the
+        bound, or the bloom add."""
+        if not n:
+            return
+        self.frame = self.frame.unionByName(fresh)
+        self.n += n
+        if self._mirror is not None and self.n <= self._bound:
+            digests = fresh.toPandas()["digest"].tolist()
+            self._mirror.update(digests)
+            self._delta.update(digests)
+            self.n = len(self._mirror)
+        elif self._mirror is not None or self.n > self.capacity:
+            # the hand-off, or a full bloom: (re)build it from frame
+            self._mirror = None
+            self._destroy_pieces()
+            self._build_bloom()
+        else:
+            build_bloom(fresh, self._bloom)
+            self._drop_bloom_bc()
+
+    def close(self) -> None:
+        """Destroy every broadcast the set still holds."""
+        self._destroy_pieces()
+        self._drop_bloom_bc()
+
+    def _build_bloom(self) -> None:
+        self.capacity = max(2 * self.n, self.MIN_CAPACITY)
+        self._bloom = build_bloom(self.frame, NumpyBloom.sized(self.capacity, self.FPP))
+        self._drop_bloom_bc()
+
+    def _destroy_pieces(self) -> None:
+        for b in self._pieces:
+            b.destroy()
+        self._pieces = []
+
+    def _drop_bloom_bc(self) -> None:
+        if self._bloom_bc is not None:
+            self._bloom_bc.destroy()
+            self._bloom_bc = None

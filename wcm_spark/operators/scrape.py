@@ -131,16 +131,16 @@ def scrape_resolve_children(
     (asserted in tests/test_parity.py::test_fused_equals_staged).
 
     ``seen_bc``: optional broadcast of the exact seen-digest set — either
-    one Broadcast[set] or a LIST of them (the scheduler ships the base set
-    once and then only per-wave deltas; the probe is the union). Pieces
-    should be ordered largest-first: ~97% of candidates on link-dense
-    waves hit the base set, so the loop short-circuits on the first
-    probe for the common case. When the set still fits a broadcast (same
-    threshold as the broadcast anti-join) the D2 probe runs HERE, before
-    rows ever cross the Arrow boundary — this cuts the transferred row
-    count ~30x. Exactness is unchanged: the predicate is identical to the
-    anti-join's. Beyond the threshold the caller passes None and the
-    bloom+shuffle anti-join path takes over.
+    one Broadcast[set] or a LIST of them (``SeenSet.probe`` ships the base
+    set once and then only per-wave deltas; the probe is the union).
+    Pieces should be ordered largest-first: ~97% of candidates on
+    link-dense waves hit the base set, so the loop short-circuits on the
+    first probe for the common case. While the seen set is at or below
+    ``broadcast_seen_max`` the D2 probe runs HERE, before rows ever cross
+    the Arrow boundary — this cuts the transferred row count ~30x.
+    Exactness is unchanged: the predicate is identical to the anti-join's.
+    Past the bound the caller passes None and ``SeenSet.unseen`` runs the
+    bloom-prefiltered anti-join instead.
 
     ``local_first_wins``: additionally keep only the partition-local
     minimum (parent_seq, emit_idx) per digest. The global window dedup

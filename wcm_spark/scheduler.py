@@ -19,9 +19,10 @@ Scale notes (the 1000-executor view):
   per-bucket ranks + Observation bucket counts, all riding the wave's one
   heavy checkpoint, so both numbers are projections, not extra jobs
 - the ``body`` column is pruned out of every stage except scrape/sink
-- seen set: an exact driver mirror probed in-UDF while it fits
-  ``broadcast_seen_max``; beyond that a bloom (built once at the hand-off)
-  prefilters an exact anti-join that shuffles only bloom-positive rows
+- seen set: ``operators.dedup.SeenSet`` under one bound,
+  ``broadcast_seen_max``: an exact driver mirror probed in-UDF while it
+  fits; past it a bloom sized from the seen count prefilters an exact
+  anti-join that shuffles only bloom-positive rows
 - per-wave lineage is cut with eager localCheckpoint (plan growth is the
   silent killer of iterative DataFrame jobs); durable state commits go to
   the TableStore (Iceberg-shaped) for resume, the frontier last as the
@@ -41,7 +42,8 @@ from pyspark.sql.window import Window
 
 from .frontier import cap_keep
 from .functions.core import digest_col, host_key_udf, host_salt_col
-from .operators.dedup import NumpyBloom, build_bloom, seen_anti_join
+from .operators.dedup import SeenSet
+from .operators.dedup import build_bloom  # noqa: F401 (perfbench wraps this name)
 from .operators.scrape import scrape_resolve_children
 from .operators.seq import (
     arith_bucket_col,
@@ -85,9 +87,6 @@ class CrawlConfig:
     retry_errors: int = 0                  # S2/F10 requeue budget (0 = reference default)
     salts: int = 64                        # host-salt partitioning fanout
     containers: list | None = None         # P4 context scoping
-    expected_urls: int = 1_000_000         # bloom sizing
-    bloom_fpp: float = 0.01
-    use_bloom: bool = True
     checkpoint_dir: str | None = None      # TableStore root for durable commits
     commit_every: int = 1                  # waves between durable commits
     compact_every_commits: int | None = None  # store maintenance cadence: every N
@@ -111,7 +110,9 @@ class CrawlConfig:
                                            # identical at any host count; declared
                                            # Crawl-delays are never evicted
     min_delay_waves: int = 0               # F6 politeness budget: waves a host rests between fetches
-    broadcast_seen_max: int = 4_000_000    # D2 in-UDF probe while the exact digest set fits a broadcast
+    broadcast_seen_max: int = 4_000_000    # D2: the seen set's one bound (SeenSet): at or below it
+                                           # an exact mirror probed in-UDF, above it a bloom
+                                           # sized from the seen count + shuffle anti-join
     fetch_mode: str = "corpus"             # "corpus" (test/bench join) | "http" (live network fetch)
     corpus_prepartitioned: bool = False    # corpus is a bucketed-by-url table: skip the
                                            # repartition+persist, let the bucketed scan
@@ -673,7 +674,9 @@ class Crawler:
         pending, pending_count, facts = self._pin_frontier(
             self._seed_frontier(seeds)
         )
-        seen = pending.select("digest").localCheckpoint(eager=True)
+        seen = SeenSet(
+            pending.select("digest"), pending_count, self.config.broadcast_seen_max
+        )
         try:
             # seed seqs are dense [0, n): the next seq to assign is n
             return self._loop(
@@ -681,6 +684,7 @@ class Crawler:
                 start_wave=0, seen_durable=False,
             )
         finally:
+            seen.close()
             self._robots.close()
 
     @classmethod
@@ -705,18 +709,22 @@ class Crawler:
             s for s in seen_snaps if s["meta"].get("wave") == meta.get("wave")
         ]
         seen_snap = at_frontier[-1] if at_frontier else seen_snaps[-1]
-        seen = store.read(spark, "seen", version=seen_snap["version"])
         crawler._commits_done = int(meta.get("commits", 0))
         pending, pending_count, facts = crawler._pin_frontier(pending)
+        # every seen digest was issued a seq: next_seq bounds their count
+        next_seq = int(meta.get("next_seq", 0))
+        seen = SeenSet(
+            store.read(spark, "seen", version=seen_snap["version"]),
+            next_seq, config.broadcast_seen_max,
+        )
         try:
             return crawler._loop(
-                pending, pending_count, facts,
-                seen.localCheckpoint(eager=True),
-                next_seq=int(meta.get("next_seq", 0)),
+                pending, pending_count, facts, seen, next_seq=next_seq,
                 start_wave=int(meta.get("wave", 0)),
                 seen_durable=seen_snap is seen_snaps[-1],
             )
         finally:
+            seen.close()
             crawler._robots.close()
 
     def _pin_frontier(self, pending: DataFrame) -> tuple[DataFrame, int, dict]:
@@ -749,10 +757,11 @@ class Crawler:
         seen_durable,
     ) -> CrawlResult:
         """The wave loop over the pinned ``pending`` frontier of
-        ``pending_count`` rows, whose ``_facts`` are ``facts``.
-        ``seen_durable``: ``seen`` is already the seen table's current
-        snapshot, so commits append per-wave deltas to it; otherwise the
-        first commit overwrites it with ``seen`` + delta. Each later wave's
+        ``pending_count`` rows, whose ``_facts`` are ``facts``, and the
+        ``SeenSet`` ``seen``. ``seen_durable``: ``seen.frame`` is already
+        the seen table's current snapshot, so commits append per-wave
+        deltas to it; otherwise the first commit overwrites it with
+        ``seen.frame`` + delta. Each later wave's
         facts ride the wave-cut checkpoint or, on drain-level crawls (the
         next wave is the whole fresh enqueue), the heavy checkpoint."""
         cfg = self.config
@@ -762,7 +771,7 @@ class Crawler:
         metrics: list[dict] = []
         uncommitted_visits: list[DataFrame] = []
         uncommitted_metrics: list[dict] = []
-        uncommitted_seen: list[DataFrame] = [] if seen_durable else [seen]
+        uncommitted_seen: list[DataFrame] = [] if seen_durable else [seen.frame]
         seen_mode = "append" if seen_durable else "overwrite"
         pos_base = 0  # dense visit position of this call's next visit
         wave_id = start_wave
@@ -793,28 +802,6 @@ class Crawler:
             cfg.fetch_mode != "http" and drain_level and self.store is None
             and cfg.shuffle_every is None
         )
-        # Exact driver-side seen set for the in-UDF D2 probe — maintained
-        # only while it fits cfg.broadcast_seen_max. Driver cost at the 4M
-        # default: 4M x 32-char digest strings ≈ 128MB of payload, ~400MB
-        # with Python object overhead — bounded and disclosed; beyond the
-        # cutoff the mirror is dropped and the bloom+anti-join path takes
-        # over.
-        # The broadcast is INCREMENTAL: the base set ships once, then each
-        # wave ships only its fresh-digest delta (seen_bcs pieces, largest
-        # first); pieces re-consolidate into one broadcast every 8 waves so
-        # the per-candidate probe stays O(1)-ish. The bloom prefilters only
-        # the anti-join path, so it is built when the mirror is off: here,
-        # or once at the hand-off when the mirror is outgrown.
-        seen_set: set | None = None
-        seen_bcs: list = []
-        seen_delta: set = set()
-        bloom = None
-        if cfg.broadcast_seen_max and next_seq <= cfg.broadcast_seen_max:
-            seen_set = {r["digest"] for r in seen.select("digest").collect()}
-        elif cfg.use_bloom:
-            bloom = build_bloom(
-                seen, NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp)
-            )
         while True:
             if pending_count == 0:
                 if cfg.on_empty is not None:
@@ -935,37 +922,22 @@ class Crawler:
 
                 image_frames.append(extract_image_rows(fetched).localCheckpoint(eager=True))
 
-            # D2 at the source while the exact digest set fits a broadcast:
-            # the fused UDF drops already-seen children BEFORE they cross
-            # the Arrow boundary (link-dense waves are ~97% seen rows), and
-            # keeps only the partition-local first emit per digest. The
-            # base set broadcasts ONCE; each later wave ships only its
-            # fresh-digest delta (O(new) serialization per wave, not
-            # O(total)), re-consolidating every 8 pieces. Beyond the
-            # threshold seen_bcs is empty and the bloom+shuffle anti-join
-            # backstop below takes over — same exact semantics.
-            if seen_set is not None:
-                if not seen_bcs:
-                    seen_bcs.append(spark.sparkContext.broadcast(seen_set))
-                elif seen_delta:
-                    if len(seen_bcs) >= 8:
-                        for b in seen_bcs:
-                            b.unpersist()
-                        seen_bcs = [spark.sparkContext.broadcast(seen_set)]
-                    else:
-                        seen_bcs.append(spark.sparkContext.broadcast(seen_delta))
-                    seen_delta = set()
             if cfg.on_wave is not None:
                 replaced = cfg.on_wave(wave_id, pages)
                 if replaced is not None:
                     pages = replaced
             if cfg.on_error is not None:
                 cfg.on_error(wave_id, fetched.filter(F.col("status").isNull()))
+            # D2 at the source while the seen mirror is on: the fused UDF
+            # drops already-seen children BEFORE they cross the Arrow
+            # boundary (link-dense waves are ~97% seen rows), and keeps
+            # only the partition-local first emit per digest
+            probe = seen.probe()
             children = scrape_resolve_children(
                 pages.select("url", "content_type", "content_length", "body", "seq", "depth"),
                 cfg.containers,
-                seen_bc=seen_bcs if seen_bcs else None,
-                local_first_wins=bool(seen_bcs),
+                seen_bc=probe,
+                local_first_wins=probe is not None,
                 handlers=cfg.html_handlers,
                 redundancy=cfg.redundancy,
             )
@@ -975,13 +947,10 @@ class Crawler:
                 # before the digest collect: a denied child never marks
                 # seen, exactly like a user who never calls enqueue
                 children = children.filter(F.expr(cfg.url_filter_expr))
-            # D2 before D3: they commute on digest, and anti-joining first
-            # (broadcast while seen fits) leaves the window dedup sorting
-            # only the unseen sliver instead of every extracted edge
-            if not seen_bcs:
-                fresh = seen_anti_join(children, seen, bloom, seen_count=next_seq)  # D2
-            else:
-                fresh = children  # probe already applied in-UDF, exactly
+            # D2 before D3: they commute on digest, and dropping seen rows
+            # first leaves the window dedup sorting only the unseen sliver
+            # instead of every extracted edge
+            fresh = seen.unseen(children)  # D2
             fresh = _dedup_min(fresh, "digest", ["parent_seq", "emit_idx"])  # D3
 
             # error channel (F10): requeue with retries+1, bypassing seen-check (S2).
@@ -1083,30 +1052,8 @@ class Crawler:
                 visits = visits.select(*VISIT_COLS, F.col("__dense").alias("pos"))
             visit_frames.append(visits)
             next_seq += enq_count
-            if seen_set is not None and enq_count:
-                if len(seen_set) + enq_count > cfg.broadcast_seen_max:
-                    # outgrown: bloom+anti-join from here on
-                    seen_set = None
-                    for b in seen_bcs:
-                        b.unpersist()
-                    seen_bcs = []
-                    if cfg.use_bloom:
-                        bloom = build_bloom(
-                            seen.unionByName(enqueue.select("digest")),
-                            NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp),
-                        )
-                else:
-                    # the fresh digests extend the exact mirror and ship as
-                    # the next delta broadcast; Arrow-batched (toPandas
-                    # moves the delta as columnar batches, ~10x faster than
-                    # the row-Row collect at 100k+ fresh digests/wave)
-                    fresh_digests = (
-                        enqueue.select("digest").toPandas()["digest"].tolist()
-                    )
-                    seen_set.update(fresh_digests)
-                    seen_delta.update(fresh_digests)
-            elif bloom is not None and enq_count:
-                build_bloom(enqueue.select("digest"), bloom)
+            fresh_seen = enqueue.select("digest")
+            seen.add(fresh_seen, enq_count)
 
             if drain_level:
                 # BFS fast path: the wave was the whole pending set, so the
@@ -1134,15 +1081,10 @@ class Crawler:
                 new_pending = new_pending.localCheckpoint(eager=True)
             elif not drain_level:
                 new_pending = new_pending.localCheckpoint(eager=True)
-            # seen is a lazy union of materialized pieces (seed checkpoint
-            # + per-wave enqueue checkpoints): unioning is plan-only, so
-            # there is no per-wave O(total-seen) re-checkpoint; the
-            # anti-join just scans the pieces
-            fresh_seen = enqueue.select("digest")
             uncommitted_seen.append(fresh_seen)
             if not drain_level:
                 pending.unpersist()
-            pending, seen = new_pending, seen.unionByName(fresh_seen)
+            pending = new_pending
             # exact carry in both paths: remaining = pending - wave_taken
             # (pre-robots-gate — disallowed rows also left the frontier),
             # plus the fresh enqueue — no per-wave recount job needed
@@ -1181,7 +1123,7 @@ class Crawler:
         images = _union_all(image_frames) if image_frames else None
 
         return CrawlResult(
-            visits=visits_all, seen=seen, metrics=metrics, images=images,
+            visits=visits_all, seen=seen.frame, metrics=metrics, images=images,
             waves=wave_id, fetched=total_fetched,
         )
 

@@ -88,6 +88,38 @@ def test_crawl_destroys_its_broadcasts(spark, corpus, seen_max):
     assert sorted(os.listdir(temp_dir)) == before
 
 
+def _checkpoint_pins(sc) -> set:
+    rdds = sc._jsc.getPersistentRDDs()
+    return {k for k in rdds.keys() if rdds[k].rdd().isLocallyCheckpointed()}
+
+
+def test_crawl_leaves_only_the_pins_its_results_read(spark, corpus, seen_max):
+    """Once a wave's next frontier is pinned, its wave-cut pin and the old
+    frontier are dropped (the last frontier when the loop ends). A 7-wave
+    polite crawl leaves one heavy checkpoint per wave (the visits read
+    them), the seen base (the seen frame reads it) and the redirect
+    closure (the crawler holds it). With the mirror off, each wave's
+    anti-join also leaves a lazy pin of its bloom-positive
+    candidates, which nothing references once the wave's heavy checkpoint
+    ran, so Spark's context cleaner reclaims it at some later JVM GC: only
+    bounds hold for those. Set ids, not counts: the cleaner may drop
+    earlier crawls' unreferenced pins meanwhile."""
+    sc = spark.sparkContext
+    corpus.count()
+    before = _checkpoint_pins(sc)
+    crawler = Crawler(spark, corpus, CrawlConfig(**POLITE, broadcast_seen_max=seen_max))
+    res = crawler.run(seed_urls(N_SITES))
+    left = len(_checkpoint_pins(sc) - before)
+    assert res.waves == 7
+    kept = res.waves + 2
+    if seen_max == 0:
+        assert kept <= left <= kept + res.waves
+    else:
+        assert left == kept
+    # every pin the returned frames read is still there
+    assert res.visits.count() == res.seen.count() == 35
+
+
 def _durable_visits(spark, cfg):
     return sorted(
         tuple(r) for r in Crawler.read_visits(spark, cfg)

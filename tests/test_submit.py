@@ -105,3 +105,68 @@ def test_spark_submit_py_files_launch(tmp_path):
     assert rec["fetched"] == 25  # 2-site/6-page corpus drains to 25 visits
     assert rec["metrics_tail"][-1]["pending"] == 0
     assert any(f.endswith(".parquet") for f in os.listdir(out_dir))
+
+
+# A fresh application: get_spark (which warms the worker pool), one
+# list-seeded crawl whose resting hosts build a host-state frame, then a
+# count of the pyspark.daemon processes among this process's own
+# descendants. A forked worker inherits its daemon's command line, so a
+# daemon is a pyspark.daemon process whose parent is not one.
+_ONE_POOL = r"""
+import json, os
+from wcm_spark.session import get_spark
+from wcm_spark.corpus import corpus_df, seed_urls
+from wcm_spark.scheduler import Crawler, CrawlConfig
+
+spark = get_spark("one-pool", cpus=2, shuffle_partitions=2)
+res = Crawler(
+    spark, corpus_df(spark, 2, 4).cache(),
+    CrawlConfig(min_delay_waves=1, max_conn_per_host=2),
+).run(seed_urls(2))
+visits = res.visits.count()
+
+def is_daemon(pid):
+    with open(f"/proc/{pid}/cmdline", "rb") as f:
+        return b"pyspark.daemon" in f.read().split(b"\0")
+
+def children(pid):
+    out = []
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        with open(f"/proc/{pid}/task/{tid}/children") as f:
+            out += [int(c) for c in f.read().split()]
+    return out
+
+daemons, stack = 0, [(os.getpid(), False)]
+while stack:
+    pid, parent_is_daemon = stack.pop()
+    try:
+        for kid in children(pid):
+            d = is_daemon(kid)
+            daemons += d and not parent_is_daemon
+            stack.append((kid, d))
+    except FileNotFoundError:  # exited while walked
+        pass
+print(json.dumps({"daemons": daemons, "visits": visits, "waves": res.waves}))
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(
+    not os.path.exists(f"/proc/self/task/{os.getpid()}/children"),
+    reason="no /proc children lists on this kernel",
+)
+def test_list_seeded_crawl_runs_one_worker_pool():
+    """Every driver-side frame is a JVM local relation, so a list-seeded
+    crawl (seeds, host state, metrics) runs in the one Python worker pool
+    the session warmed: exactly one pyspark.daemon in the application."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = REPO
+    env.pop("WCM_POOL_WARM", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _ONE_POOL],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=420,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    rec = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert rec["visits"] > 0 and rec["waves"] > 2
+    assert rec["daemons"] == 1, rec

@@ -413,6 +413,8 @@ def corpus_df_sized(
     live crawl's dead links."""
     import pandas as pd
 
+    from .session import local_frame
+
     n_sites = len(sizes)
     tasks = []
     for s, ps in enumerate(sizes):
@@ -433,7 +435,7 @@ def corpus_df_sized(
                 if rows:
                     yield pd.DataFrame(rows)
 
-    tdf = spark.createDataFrame(tasks, "site int, start int, end int, pages int")
+    tdf = local_frame(spark, tasks, "site int, start int, end int, pages int")
     return tdf.repartition(parts).mapInPandas(gen, schema=CORPUS_SCHEMA)
 
 

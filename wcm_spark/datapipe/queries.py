@@ -1153,9 +1153,11 @@ def _resolve_oracle_sql() -> str:
 
 def _resolve_spark(spark, sf_dir):
     from ..functions.core import resolve_href_udf
+    from ..session import local_frame
     from pyspark.sql import functions as F
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(i, b, h) for i, (b, h, _) in enumerate(RESOLVE_CASES)],
         "case_id int, base string, href string",
     )
@@ -4744,6 +4746,8 @@ def _ivf_fit_df(spark, sf_dir):
     so the fitted cells are identical (oracle parity enforced)."""
     from pyspark.sql import functions as F
 
+    from ..session import local_frame
+
     n_cells, dims = 8, 64
     emb = _ivf_emb_df(spark, sf_dir)
 
@@ -4774,7 +4778,7 @@ def _ivf_fit_df(spark, sf_dir):
     cent_rows = [
         (cell, dim, cx[dim]) for cell, cx in zip(ids, cents) for dim in range(dims)
     ]
-    cent = spark.createDataFrame(cent_rows, "cell BIGINT, dim INT, cx DOUBLE")
+    cent = local_frame(spark, cent_rows, "cell BIGINT, dim INT, cx DOUBLE")
     return asg, cent
 
 
@@ -6083,10 +6087,12 @@ def _q_form_weave(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ..operators.scrape import scrape_edges
+    from ..session import local_frame
     from .fixtures import FORM_GOLDEN_HTML
 
     body = FORM_GOLDEN_HTML.encode()
-    pages = spark.createDataFrame(
+    pages = local_frame(
+        spark,
         [("http://forms.example/", 200, "text/html", len(body), bytearray(body))],
         "url string, status int, content_type string, content_length long, body binary",
     )

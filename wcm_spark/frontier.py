@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.core import digest_col, host_key_udf
+from .session import local_frame
 from .store import TableStore
 
 __all__ = ["Frontier", "cap_keep"]
@@ -77,7 +78,7 @@ class Frontier:
         self.cap = cap
         self.store = store
         self.digest_cache_max = digest_cache_max
-        self._df = spark.createDataFrame([], _SCHEMA)
+        self._df = local_frame(spark, [], _SCHEMA)
         self._next_seq = 0
         self._buffer: list[tuple] = []   # driver-buffered single-row adds
         self._digests: set | None = set()  # exact probe cache; None = too big
@@ -127,7 +128,7 @@ class Frontier:
         """Materialize buffered single-row adds as ONE union."""
         if not self._buffer:
             return
-        batch = self.spark.createDataFrame(self._buffer, _SCHEMA).withColumn(
+        batch = local_frame(self.spark, self._buffer, _SCHEMA).withColumn(
             "host_key", host_key_udf(F.col("url"))
         )
         self._buffer = []

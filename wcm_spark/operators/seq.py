@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 __all__ = ["assign_seq", "arith_bucket_col", "arith_n_parts", "offsets_to_col"]
 
 
@@ -106,8 +108,9 @@ def assign_seq(
         acc += counts[pid]
 
     spark = df.sparkSession
-    offsets_df = spark.createDataFrame(
-        [(int(pid), int(off)) for pid, off in offsets.items()], "__pid int, __off long"
+    offsets_df = local_frame(
+        spark, [(int(pid), int(off)) for pid, off in offsets.items()],
+        "__pid int, __off long",
     )
     local = Window.partitionBy("__pid").orderBy(*cols)
     out = (

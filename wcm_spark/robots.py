@@ -291,10 +291,13 @@ class RobotsGate:
             if rules.rules:
                 self.held[hk] = rules
         if self.max_hosts is not None and len(self.held) > self.max_hosts:
+            from .session import local_frame
+
             evicted = list(self.held)[: len(self.held) - self.max_hosts]
             if self.spill_dir is None:
                 self.spill_dir = tempfile.mkdtemp(prefix="wcm_robots_spill_")
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [(hk, json.dumps(self.held.pop(hk).rules)) for hk in evicted],
                 SPILL_SCHEMA,
             ).write.mode("append").parquet(self.spill_dir)
@@ -311,10 +314,12 @@ class RobotsGate:
             return
         from pyspark.sql import functions as F
 
+        from .session import local_frame
         from .sources.httpfetch import http_fetch_wave
 
         self._known |= hosts
-        requests = self.spark.createDataFrame(
+        requests = local_frame(
+            self.spark,
             [
                 (i, 0, 0, 0, None, None, hk, None, None, None,
                  hk + "/robots.txt", hk + "/robots.txt")

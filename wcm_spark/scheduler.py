@@ -52,6 +52,7 @@ from .operators.seq import (
     offsets_to_col,
 )
 from .robots import RobotsGate
+from .session import local_frame
 from .store import TableStore  # noqa: F401 (re-exported)
 from .store import for_session as store_for_session
 
@@ -174,20 +175,10 @@ VISIT_COLS = [
 
 # durable metrics rows: the column order and types schema inference gave
 # earlier commits, so appends to an existing metrics table line up
-METRICS_SCHEMA = [
-    ("enqueued", "long"), ("fetched", "long"), ("pending", "long"),
-    ("sec", "double"), ("skipped", "long"), ("wave", "long"),
-]
-
-
-def _metrics_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """``rows`` as a METRICS_SCHEMA frame built in the JVM: a literal
-    array of structs inlined over a one-row range, so writing it needs no
-    Python rows serialized and no Python worker."""
-    return spark.range(1).select(F.inline(F.array(*[
-        F.struct(*[F.lit(r[c]).cast(t).alias(c) for c, t in METRICS_SCHEMA])
-        for r in rows
-    ])))
+METRICS_SCHEMA = (
+    "enqueued long NOT NULL, fetched long NOT NULL, pending long NOT NULL, "
+    "sec double NOT NULL, skipped long NOT NULL, wave long NOT NULL"
+)
 
 
 def _pin_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
@@ -207,6 +198,18 @@ def _pin_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
         return pinned, obs.get
     except Py4JJavaError:
         return pinned, pinned.agg(*aggs).first().asDict()
+
+
+def _unpin(pin: DataFrame) -> None:
+    """Drop the blocks of ``pin``, a frame ``localCheckpoint`` returned.
+    ``DataFrame.unpersist`` only uncaches ``cache()``d plans, so it leaves a
+    checkpoint's RDD persisted; that RDD is the pin's analyzed
+    ``LogicalRDD``. Any other frame (a projection of a pin, a plan no
+    checkpoint cut) is left alone: its blocks belong to someone else. A
+    dropped pin cannot be recomputed, so no live frame may read it."""
+    plan = pin._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _pin_ranked(
@@ -376,8 +379,8 @@ class Crawler:
         if not creds:
             return wave.withColumn("fetch_auth_url", F.col("url"))
         cred_df = F.broadcast(
-            self.spark.createDataFrame(
-                [(k, v) for k, v in creds.items()], "cred_host string, userinfo string"
+            local_frame(
+                self.spark, creds.items(), "cred_host string, userinfo string"
             )
         )
         joined = wave.join(cred_df, wave.host_key == cred_df.cred_host, "left")
@@ -527,7 +530,7 @@ class Crawler:
         if not isinstance(seeds, DataFrame):
             # driver-side path for any iterable of URLs: digest dedup
             # (first wins) and dense seq assignment are pure Python over
-            # the seeds — ONE createDataFrame (host_salt rides as a lazy
+            # the seeds — ONE local frame (host_salt rides as a lazy
             # JVM column on the caller's checkpoint) instead of the ~5
             # Spark jobs the window/range-exchange path costs. DataFrame
             # seeds keep the distributed path below.
@@ -550,7 +553,7 @@ class Crawler:
                      None, None, None, None, 0)
                 )
             return (
-                self.spark.createDataFrame(rows, self._SEED_SCHEMA)
+                local_frame(self.spark, rows, self._SEED_SCHEMA)
                 .withColumn(
                     "host_salt",
                     host_salt_col(F.col("host_key"), self.config.salts),
@@ -779,8 +782,8 @@ class Crawler:
         total_fetched = 0
         host_state = None
         if cfg.min_delay_waves > 0 or cfg.backoff_statuses:
-            host_state = spark.createDataFrame(
-                [], "host_key string, last_wave int, rest_until int"
+            host_state = local_frame(
+                spark, [], "host_key string, last_wave int, rest_until int"
             )
 
         drain_level = (
@@ -814,7 +817,10 @@ class Crawler:
             waves_run += 1
 
             # bounds: the [lo, hi) seq range of the wave's rows — the
-            # parent-seq range its children's seq buckets split
+            # parent-seq range its children's seq buckets split. wave_pins:
+            # this wave's own checkpoints, which only the heavy checkpoint
+            # and the next frontier read
+            wave_pins = []
             wave = self._wave_cut(pending, host_state, wave_id)
             if wave is not pending:
                 wave, facts = _pin_observed(
@@ -822,6 +828,7 @@ class Crawler:
                     F.min("seq").alias("lo"), F.max("seq").alias("hi"),
                     *self._facts(),
                 )
+                wave_pins.append(wave)
                 wave_count = facts["n"]
                 bounds = (
                     (facts["lo"], facts["hi"] + 1) if wave_count
@@ -865,6 +872,7 @@ class Crawler:
             # the gates.
             if cfg.fetch_mode == "http":
                 fetched, obs = _pin_observed(fetched, F.count(F.lit(1)).alias("n"))
+                wave_pins.append(fetched)
                 wave_count = obs["n"]
             if host_state is not None and wave_taken_count:
                 # F6/F10 host state, one fold per wave: the wave's hosts
@@ -885,7 +893,7 @@ class Crawler:
                             F.lit(wave_id + cfg.backoff_waves).alias("rest_until"),
                         )
                     )
-                host_state = (
+                folded = (
                     host_state.unionByName(touched)
                     .groupBy("host_key")
                     .agg(
@@ -894,6 +902,8 @@ class Crawler:
                     )
                     .localCheckpoint(eager=True)
                 )
+                _unpin(host_state)
+                host_state = folded
 
             # 'wave' on a visit = the fetch wave (the enqueue wave lives on
             # the frontier row); pos ordering below needs the fetch wave
@@ -1082,8 +1092,14 @@ class Crawler:
             elif not drain_level:
                 new_pending = new_pending.localCheckpoint(eager=True)
             uncommitted_seen.append(fresh_seen)
+            # the next frontier is pinned: the old one and the wave's own
+            # pins are read by nothing that lives on (the visits ride the
+            # heavy checkpoint; on drain-level crawls the old frontier is a
+            # projection of the previous heavy checkpoint, left alone)
             if not drain_level:
-                pending.unpersist()
+                _unpin(pending)
+            for pin in wave_pins:
+                _unpin(pin)
             pending = new_pending
             # exact carry in both paths: remaining = pending - wave_taken
             # (pre-robots-gate — disallowed rows also left the frontier),
@@ -1119,6 +1135,10 @@ class Crawler:
                 uncommitted_visits, uncommitted_metrics = [], []
                 uncommitted_seen, seen_mode = [], "append"
 
+        if not drain_level:
+            _unpin(pending)
+        if host_state is not None:
+            _unpin(host_state)
         visits_all = _union_all(visit_frames) if visit_frames else self._empty_visits()
         images = _union_all(image_frames) if image_frames else None
 
@@ -1152,7 +1172,7 @@ class Crawler:
         staged = [
             ("visits", _union_all(visit_frames), "append"),
             ("seen", _union_all(seen_frames), seen_mode),
-            ("metrics", _metrics_frame(self.spark, metric_rows), "append"),
+            ("metrics", local_frame(self.spark, metric_rows, METRICS_SCHEMA), "append"),
         ]
         with ThreadPoolExecutor(max_workers=len(staged)) as pool:
             # one wrap per task: each copies the caller's local properties
@@ -1212,8 +1232,8 @@ class Crawler:
         return None if committed is None else committed.dropDuplicates(["wave", "seq"])
 
     def _empty_visits(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
+        return local_frame(
+            self.spark, [],
             "wave int, seq long, url string, request_url string, original_url string, "
             "redirect_history array<string>, status int, depth int, host_key string, "
             "pos long",

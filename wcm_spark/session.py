@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import logging
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["get_spark", "parse_conf_extra", "recommended_sql_confs"]
+__all__ = ["get_spark", "local_frame", "parse_conf_extra", "recommended_sql_confs"]
+
+log = logging.getLogger(__name__)
 
 
 def recommended_sql_confs() -> dict[str, str]:
@@ -69,7 +73,19 @@ def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
     JVM startup. A fresh session otherwise charges the ~1-2 s spin-up of
     `cpus` workers (fork + first numpy/pyarrow import each) to whichever
     Arrow-kernel stage happens to run first. One tiny task per core;
-    best-effort and idempotent per session."""
+    idempotent per session.
+
+    This is the application's ONE worker pool. Spark keys a pool (one
+    ``pyspark.daemon`` plus its forked workers) by the worker environment,
+    and the SQL runners (pandas/Arrow UDFs, mapInArrow) set
+    ``SPARK_SIMPLIFIED_TRACEBACK=1`` while a PythonRDD job does not — so an
+    RDD-backed frame (``createDataFrame`` of a Python list) forks a
+    second daemon with ``cpus`` more interpreters that live as long as the
+    application. Driver-side rows therefore go through ``local_frame``.
+
+    A failed warm-up does not fail the session: it logs a warning with the
+    exception and leaves ``wcm.workers.warmed`` unset, so the pool forks on
+    the first Python stage instead."""
     if os.environ.get("WCM_POOL_WARM", "1") != "1":
         return
     if spark.conf.get("wcm.workers.warmed", None) == "true":
@@ -84,9 +100,38 @@ def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
         spark.range(cpus, numPartitions=cpus).mapInArrow(
             _touch, "id BIGINT"
         ).count()
-        spark.conf.set("wcm.workers.warmed", "true")
-    except Exception:
-        pass  # warming is never worth failing a session over
+    except Exception as exc:  # warming is never worth failing a session over
+        log.warning("Python worker pool warm-up failed: %r", exc)
+        return
+    spark.conf.set("wcm.workers.warmed", "true")
+
+
+def local_frame(spark: SparkSession, rows: Iterable, ddl: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl`` column order, or dicts keyed
+    by column name) as a DataFrame of schema ``ddl``, built through an
+    Arrow table so it analyzes to a JVM ``LocalRelation``.
+
+    Every driver-side frame of the engine is built here, so a Spark
+    application runs exactly one Python worker pool, the one
+    ``_warm_python_workers`` forks. ``createDataFrame`` of a Python list
+    (empty or not) is a ``LogicalRDD`` over a PythonRDD: evaluating it
+    runs an identity re-serialise in Python workers whose environment
+    lacks the SQL runners' ``SPARK_SIMPLIFIED_TRACEBACK``, so Spark forks
+    a second ``pyspark.daemon`` for it. An Arrow table (empty or not)
+    needs no Python worker at all; a pandas frame would too, except that
+    an empty one falls back to the RDD path. The types, column order and
+    nullability are the DDL's (``NOT NULL`` is honoured)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(
